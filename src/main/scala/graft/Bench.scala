@@ -49,6 +49,15 @@ object Bench {
       "org.apache.spark.sql.execution.window", org.apache.logging.log4j.Level.ERROR)
     catch { case _: Throwable => () } // logging config is best-effort
 
+  /** The `SPARK_GRAFT_CPUS` value as a JSON value: numeric values emit
+    * as numbers, anything else as an escaped string. */
+  private[graft] def cpusJson(cpus: String): String =
+    try cpus.trim.toInt.toString catch {
+      case _: NumberFormatException =>
+        "\"" + new String(com.fasterxml.jackson.core.io.JsonStringEncoder
+          .getInstance().quoteAsString(cpus)) + "\""
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -204,9 +213,7 @@ object Bench {
       // line, before the per-query map, so even a tail-truncated capture
       // keeps them.
       val load = s"""{"start":${fmt("%.2f", loadStart)},"end":${fmt("%.2f", loadAvg)},"host_cpus":${Runtime.getRuntime.availableProcessors}}"""
-      val cpusJson = // numeric env values emit as numbers; anything else quoted (valid JSON either way)
-        try cpus.trim.toInt.toString catch { case _: NumberFormatException => "\"" + cpus + "\"" }
-      val cpusInfo = s""""cpus":$cpusJson,"parallelism":${spark.sparkContext.defaultParallelism},"""
+      val cpusInfo = s""""cpus":${cpusJson(cpus)},"parallelism":${spark.sparkContext.defaultParallelism},"""
       val warm = if (warmupIsSample) "" else s""""warmup_sf":"$warmDir","""
       // vs_floor: per-query ratio against the committed noise floor —
       // median + the >1.5× offenders (capped), so the compact line

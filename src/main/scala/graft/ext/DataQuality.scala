@@ -713,7 +713,12 @@ object DataQuality {
     * Scale shape: ONE doc_id-keyed full-outer join (both sides shuffle
     * on the key once) into a map-side-combinable per-source aggregate —
     * sources-sized output; all metrics are exact BIGINTs (token counts
-    * are integers; sums of integers — no float surface at all). */
+    * are integers; sums of integers — no float surface at all).
+    * Measured (round 12, d94's releases at sf0.1 and at the 10× sf1
+    * corpus, min-of-3): this batch card 0.69 → 0.63 s (flat — fixed
+    * costs dominate), the streamed 4-admission lifecycle 3.3 → 6.2 s
+    * (its growth is the per-admission v1 join); state and card stay
+    * sources-sized at both scales. */
   def releaseDelta(v1: DataFrame, v2: DataFrame): DataFrame = {
     def side(df: DataFrame, suffix: String) = df.select(
       col("doc_id").as("doc_id" + suffix),
@@ -801,10 +806,9 @@ object DataQuality {
     * 5–14 (a ' [rev2]' suffix — +1 token per changed doc, both
     * tokenizers agree via the d76-pinned equivalence) and adds 90–99.
     * v2 keeps the bucket column so the streamed gate can split it into
-    * disjoint admission batches. `private[graft]` so the scale bench
-    * (tools/ReleaseDeltaScaleBench) measures EXACTLY the gated shape
-    * instead of a hand-copied recipe that could drift. */
-  private[graft] def syntheticReleases(s: org.apache.spark.sql.SparkSession,
+    * disjoint admission batches. Shared by d94 and d95, so the batch and
+    * streamed postures are gated on exactly the same releases. */
+  private def syntheticReleases(s: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, DataFrame) = {
     val b = graft.Tables(s, dir, "documents")
       .select(col("doc_id"), col("source"), col("text"),

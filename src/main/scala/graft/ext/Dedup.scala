@@ -979,7 +979,11 @@ object Dedup {
     * probe's cross pairs, and [[updateComponents]] relabels only the
     * touched components. The oracle is the d17 oracle verbatim — the
     * whole-corpus exact-Jaccard transitive closure — so the gate proves
-    * incremental maintenance ≡ from-scratch, via an independent engine. */
+    * incremental maintenance ≡ from-scratch, via an independent engine.
+    * Stage split at gate scale (round 16, warm, each stage forced): band
+    * indexes 1.1 s, candidates 2.6 s, verifies 1.3 s, day-0 CC 1.0 s,
+    * [[updateComponents]] 1.1 s, final join 0.5 s — no dominating
+    * stage, and 8 cores ≈ 32 cores (1.02×): multi-job fixed overhead. */
   val d19IncrementalComponents: Q = Q(
     "d19_incremental_components",
     Some("""
@@ -1128,69 +1132,38 @@ object Dedup {
     *     the fingerprint window gains an order-by but no extra
     *     exchange.
     *
-    * Two duplicate-test shapes, picked by `precountFingerprints` — a
-    * REGIME decision like the d18 verify one:
-    *   - `false` (default): count-over-window on the fingerprint
-    *     exchange — ONE pass over the corpus text, the right default
-    *     when no single window value dominates. The ceiling: WindowExec
-    *     sorts each fp group in one task, so an ultra-hot boilerplate
-    *     fingerprint (say 10⁸ occurrences of one header) serializes its
-    *     whole group through one task's sort.
-    *   - `true`: pre-aggregate per-fingerprint counts (and for
-    *     keepFirst the min (doc_id, start) survivor — both associative,
-    *     so map-side partial aggregation collapses hot fingerprints to
-    *     one row per map task) and join the window rows back on fp.
-    *     Costs a second scan+hash pass of the corpus text; immune to
-    *     fingerprint skew (the join is AQE-skew-splittable, the
-    *     aggregate never buffers a group). Identical output by
-    *     construction — spec-proven.
-    *
-    * Measured (round 7, isolated min-of-3): the window shape wins ~2×
-    * in BOTH regimes at measurable scale — 7.4 s vs 13.9 s on the
-    * 50k-doc sf1 corpus, and still 12.8 s vs 24.6 s on a planted-skew
-    * corpus where one 16-token header appears in all 50k docs (a
-    * 50k-row sort group costs far less than the second corpus
-    * scan+hash). Keep the default; reach for `precountFingerprints`
-    * only when a single fingerprint's occurrence count is orders of
-    * magnitude beyond that — the 10⁸-occurrences-of-one-header corpus
-    * where one task's sort group becomes the straggler. */
+    * The window's ceiling: WindowExec sorts each fp group in one task,
+    * so an ultra-hot boilerplate fingerprint (say 10⁸ occurrences of one
+    * header) serializes its whole group through one task's sort. The
+    * skew-immune alternative — pre-aggregated per-fingerprint counts
+    * (and min (doc_id, start) survivor) joined back on fp — was built,
+    * spec-proven equal, measured and retired (round 7, isolated
+    * min-of-3): the window shape wins ~2× in BOTH regimes at measurable
+    * scale — 7.4 s vs 13.9 s on the 50k-doc sf1 corpus, and still
+    * 12.8 s vs 24.6 s on a planted-skew corpus where one 16-token
+    * header appears in all 50k docs (a 50k-row sort group costs far
+    * less than the second corpus scan+hash the precount shape pays).
+    * Only a fingerprint orders of magnitude hotter than that would turn
+    * the sort group into the straggler. */
   def duplicatedSpans(docs: DataFrame, windowTokens: Int,
-      minCount: Long = 2L, keepFirst: Boolean = false,
-      precountFingerprints: Boolean = false): DataFrame = {
+      minCount: Long = 2L, keepFirst: Boolean = false): DataFrame = {
     require(windowTokens >= 1, "windowTokens must be positive")
     require(minCount >= 2, "minCount below 2 would mark every window")
     val wins = spanWindows(docs, windowTokens)
-    val marked = (if (precountFingerprints) {
-      if (keepFirst) {
-        val stats = wins.groupBy(col("fp")).agg(
-          count(lit(1)).as("cnt"),
-          min(struct(col("doc_id"), col("start"))).as("first"))
-        wins.join(stats.filter(col("cnt") >= minCount), Seq("fp"))
-          .filter(!(col("doc_id") === col("first.doc_id") &&
-            col("start") === col("first.start")))
-      } else {
-        wins.join(
-          spanWindows(docs, windowTokens).groupBy(col("fp"))
-            .agg(count(lit(1)).as("cnt")).filter(col("cnt") >= minCount)
-            .select(col("fp")),
-          Seq("fp"), "left_semi")
-      }
+    val byFp = org.apache.spark.sql.expressions.Window.partitionBy(col("fp"))
+    val marked = (if (keepFirst) {
+      val byFpOrdered = byFp.orderBy(col("doc_id"), col("start"))
+      wins
+        .withColumn("c", count(lit(1)).over(
+          byFpOrdered.rowsBetween(
+            org.apache.spark.sql.expressions.Window.unboundedPreceding,
+            org.apache.spark.sql.expressions.Window.unboundedFollowing)))
+        .withColumn("rn", row_number().over(byFpOrdered))
+        .filter(col("c") >= minCount && col("rn") > 1)
     } else {
-      val byFp = org.apache.spark.sql.expressions.Window.partitionBy(col("fp"))
-      if (keepFirst) {
-        val byFpOrdered = byFp.orderBy(col("doc_id"), col("start"))
-        wins
-          .withColumn("c", count(lit(1)).over(
-            byFpOrdered.rowsBetween(
-              org.apache.spark.sql.expressions.Window.unboundedPreceding,
-              org.apache.spark.sql.expressions.Window.unboundedFollowing)))
-          .withColumn("rn", row_number().over(byFpOrdered))
-          .filter(col("c") >= minCount && col("rn") > 1)
-      } else {
-        wins
-          .withColumn("c", count(lit(1)).over(byFp))
-          .filter(col("c") >= minCount)
-      }
+      wins
+        .withColumn("c", count(lit(1)).over(byFp))
+        .filter(col("c") >= minCount)
     }).select(col("doc_id"), col("start"))
     mergeIslands(marked, windowTokens)
   }

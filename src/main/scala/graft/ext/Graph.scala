@@ -190,7 +190,13 @@ object Graph {
       // same-partitioning hash aggregate — min over (−votes, label)
       // structs IS "max votes, ties to the smallest label", replacing the
       // previous row_number window (its own exchange on node plus a
-      // per-partition sort) with an O(1)-state aggregate.
+      // per-partition sort) with an O(1)-state aggregate. Measured
+      // (round 16, alternating min-of-4/5 A/B, identical results):
+      // parity with the window shape at sf0.1 (3.56 vs 3.46-3.63 s) and
+      // sf1 (11.1-11.5 vs 10.2-11.8 s); kept for half the shuffle
+      // barriers at cluster scale. A map-side-combined vote aggregate
+      // plus this min-struct winner (two exchanges, no sort) lost at
+      // sf1 (12-30 s).
       val votes = e
         .join(labels.withColumnRenamed("node", "src"), Seq("src"))
         .repartition(col("dst"))

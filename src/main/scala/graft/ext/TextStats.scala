@@ -1131,16 +1131,13 @@ object TextStats {
     * α-smoothed counts table from a curated reference does; hash join
     * otherwise) and collapse back to one row per doc map-side. */
   def ngramLmScore(reference: DataFrame, docs: DataFrame,
-      alpha: Double = 0.5, materializeModel: Boolean = true): DataFrame = {
+      alpha: Double = 0.5): DataFrame =
     // the bigram-count table feeds three consumers (scoring join, the
     // context roll-up, the vocabulary scalar) — left lazy, each would
     // re-scan the reference text (ReusedExchange does not survive AQE's
-    // per-consumer re-pruning). Materialized once by default: the model
-    // IS the persisted artifact of this operator in production.
-    val bigLazy = lmBigramCounts(reference)
-    val big = if (materializeModel) bigLazy.localCheckpoint() else bigLazy
-    ngramLmScoreFromCounts(big, docs, alpha)
-  }
+    // per-consumer re-pruning). Materialized once: the model IS the
+    // persisted artifact of this operator in production.
+    ngramLmScoreFromCounts(lmBigramCounts(reference).localCheckpoint(), docs, alpha)
 
   /** The LM model artifact: reference bigram counts `(bg, c12)` — the
     * ONLY state [[ngramLmScoreFromCounts]] needs (context counts and

@@ -63,34 +63,34 @@ object TrustedLoad {
 
     val spark = control.sparkSession
 
-    // 1. incremental read per input (I1): strictly-newer rows + the new
-    //    watermark scalar (one tiny agg per incremental input)
-    val loaded: Seq[(String, DataFrame, Option[java.sql.Timestamp])] =
+    // 1. incremental read per input (I1): strictly-newer rows, then ONE
+    //    tiny aggregate per incremental input — max(ts) is the new
+    //    watermark and count(1) the emptiness bit the guard reads
+    val loaded: Seq[(String, DataFrame, Option[java.sql.Timestamp], Long)] =
       transformer.inputs.map { name =>
         val df = resolve(name)
         incrementalCol.get(name) match {
           case Some(tsCol) =>
             val wm = ControlTable.currentWatermark(control, transformer.entityName, name)
             val (fresh, _) = ControlTable.incrementalLoad(df, tsCol, wm)
-            val newWm = fresh.agg(max(col(tsCol))).collect()(0) match {
-              case r if r.isNullAt(0) => wm // no fresh rows: watermark stands
-              case r => Some(r.getTimestamp(0))
-            }
-            (name, fresh, newWm)
-          case None => (name, df, None)
+            val r = fresh.agg(max(col(tsCol)), count(lit(1))).head()
+            // no fresh rows, or only null-ts ones: the watermark stands
+            val newWm = if (r.isNullAt(0)) wm else Some(r.getTimestamp(0))
+            (name, fresh, newWm, r.getLong(1))
+          case None => (name, df, None, 0L)
         }
       }
 
-    // 2. P13 empty guard: every INCREMENTAL input empty → nothing to do
-    //    (full-load inputs are reference data, they don't trigger a run)
-    val incrementalDfs =
-      loaded.filter(t => incrementalCol.contains(t._1)).map(_._2)
-    if (incrementalDfs.nonEmpty && Lake.allInputsEmpty(incrementalDfs)) {
+    // 2. P13 empty guard (datatrack_spark_utils.py:97-99): every
+    //    INCREMENTAL input empty → nothing to do (full-load inputs are
+    //    reference data, they don't trigger a run)
+    val incremental = loaded.filter(t => incrementalCol.contains(t._1))
+    if (incremental.nonEmpty && incremental.forall { case (_, _, _, n) => n == 0L }) {
       return LoadResult(control, skipped = true, rows = 0L)
     }
 
     // 3. the transformer lifecycle: pre → transform → post
-    val dfs = loaded.map { case (n, df, _) => n -> df }.toMap
+    val dfs = loaded.map { case (n, df, _, _) => n -> df }.toMap
     val out = transformer.postTransform(
       transformer.transform(transformer.preTransform(dfs)))
 
@@ -106,7 +106,7 @@ object TrustedLoad {
 
     // 5. audit append per incremental input that advanced
     val nextControl = loaded.foldLeft(control) {
-      case (ctl, (name, _, Some(newWm))) =>
+      case (ctl, (name, _, Some(newWm), _)) =>
         ControlTable.recordLoad(ctl, transformer.entityName, name, newWm, runAt)
       case (ctl, _) => ctl
     }

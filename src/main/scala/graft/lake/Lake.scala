@@ -141,12 +141,6 @@ object Lake {
       .unionByName(fresh, allowMissingColumns = true)
   }
 
-  /** P13 — empty-input guard (datatrack_spark_utils.py:97-99): the
-    * reference skips a load when every input frame is empty. Each probe
-    * is `isEmpty` (a limit-1 job), never a count over the input. */
-  def allInputsEmpty(inputs: Seq[DataFrame]): Boolean =
-    inputs.forall(_.isEmpty)
-
   /** P9 — ingestion lineage/partition columns (etls_raw/main.py:300-315):
     * a fixed ingestion timestamp fans out to date/year/month/day partition
     * columns. `ts` is passed in (never `current_timestamp`) so reruns are

@@ -454,30 +454,6 @@ class DedupSpec extends SparkSpec {
     assert(got === Map(5L -> "", 6L -> ""))
   }
 
-  test("duplicatedSpans: precounted (skew-immune) shape equals the window shape, both semantics") {
-    val fixtures = strDf(
-      (1L, "a b one two three four c"),
-      (2L, "x one two three four y z"),
-      (3L, "p q r z1 z2 p q r"),
-      (4L, "m n o m n o"),
-      (5L, "short"),
-      (6L, "entirely unique tokens without repeats"))
-    def spans(keepFirst: Boolean, precount: Boolean) =
-      Dedup.duplicatedSpans(fixtures, windowTokens = 3, keepFirst = keepFirst,
-          precountFingerprints = precount)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    assert(spans(keepFirst = false, precount = true) ===
-      spans(keepFirst = false, precount = false))
-    assert(spans(keepFirst = true, precount = true) ===
-      spans(keepFirst = true, precount = false))
-    // and on the real corpus at the gate window width
-    val docs = Tables(spark, sfDir, "documents").select(col("doc_id"), col("text"))
-    def corpus(precount: Boolean) =
-      Dedup.duplicatedSpans(docs, windowTokens = 8, precountFingerprints = precount)
-        .collect().map(_.toSeq).toSet
-    assert(corpus(precount = true) === corpus(precount = false))
-  }
-
   test("newDocsViaBloom: exact answer at both fpp extremes; planted dups excluded, new docs admitted") {
     val archive = strDf(
       (1L, "shared text one"),

@@ -66,13 +66,6 @@ class LakeSpec extends SparkSpec {
     assert(twice.filter(col("v") === "src2").count() === 1)
   }
 
-  test("allInputsEmpty guards only when every input is empty") {
-    val empty = df()
-    val one   = df((1L, "a", 1L))
-    assert(Lake.allInputsEmpty(Seq(empty, one.filter(col("k") < 0))))
-    assert(!Lake.allInputsEmpty(Seq(empty, one)))
-  }
-
   test("incrementalAfter is strictly-greater; maxWatermark returns new max") {
     val d = df((1L, "a", 10L), (2L, "b", 20L), (3L, "c", 30L))
     assert(Lake.incrementalAfter(d, "ver", lit(20L)).count() === 1)

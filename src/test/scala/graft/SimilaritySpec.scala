@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -458,6 +462,35 @@ class SimilaritySpec extends SparkSpec {
     assert(p.contains("roundrobin") || p.contains("RoundRobin"), p.take(800))
     assert(!p.contains("hashpartitioning") && !p.contains("rangepartitioning"),
       p.take(800))
+  }
+
+  test("marginMine: duplicate vec_ids on either side agree with the exchange shape") {
+    val schema = StructType(Seq(
+      StructField("vec_id", LongType),
+      StructField("embedding", ArrayType(FloatType))))
+    def key(r: Row) = (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3))
+    val src = LocalTable.of(spark, schema, Seq(
+      Row(0L, Seq(1.0f, 0.0f)), Row(1L, Seq(0.0f, 1.0f))))
+    // target 10 appears twice with different vectors: its kNN average is
+    // taken over both rows' cosines, as the exchange shape windows them
+    val tgt = LocalTable.of(spark, schema, Seq(
+      Row(10L, Seq(1.0f, 0.0f)), Row(10L, Seq(0.0f, 1.0f)),
+      Row(11L, Seq(1.0f, 1.0f))))
+    def same(s: org.apache.spark.sql.DataFrame, t: org.apache.spark.sql.DataFrame) =
+      assert(Similarity.marginMine(s, t, k = 2, tau = 1.0).collect().map(key).toSet ===
+        Similarity.marginMineExchange(s, t, k = 2, tau = 1.0).collect().map(key).toSet)
+    same(src, tgt)
+    same(tgt, src)
+  }
+
+  test("s05: a second execution reclaims the first execution's temp index") {
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    def ivfDirs(): Set[String] = Files.list(tmp).iterator().asScala
+      .map(_.getFileName.toString).filter(_.startsWith("graft-ivf-")).toSet
+    val before = ivfDirs()
+    Similarity.s05AnnIvf.run(spark, sfDir).collect()
+    Similarity.s05AnnIvf.run(spark, sfDir).collect()
+    assert((ivfDirs() -- before).size === 1)
   }
 
   test("Round6: exact twin of Spark's round(_, 6) incl. .5-micro boundaries; micros inverts it") {

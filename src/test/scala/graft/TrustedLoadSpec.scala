@@ -96,6 +96,38 @@ class TrustedLoadSpec extends SparkSpec {
     assert(spark.read.parquet(target).select("valor").collect()(0).getDouble(0) === -12.0)
   }
 
+  test("the empty guard skips only when every incremental input is empty") {
+    val union = new EntityTransformer {
+      override val entityName = "trusted.union"
+      override val inputs = Seq("a", "b")
+      override val primaryKey = Seq("id")
+      override def transform(dfs: Map[String, DataFrame]): DataFrame =
+        dfs("a").unionByName(dfs("b"))
+    }
+    def load(a: DataFrame, b: DataFrame) = TrustedLoad.run(union, Map("a" -> a, "b" -> b),
+      ControlTable.empty(spark), Map("a" -> "dt_ingestao", "b" -> "dt_ingestao"),
+      "dt_ingestao", Files.createTempDirectory("graft-trusted-guard-").toString + "/t",
+      ts("2025-04-02 00:00:00"))
+    assert(load(txns(), txns()).skipped)
+    val r = load(txns(), txns((1L, "mercado", -1.0, "2025-04-01 00:00:00")))
+    assert(!r.skipped && r.rows === 1)
+  }
+
+  test("null-ts rows with no watermark yet still load; the watermark stays unset") {
+    val target = Files.createTempDirectory("graft-trusted-null-").toString + "/t"
+    val enricher = new Enricher
+    val source = LocalTable.of(spark, txnSchema, Seq(
+      Row(1L, "mercado", -5.0, null), Row(2L, "lazer", -6.0, null)))
+    val r = TrustedLoad.run(enricher,
+      n => if (n == "raw.lancamentos") source else dim(),
+      ControlTable.empty(spark), Map("raw.lancamentos" -> "dt_ingestao"),
+      "dt_ingestao", target, ts("2025-03-02 00:00:00"))
+    assert(!r.skipped && r.rows === 2)
+    assert(spark.read.parquet(target).count() === 2)
+    assert(ControlTable.currentWatermark(r.control, enricher.entityName,
+      "raw.lancamentos") === None)
+  }
+
   test("carregar_source: JSON registry flattens with folded origin metadata") {
     val dir = Files.createTempDirectory("graft-cfg-")
     Files.writeString(dir.resolve("fintrack.json"),
