@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.{Q, Tables}
+import graft.{Lineage, Q, Tables}
 
 /** Near-duplicate detection for a training-data pipeline: n-gram shingling,
   * exact Jaccard with deterministic blocking, MinHash+LSH banding, and
@@ -190,9 +190,8 @@ object Dedup {
     * Both lineage cuts are LAZY (shared RDDs, materialized inside the
     * first action), so constructing the operator runs no jobs.
     *
-    * @param checkpointDir None (default) cuts lineage with
-    *   executor-local blocks; Some(dir) on a cluster FS survives
-    *   executor preemption — see [[connectedComponents]].
+    * Durable cuts come from setting `spark.checkpoint.dir` on the
+    * session ([[graft.Lineage.cut]]).
     *
     * @param verifySampleRate opt-in sampling of the exact-Jaccard verify
     *   stage for very large corpora: candidate pairs land in a
@@ -206,8 +205,7 @@ object Dedup {
   def minhashNearDupPairs(docs: DataFrame, nGram: Int, k: Int, bands: Int,
       rowsPerBand: Int, threshold: Double,
       bucketCap: Int = DefaultBucketCap,
-      verifySampleRate: Double = 1.0,
-      checkpointDir: Option[String] = None): DataFrame = {
+      verifySampleRate: Double = 1.0): DataFrame = {
     require(verifySampleRate > 0.0 && verifySampleRate <= 1.0,
       "verifySampleRate must be in (0, 1]")
     // the candidate pair list is MATERIALIZED once (eager lineage cut):
@@ -216,10 +214,7 @@ object Dedup {
     // banding subtree per reference — measured on the gate corpus: 32
     // parquet scans, zero reused exchanges, 2.4× slower, because AQE's
     // broadcast conversions specialize each copy's column pruning and
-    // defeat ReusedExchange. The list is O(duplicate rate) ≪ corpus;
-    // `checkpointDir` swaps the executor-local cut for a reliable one on
-    // a cluster FS (same trade as connectedComponents).
-    configureCheckpointDir(docs, checkpointDir)
+    // defeat ReusedExchange. The list is O(duplicate rate) ≪ corpus.
     // LAZY cut on the skinny band rows: the count/cold/hot consumers of
     // the candidate split each chase their own copy of the
     // scan+shingle+MinHash pipeline when AQE broadcast-converts the
@@ -228,18 +223,16 @@ object Dedup {
     // WITHOUT adding a job barrier (eager = false defers
     // materialization into the candidate job itself; measured −6% on
     // the 10× corpus, neutral at gate scale).
-    val bandRows = cutLineage(
-      minhashBandIndex(docs, nGram, k, bands, rowsPerBand),
-      checkpointDir, eager = false)
+    val bandRows = Lineage.cut(
+      minhashBandIndex(docs, nGram, k, bands, rowsPerBand), eager = false)
     // LAZY for the same reason (and measured: same-JVM alternating A/B,
     // lazy ≤ eager in every aligned pass at sf0.1 — min 1.41 vs 1.48 s —
     // and parity at sf1, 8.09 vs 8.33 s; the eager barrier serialized
     // the candidate job ahead of the verify stage for nothing). All
     // consumers run inside one action, which materializes the shared
     // RDD once.
-    val candidates = cutLineage(
-      lshCandidatePairs(bandRows, bucketCap),
-      checkpointDir, eager = false)
+    val candidates = Lineage.cut(
+      lshCandidatePairs(bandRows, bucketCap), eager = false)
     if (verifySampleRate >= 1.0) verifyJaccardPairs(docs, candidates, nGram, threshold)
     else {
       val candShingled = candidateShingles(docs, candidates, nGram)
@@ -301,75 +294,6 @@ object Dedup {
       .select(col("vp.doc_a").as("doc_a"), col("vp.doc_b").as("doc_b"),
         round(jaccardDistinct(col("vsa.sh"), col("vsb.sh")), 4).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-  }
-
-  /** Lineage cut shared by the iterative and multi-reference operators:
-    * executor-local blocks by default (fastest; right for
-    * local/interactive), or a reliable checkpoint on `dir` (any
-    * registered Hadoop FS scheme) — the posture a preemptible-executor
-    * cluster needs. `eager = false` still collapses the plan to ONE
-    * shared RDD — every downstream reference reads the same blocks, so
-    * the subtree computes once — but defers materialization to the first
-    * action, keeping the whole query a single pipelined job instead of a
-    * sequence of checkpoint barriers (measured ~0.2 s/barrier at gate
-    * scale). Iterative loops need `eager = true`: each round must
-    * materialize before the driver can read its convergence metric.
-    * The checkpoint DIRECTORY is configured once per operator entry (via
-    * [[configureCheckpointDir]]), not here — `setCheckpointDir` mints a
-    * fresh UUID subdirectory every call, and a per-round call would
-    * scatter one round per directory. */
-  private[ext] def cutLineage(df: DataFrame, checkpointDir: Option[String],
-      eager: Boolean = true): DataFrame =
-    if (checkpointDir.isEmpty) df.localCheckpoint(eager)
-    else if (eager) df.checkpoint(true)
-    else {
-      // a LAZY reliable cut materializes at the caller's first action,
-      // after the operator entry returned — track it so a concurrent
-      // root switch in that window dies loudly instead of silently
-      // redirecting the checkpoint ([[CheckpointRootGuard]])
-      val cut = df.checkpoint(false)
-      CheckpointRootGuard.registerDeferred(
-        qualifiedRoot(df, checkpointDir.get), cut)
-      cut
-    }
-
-  private def qualifiedRoot(df: DataFrame, dir: String): String = {
-    val sc = df.sparkSession.sparkContext
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(sc.hadoopConfiguration)
-    p.makeQualified(fs.getUri, fs.getWorkingDirectory).toString
-      .stripSuffix("/")
-  }
-
-  /** One-time per-operator-call checkpoint-dir setup — see
-    * [[cutLineage]]. Shared with the [[Graph]] iterative family.
-    *
-    * The checkpoint directory is SparkContext-GLOBAL state: two
-    * concurrent checkpointed operators configured with different dirs
-    * would silently redirect each other's reliable checkpoints to
-    * whichever set last — [[CheckpointRootGuard]] refuses exactly that
-    * interleaving (root change while prior-root leases or deferred cuts
-    * are live) and leaves an audit line on legitimate overrides. */
-  private[ext] def configureCheckpointDir(df: DataFrame,
-      checkpointDir: Option[String]): Unit =
-    checkpointDir.foreach { dir =>
-      CheckpointRootGuard.configure(df.sparkSession.sparkContext, dir,
-        qualifiedRoot(df, dir))
-    }
-
-  /** [[configureCheckpointDir]] + a lease over `body` — the bracket for
-    * ITERATIVE reliable-cut operators, whose later rounds re-read the
-    * global checkpoint dir at each materialization: a concurrent
-    * different-root configure inside the bracket throws instead of
-    * silently redirecting the remaining rounds. No-op without a
-    * reliable dir. */
-  private[ext] def withCheckpointRoot[A](df: DataFrame,
-      checkpointDir: Option[String])(body: => A): A = checkpointDir match {
-    case None => body
-    case Some(dir) =>
-      val root = qualifiedRoot(df, dir)
-      CheckpointRootGuard.acquire(df.sparkSession.sparkContext, dir, root)
-      try body finally CheckpointRootGuard.release(root)
   }
 
   /** Candidate-pair generation HALF of [[minhashNearDupPairs]] — lazy
@@ -733,13 +657,9 @@ object Dedup {
     * distributed rounds, NOT a per-row driver loop. The pair list being
     * checkpointed is O(duplicate rate), far smaller than the corpus.
     *
-    * Lineage-cut strategy: `checkpointDir = None` (default) uses
-    * `localCheckpoint` — executor-local blocks, fastest, right for
-    * local/interactive runs but lost with an executor. On a real cluster
-    * pass `Some(dir)` on the cluster FS (any registered Hadoop scheme):
-    * rounds then cut through reliable `checkpoint`, which survives
-    * executor preemption — the posture a 1000-executor spot-instance
-    * fleet needs.
+    * Durable cuts come from setting `spark.checkpoint.dir` on the
+    * session ([[graft.Lineage.cut]]); without it rounds cut through
+    * executor-local `localCheckpoint`.
     *
     * Convergence is detected for FREE: a `max(changed)` observed metric
     * (CollectMetrics) rides the same job that materializes each round's
@@ -752,19 +672,16 @@ object Dedup {
     *
     * Returns (doc_id, component) for every node appearing in `pairs`,
     * component = min doc_id of the member's component. */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
-      checkpointDir: Option[String] = None): DataFrame = {
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     require(maxIter >= 1, "maxIter must be positive")
-    withCheckpointRoot(pairs, checkpointDir) {
-    def cut(df: DataFrame): DataFrame = cutLineage(df, checkpointDir)
-    val edges = cut(pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .distinct())
-    val init = cut(edges.select(col("src").as("doc_id"))
+    val edges = Lineage.cut(
+      pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+        .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+        .distinct())
+    val init = Lineage.cut(edges.select(col("src").as("doc_id"))
       .distinct()
       .withColumn("component", col("doc_id")))
-    propagateMinLabels(edges, init, maxIter, checkpointDir)
-    }
+    propagateMinLabels(edges, init, maxIter)
   }
 
   /** The shared min-label propagation loop: from an ALREADY-CUT
@@ -778,8 +695,7 @@ object Dedup {
     * the member stars keep connected). Convergence detection and
     * lineage-cut posture are [[connectedComponents]]'s, verbatim. */
   private def propagateMinLabels(edges: DataFrame, init: DataFrame,
-      maxIter: Int, checkpointDir: Option[String]): DataFrame = {
-    def cut(df: DataFrame): DataFrame = cutLineage(df, checkpointDir)
+      maxIter: Int): DataFrame = {
     var labels = init
     var iter = 0
     var converged = false
@@ -808,7 +724,7 @@ object Dedup {
       // one probe job if the metric is somehow absent — never a wrong
       // answer. max over zero rows is null → converged (empty graph).
       val observed = round.observe("cc_round", max(col("changed")).as("any_changed"))
-      val next = cut(observed)
+      val next = Lineage.cut(observed)
       converged = observed.queryExecution.observedMetrics.get("cc_round") match {
         case Some(row) => row.getAs[Any]("any_changed") != true
         case None => next.filter(col("changed")).isEmpty
@@ -861,7 +777,7 @@ object Dedup {
     * tests). Docs absent from both inputs stay absent (singletons),
     * exactly like [[connectedComponents]]. */
   def updateComponents(labels: DataFrame, newPairs: DataFrame,
-      maxIter: Int = 20, checkpointDir: Option[String] = None): DataFrame = {
+      maxIter: Int = 20): DataFrame = {
     // NOT fused with a seeded propagation (round-16, measured): seeding
     // the sub-propagation from the old labels (members start at their
     // old component, new docs at self — same fixpoint, one node-set
@@ -880,7 +796,7 @@ object Dedup {
     val members = labels.join(touchedComps, Seq("component"), "left_semi")
     val subEdges = newPairs.select(col("doc_a"), col("doc_b"))
       .union(members.select(col("doc_id").as("doc_a"), col("component").as("doc_b")))
-    val subLabels = connectedComponents(subEdges, maxIter, checkpointDir)
+    val subLabels = connectedComponents(subEdges, maxIter)
     labels.join(members.select(col("doc_id")), Seq("doc_id"), "left_anti")
       .unionByName(subLabels)
   }

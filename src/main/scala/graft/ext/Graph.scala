@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.{Q, Tables}
+import graft.{Lineage, Q, Tables}
 
 /** Iterative graph analytics over relationally-derived edge lists — the
   * second member of the engine's Pregel-shaped family next to
@@ -31,19 +31,15 @@ object Graph {
     * across engines and partitionings, which is what lets DuckDB UNROLL
     * the loop in SQL and hash-match the distributed result.
     *
-    * Lineage-cut strategy mirrors [[Dedup.connectedComponents]]:
-    * `checkpointDir = None` (default) cuts rounds with `localCheckpoint`
-    * (executor-local blocks — fastest, right for local/interactive, lost
-    * with an executor); `Some(dir)` on any registered Hadoop FS scheme
-    * cuts through reliable `checkpoint`, the posture a preemptible
-    * 1000-executor fleet needs for a multi-round job.
+    * Durable cuts come from setting `spark.checkpoint.dir` on the
+    * session ([[graft.Lineage.cut]]); without it rounds cut through
+    * executor-local `localCheckpoint`.
     *
     * Output: (node, rank) with rank rounded to 6. */
-  def pageRank(edges: DataFrame, iters: Int, damping: Double = 0.85,
-      checkpointDir: Option[String] = None): DataFrame = {
+  def pageRank(edges: DataFrame, iters: Int,
+      damping: Double = 0.85): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
     require(damping > 0 && damping < 1, "damping must be in (0,1)")
-    Dedup.withCheckpointRoot(edges, checkpointDir) {
     // EAGER cuts, deliberately: fixed-iteration PageRank reads no
     // per-round convergence metric, so lazy cuts (one job, no
     // barriers) are semantically fine — but measured SLOWER (d46
@@ -53,9 +49,8 @@ object Graph {
     // table) while a lazily-chained round's physical plan freezes at
     // construction. The per-round barrier is what buys the adaptive
     // re-plan.
-    def cut(df: DataFrame): DataFrame = Dedup.cutLineage(df, checkpointDir)
-    val e = cut(edges.select(col("src"), col("dst")))
-    val nodes = cut(e.select(col("src").as("node"))
+    val e = Lineage.cut(edges.select(col("src"), col("dst")))
+    val nodes = Lineage.cut(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct())
     val n = nodes.count()
     val base = (1.0 - damping) / n
@@ -68,7 +63,7 @@ object Graph {
     // before: such a node matches no edge in the contribs join, so its
     // NULL deg is never read). Carrying `deg` through the per-round rank
     // table costs one long per node-row of checkpoint block.
-    val nd = cut(nodes.join(
+    val nd = Lineage.cut(nodes.join(
       e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .withColumnRenamed("src", "node"),
       Seq("node"), "left"))
@@ -79,7 +74,7 @@ object Graph {
         .join(ranks.select(col("node").as("src"),
           (col("rank") / col("deg")).as("c")), Seq("src"))
         .select(col("dst").as("node"), col("c"))
-      ranks = cut(nd
+      ranks = Lineage.cut(nd
         .join(contribs.groupBy(col("node")).agg(sum(col("c")).as("s")),
           Seq("node"), "left")
         .select(col("node"), col("deg"),
@@ -87,7 +82,6 @@ object Graph {
             * 1e9 + 0.5) / 1e9).as("rank")))
     }
     ranks.select(col("node"), (floor(col("rank") * 1e6 + 0.5) / 1e6).as("rank"))
-    }
   }
 
   /** The corpus' natural link graph: the customer–supplier bipartite
@@ -170,16 +164,13 @@ object Graph {
     * check exactly like connectedComponents' observed metric.
     * Requires every node to appear as a destination (symmetric edge
     * lists satisfy this by construction, as in [[pageRank]]).
-    * `checkpointDir` picks the lineage-cut strategy exactly as in
-    * [[pageRank]] (None = localCheckpoint; Some(dir) = reliable). */
-  def labelPropagation(edges: DataFrame, iters: Int,
-      checkpointDir: Option[String] = None): DataFrame = {
+    * Durable cuts come from setting `spark.checkpoint.dir` on the
+    * session ([[graft.Lineage.cut]]). */
+  def labelPropagation(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
-    Dedup.withCheckpointRoot(edges, checkpointDir) {
     // eager cuts — same A/B-measured AQE argument as pageRank's
-    def cut(df: DataFrame): DataFrame = Dedup.cutLineage(df, checkpointDir)
-    val e = cut(edges.select(col("src"), col("dst")))
-    val nodes = cut(e.select(col("src").as("node"))
+    val e = Lineage.cut(edges.select(col("src"), col("dst")))
+    val nodes = Lineage.cut(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct())
     var labels = nodes.withColumn("label", col("node"))
     for (_ <- 1 to iters) {
@@ -202,13 +193,12 @@ object Graph {
         .repartition(col("dst"))
         .groupBy(col("dst").as("node"), col("label"))
         .agg(count(lit(1)).as("votes"))
-      labels = cut(votes
+      labels = Lineage.cut(votes
         .groupBy(col("node"))
         .agg(min(struct((-col("votes")).as("nv"), col("label").as("l")))
           .getField("l").as("label")))
     }
     labels.select(col("node"), col("label").as("community"))
-    }
   }
 
   /** d53 — 2 rounds of label propagation over the trade graph. */
@@ -437,22 +427,18 @@ object Graph {
     * the just-checkpointed frontier's cached blocks — no recompute.
     * Emits (node, hops) for every node within `maxDepth` of a seed;
     * unreached nodes are absent (the caller's left join decides the
-    * sentinel). `checkpointDir` picks the lineage-cut strategy exactly
-    * as in [[pageRank]] (None = localCheckpoint; Some(dir) =
-    * reliable). */
-  def bfsHops(edges: DataFrame, seeds: DataFrame, maxDepth: Int,
-      checkpointDir: Option[String] = None): DataFrame = {
+    * sentinel). Durable cuts come from setting `spark.checkpoint.dir` on
+    * the session ([[graft.Lineage.cut]]). */
+  def bfsHops(edges: DataFrame, seeds: DataFrame, maxDepth: Int): DataFrame = {
     require(maxDepth >= 0, "maxDepth must be non-negative")
-    Dedup.withCheckpointRoot(edges, checkpointDir) {
-    def cut(df: DataFrame): DataFrame = Dedup.cutLineage(df, checkpointDir)
-    val e = cut(edges.select(col("src"), col("dst")))
-    var visited = cut(seeds.select(col("node")).distinct()
+    val e = Lineage.cut(edges.select(col("src"), col("dst")))
+    var visited = Lineage.cut(seeds.select(col("node")).distinct()
       .withColumn("hops", lit(0)))
     var frontier = visited
     var depth = 0
     while (depth < maxDepth && !frontier.isEmpty) {
       depth += 1
-      val next = cut(frontier
+      val next = Lineage.cut(frontier
         .join(e, frontier("node") === e("src"))
         .select(col("dst").as("node")).distinct()
         .join(visited.select(col("node")), Seq("node"), "left_anti")
@@ -463,11 +449,10 @@ object Graph {
       // was MEASURED SLOWER (min-of-6 A/B: 2.52 → 3.03 s, controls flat)
       // — the per-round eager barrier buys AQE's runtime re-plan of the
       // anti-join, the r11 eager-vs-lazy lesson again.
-      visited = cut(visited.unionByName(next))
+      visited = Lineage.cut(visited.unionByName(next))
       frontier = next
     }
     visited
-    }
   }
 
   /** BFS over the trade graph from the smallest customer node, depth 3

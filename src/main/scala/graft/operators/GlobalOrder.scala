@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.LocalTable
+import graft.{Lineage, LocalTable}
 
 /** Globally-ordered window functions WITHOUT a single-partition Exchange.
   *
@@ -38,29 +38,17 @@ object GlobalOrder {
     * equal tuples define rank ties (i.e. the sort-key columns). Output
     * rank columns are LongType.
     *
-    * Materialization trade (`faultTolerant`): the default localCheckpoint
-    * pins the range-partitioned frame to executor blocks WITHOUT lineage —
-    * cheapest, but a lost executor fails the job (fine in local mode,
-    * acceptable on clusters with external shuffle). `faultTolerant = true`
-    * uses persist(MEMORY_AND_DISK) instead, which KEEPS lineage: a lost
-    * block recomputes through the range exchange, and because
-    * RangePartitioner's boundary sampling is deterministically seeded the
-    * recomputed partition is identical — correctness survives executor
-    * loss at the cost of carrying the lineage. Both paths are asserted
-    * equal in PlanSpec. Callers on the fault-tolerant path own the
-    * persist lifecycle (unpersist via the returned frame when done). */
+    * The range-partitioned frame is materialized once through
+    * [[graft.Lineage.cut]]: executor-local blocks by default; durable
+    * cuts come from setting `spark.checkpoint.dir` on the session. */
   def withRanks(df: DataFrame, sortExprs: Seq[Column], tieCols: Seq[Column],
       rnCol: String = "rn", rnkCol: String = "rnk",
-      drnkCol: String = "drnk", faultTolerant: Boolean = false): Ranked = {
+      drnkCol: String = "drnk"): Ranked = {
     val spark = df.sparkSession
     // the stats pass and the output pass both need the range-partitioned
     // frame; materializing it once halves the exchanges
-    val ranged = df.repartitionByRange(sortExprs: _*)
-      .withColumn(PID, spark_partition_id())
-    val parts =
-      if (faultTolerant)
-        ranged.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else ranged.localCheckpoint()
+    val parts = Lineage.cut(df.repartitionByRange(sortExprs: _*)
+      .withColumn(PID, spark_partition_id()))
     val stats = parts.groupBy(col(PID))
       .agg(count(lit(1)).as("cnt"),
         count_distinct(struct(tieCols: _*)).as("dcnt"))
@@ -113,17 +101,15 @@ object GlobalOrder {
     * (SQL's default RANGE frame would give every tie the whole tie-group's
     * sum, and a ROWS frame would be nondeterministic within ties).
     * `valueCol` must be integral (LongType accumulation — exact, no float
-    * summation-order concerns at any scale). */
+    * summation-order concerns at any scale). Materialization is
+    * [[withRanks]]'s: durable cuts come from setting
+    * `spark.checkpoint.dir` on the session. */
   def withPrefixSum(df: DataFrame, valueCol: Column, sortExprs: Seq[Column],
-      outCol: String = "cumsum", faultTolerant: Boolean = false): Summed = {
+      outCol: String = "cumsum"): Summed = {
     val spark = df.sparkSession
-    val ranged = df.repartitionByRange(sortExprs: _*)
+    val parts = Lineage.cut(df.repartitionByRange(sortExprs: _*)
       .withColumn(PID, spark_partition_id())
-      .withColumn("__go_v", valueCol.cast(LongType))
-    val parts =
-      if (faultTolerant)
-        ranged.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else ranged.localCheckpoint()
+      .withColumn("__go_v", valueCol.cast(LongType)))
     val stats = parts.groupBy(col(PID))
       .agg(sum(col("__go_v")).as("vsum"))
       .collect()

@@ -20,19 +20,23 @@ import org.apache.spark.sql.types._
   * the boundary cases delegate to the same BigDecimal arithmetic Spark
   * runs, and only provably-safe cases take the fast double path.
   *
-  * Fast-path proof sketch: with y = fl(x·10⁶), the shortest-decimal
-  * value of x times 10⁶ differs from y by < 2·10⁻¹⁰ (half-ulp of the
-  * decimal conversion ≤ 1.1·10⁻¹⁰ at |x| ≤ 1e3, plus the product
-  * rounding ≤ 6·10⁻¹¹). When frac(y) is ≥ 10⁻⁹ away from every decision
-  * boundary {0, ½, 1}, both computations land on the same integer micro
-  * m, and m/10⁶ in double division is the correctly-rounded double of
-  * the rational m/10⁶ — identical to BigDecimal(m·10⁻⁶).toDouble. */
+  * Fast-path proof sketch, for |x| < 8 only: with y = fl(x·10⁶), the
+  * shortest-decimal value d of x lies within half an ulp of x, so
+  * |d·10⁶ − x·10⁶| ≤ 10⁶·2⁻⁵¹ ≈ 4.4·10⁻¹⁰, and the product rounds by at
+  * most half an ulp of y, 2⁻³¹ ≈ 4.7·10⁻¹⁰ for |y| < 8·10⁶ < 2²³ — so
+  * d·10⁶ and y differ by < 10⁻⁹. When frac(y) is more than 10⁻⁹ away from every
+  * decision boundary {0, ½, 1}, both land on the same integer micro m,
+  * and m/10⁶ in double division is the correctly-rounded double of the
+  * rational m/10⁶ — identical to BigDecimal(m·10⁻⁶).toDouble. From
+  * |x| ≥ 8 the two errors can exceed 10⁻⁹ (16.6896225 and 64.8506475
+  * sit a hair off a .5-micro boundary and would round down), so larger
+  * magnitudes always take the BigDecimal path. */
 object Round6 {
 
   def round6(x: Double): Double = {
     if (java.lang.Double.isNaN(x) || java.lang.Double.isInfinite(x)) return x
-    val y = x * 1e6
-    if (Math.abs(y) < 1e15) {
+    if (Math.abs(x) < 8) {
+      val y = x * 1e6
       val f = Math.floor(y)
       val frac = y - f
       if (frac > 1e-9 && frac < 0.5 - 1e-9) return f / 1e6

@@ -4,6 +4,8 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import org.apache.spark.SessionCheckpointDir.{filesUnder, onGraftfs}
+
 import graft.ext.Dedup
 
 /** Near-dup semantics: shingling, exact Jaccard, MinHash+LSH recall
@@ -733,42 +735,45 @@ class DedupSpec extends SparkSpec {
   test("connectedComponents: reliable-checkpoint strategy agrees with localCheckpoint, incl. on graftfs://") {
     val schema = StructType(Seq(
       StructField("doc_a", LongType), StructField("doc_b", LongType)))
+    def labelMap(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // chain (diameter 5) + clique + isolated pair — several rounds needed
     val pairs = (1L until 6L).map(i => Row(i, i + 1)) ++
       Seq(Row(10L, 11L), Row(10L, 12L), Row(11L, 12L), Row(20L, 21L))
     val df = LocalTable.of(spark, schema, pairs)
-    val viaLocal = Dedup.connectedComponents(df)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    spark.sparkContext.hadoopConfiguration
-      .set("fs.graftfs.impl", classOf[GraftTestFs].getName)
-    val dir = java.nio.file.Files.createTempDirectory("cc-ckpt").toString
-    val ckpt = s"graftfs://$dir"
-    val viaReliable = Dedup.connectedComponents(df, checkpointDir = Some(ckpt))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaReliable === viaLocal)
-    // the rounds really cut lineage through the graftfs scheme: the
-    // checkpoint dir resolved to graftfs and RDD checkpoint files landed
-    // in the backing directory
-    // (the FS qualifies the empty-authority form to "graftfs:/...")
-    assert(spark.sparkContext.getCheckpointDir
-      .exists(_.startsWith("graftfs:")), spark.sparkContext.getCheckpointDir)
-    def anyFile(d: java.io.File): Boolean = {
-      val kids = Option(d.listFiles()).getOrElse(Array.empty)
-      kids.exists(_.isFile) || kids.filter(_.isDirectory).exists(anyFile)
-    }
-    assert(anyFile(new java.io.File(dir)), s"no checkpoint files under $dir")
-    // fail-loudly parity: the reliable path refuses an under-propagated
-    // labeling exactly like the local path
+    val batch = LocalTable.of(spark, schema,
+      Seq(Row(6L, 10L), Row(30L, 31L), Row(32L, 21L)))
     val chain = LocalTable.of(spark, schema, (1L until 12L).map(i => Row(i, i + 1)))
-    intercept[IllegalStateException] {
-      Dedup.connectedComponents(chain, maxIter = 2, checkpointDir = Some(ckpt))
-    }
-    // the same strategy plumbs through the pair operator's cuts
     val docs = Tables(spark, sfDir, "documents").select("doc_id", "text")
-    val viaDefault = pairSet(Dedup.minhashNearDupPairs(docs, 3, 16, 8, 2, 0.5))
-    val viaCkpt = pairSet(Dedup.minhashNearDupPairs(docs, 3, 16, 8, 2, 0.5,
-      checkpointDir = Some(ckpt)))
-    assert(viaCkpt === viaDefault && viaCkpt.nonEmpty)
+    def cc() = labelMap(Dedup.connectedComponents(df))
+    def update() = labelMap(
+      Dedup.updateComponents(Dedup.connectedComponents(df), batch))
+    def nearDups() = pairSet(Dedup.minhashNearDupPairs(docs, 3, 16, 8, 2, 0.5))
+    // each operator cuts lineage through the graftfs session dir: its
+    // checkpoint files land there (onGraftfs asserts it)
+    val (ccReliable, ccDir) = onGraftfs(spark, "cc") {
+      // fail-loudly parity: the reliable path refuses an under-propagated
+      // labeling exactly like the local path
+      intercept[IllegalStateException] {
+        Dedup.connectedComponents(chain, maxIter = 2)
+      }
+      cc()
+    }
+    val (updateReliable, _) = onGraftfs(spark, "update")(update())
+    val (nearDupsReliable, _) = onGraftfs(spark, "minhash")(nearDups())
+    // the helper cleared the session dir: the same calls cut locally (a
+    // reliable cut would now throw for want of a dir) and write nothing
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
+    val written = filesUnder(ccDir)
+    assert(cc() === ccReliable)
+    assert(update() === updateReliable)
+    assert(nearDups() === nearDupsReliable)
+    assert(filesUnder(ccDir) === written)
+    assert(ccReliable(6L) === 1L && updateReliable(12L) === 1L)
+    assert(nearDupsReliable.nonEmpty)
+    intercept[IllegalStateException] {
+      Dedup.connectedComponents(chain, maxIter = 2)
+    }
   }
 
   test("hotBuckets/simhashHotBands surface exactly the buckets the cap star-pairs") {

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
+import org.apache.spark.SessionCheckpointDir.{filesUnder, onGraftfs}
+
 import graft.ext.Graph
 
 /** PageRank semantics on hand-checkable graphs — the oracle gate (d46)
@@ -167,28 +169,25 @@ class GraphSpec extends SparkSpec {
       ("c", "d"), ("d", "c"),
       ("d", "e"), ("e", "d"), ("e", "f"), ("f", "e"), ("f", "d"), ("d", "f"),
       ("f", "p"), ("p", "f"))
-    val prLocal = ranks(Graph.pageRank(g, iters = 4))
-    val lpLocal = Graph.labelPropagation(g, iters = 3)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     def seedDf(ns: String*) = LocalTable.of(spark,
       StructType(Seq(StructField("node", StringType))), ns.map(Row(_)))
-    val bfsLocal = Graph.bfsHops(g, seedDf("a"), maxDepth = 5)
+    def pr() = ranks(Graph.pageRank(g, iters = 4))
+    def lp() = Graph.labelPropagation(g, iters = 3)
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    def bfs() = Graph.bfsHops(g, seedDf("a"), maxDepth = 5)
       .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
-    spark.sparkContext.hadoopConfiguration
-      .set("fs.graftfs.impl", classOf[GraftTestFs].getName)
-    val dir = java.nio.file.Files.createTempDirectory("graph-ckpt").toString
-    val ckpt = Some(s"graftfs://$dir")
-    assert(ranks(Graph.pageRank(g, iters = 4, checkpointDir = ckpt)) === prLocal)
-    assert(Graph.labelPropagation(g, iters = 3, checkpointDir = ckpt)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap === lpLocal)
-    assert(Graph.bfsHops(g, seedDf("a"), maxDepth = 5, checkpointDir = ckpt)
-      .collect().map(r => r.getString(0) -> r.getInt(1)).toMap === bfsLocal)
-    // the rounds really cut through the graftfs scheme: checkpoint files
-    // landed in the backing directory
-    def anyFile(d: java.io.File): Boolean = {
-      val kids = Option(d.listFiles()).getOrElse(Array.empty)
-      kids.exists(_.isFile) || kids.filter(_.isDirectory).exists(anyFile)
-    }
-    assert(anyFile(new java.io.File(dir)), s"no checkpoint files under $dir")
+    // each operator's rounds cut through the graftfs session dir: its
+    // checkpoint files land there (onGraftfs asserts it)
+    val (prReliable, prDir) = onGraftfs(spark, "pagerank")(pr())
+    val (lpReliable, _) = onGraftfs(spark, "lpa")(lp())
+    val (bfsReliable, _) = onGraftfs(spark, "bfs")(bfs())
+    // with the session dir cleared the same calls cut locally and write
+    // no checkpoint file
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
+    val written = filesUnder(prDir)
+    assert(pr() === prReliable)
+    assert(lp() === lpReliable)
+    assert(bfs() === bfsReliable)
+    assert(filesUnder(prDir) === written)
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SessionCheckpointDir.{filesUnder, onGraftfs}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 
@@ -128,27 +129,26 @@ class PlanSpec extends SparkSpec {
     assert(executed.contains("__salt"), executed.take(1000))
   }
 
-  test("GlobalOrder: fault-tolerant persist path agrees with localCheckpoint path") {
+  test("GlobalOrder: reliable-checkpoint path agrees with localCheckpoint path") {
     import org.apache.spark.sql.functions._
     val spend = Tables(spark, sfDir, "orders")
       .groupBy(col("o_custkey"))
       .agg(round(sum(col("o_totalprice")), 2).as("total"))
     val sortExprs = Seq(col("total").desc, col("o_custkey").asc)
     val tieCols = Seq(col("total"), col("o_custkey"))
-    val fast = graft.operators.GlobalOrder.withRanks(spend, sortExprs, tieCols)
-    val safe = graft.operators.GlobalOrder.withRanks(spend, sortExprs, tieCols,
-      faultTolerant = true)
-    try {
-      assert(fast.totalRows === safe.totalRows)
-      def rows(r: graft.operators.GlobalOrder.Ranked) =
-        r.df.select("o_custkey", "rn", "rnk", "drnk")
-          .collect().map(_.toSeq).toSet
-      assert(rows(fast) === rows(safe))
-      // the persist path keeps lineage: its plan can recompute through the
-      // deterministic range exchange after block loss
-      assert(safe.df.queryExecution.optimizedPlan.toString
-        .contains("InMemoryRelation"))
-    } finally safe.df.unpersist()
+    def rows(r: graft.operators.GlobalOrder.Ranked) =
+      (r.totalRows, r.df.select("o_custkey", "rn", "rnk", "drnk")
+        .collect().map(_.toSeq).toSet)
+    // the range-partitioned frame is cut through the graftfs session dir
+    // (onGraftfs asserts its checkpoint files land there)
+    val (safe, dir) = onGraftfs(spark, "go-ranks") {
+      rows(graft.operators.GlobalOrder.withRanks(spend, sortExprs, tieCols))
+    }
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
+    val written = filesUnder(dir)
+    val fast = rows(graft.operators.GlobalOrder.withRanks(spend, sortExprs, tieCols))
+    assert(fast === safe)
+    assert(filesUnder(dir) === written)
   }
 
   test("GlobalOrder.withPrefixSum: agrees with the naive global window; no single-partition Exchange; fault-tolerant path agrees") {
@@ -171,12 +171,13 @@ class PlanSpec extends SparkSpec {
     val executed = fast.df.queryExecution.executedPlan.toString
       .split("== Initial Plan ==").head
     assert(!executed.contains("Exchange SinglePartition"), executed.take(1200))
-    val safe = graft.operators.GlobalOrder.withPrefixSum(
-      docs, col("v"), sortExprs, outCol = "cs", faultTolerant = true)
-    try {
-      assert(safe.grandTotal === fast.grandTotal)
-      assert(rows(safe.df) === rows(fast.df))
-    } finally safe.df.unpersist()
+    val ((safeTotal, safeRows), _) = onGraftfs(spark, "go-prefix") {
+      val safe = graft.operators.GlobalOrder.withPrefixSum(
+        docs, col("v"), sortExprs, outCol = "cs")
+      (safe.grandTotal, rows(safe.df))
+    }
+    assert(safeTotal === fast.grandTotal)
+    assert(safeRows === rows(fast.df))
   }
 
   test("d80: the budget prefix sum never funnels through a single partition") {

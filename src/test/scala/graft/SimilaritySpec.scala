@@ -515,6 +515,12 @@ class SimilaritySpec extends SparkSpec {
         }
       }
     }
+    // moderate magnitudes whose shortest decimal sits on a .5-micro
+    // boundary the product x·1e6 misses by more than the fast path's
+    // margin
+    Seq(16.6896225, 64.8506475, -16.6896225, -64.8506475).foreach { x =>
+      assert(java.lang.Double.compare(Round6.round6(x), oracle(x)) === 0, s"x=$x")
+    }
     assert(Round6.round6(Double.NaN).isNaN)
     assert(Round6.round6(Double.PositiveInfinity) === Double.PositiveInfinity)
     // micros: on round6 outputs it recovers the exact integer micro the

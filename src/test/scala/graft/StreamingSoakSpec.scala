@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SessionCheckpointDir.{filesUnder, withCheckpointDir}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -142,9 +143,9 @@ class StreamingSoakSpec extends SparkSpec {
     val queries = Seq(qPost, qDelta, qContam, qAnn)
 
     // a fifth, BATCH workload to run mid-soak: reliable-checkpoint label
-    // propagation — the iterative family that mutates the
-    // SparkContext-global checkpoint dir (the configureCheckpointDir
-    // seam the per-module specs never exercise under concurrency)
+    // propagation, its rounds cut through the SparkContext-global
+    // session checkpoint dir while the four streams run (a concurrency
+    // the per-module specs never exercise)
     val edgeSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("src",
         org.apache.spark.sql.types.LongType),
@@ -154,9 +155,10 @@ class StreamingSoakSpec extends SparkSpec {
       val j = (i * 17 + 1) % 500; Seq(Row(i, j), Row(j, i))
     }
     val edges = LocalTable.of(spark, edgeSchema, eRows)
-    def lp(ckpt: String): Seq[(Long, Long)] =
-      graft.ext.Graph.labelPropagation(edges, iters = 3, Some(ckpt))
+    def lp(ckpt: String): Seq[(Long, Long)] = withCheckpointDir(spark, ckpt) {
+      graft.ext.Graph.labelPropagation(edges, iters = 3)
         .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    }
 
     // ---- drive: three waves of file arrivals, all four streams churning
     // concurrently (processAllAvailable blocks on ONE stream while the
@@ -245,6 +247,8 @@ class StreamingSoakSpec extends SparkSpec {
     // CONCURRENTLY with the four streams equals a quiet re-run — the
     // checkpoint-dir global and the streams did not corrupt each other
     assert(lpDuring.nonEmpty, "the mid-soak label propagation never ran")
+    assert(filesUnder(s"$base/reliable_ckpt").nonEmpty,
+      "the mid-soak label propagation wrote no reliable checkpoint")
     assert(lpDuring === lp(s"$base/reliable_ckpt_quiet"),
       "mid-soak reliable-checkpoint label propagation != quiet re-run")
   }
