@@ -46,9 +46,9 @@ object Dedup {
     * distinctness assumption: inputs are array_distinct'd first, then the
     * one-pass identity applies. Duplicate-element inputs would silently
     * overcount the union in the fast path — this wrapper is the safe
-    * public entry; hot verify loops use [[jaccardDistinct]] on inputs
+    * entry; hot verify loops use [[jaccardDistinct]] on inputs
     * that are sets by construction. */
-  def jaccard(a: Column, b: Column): Column =
+  private[graft] def jaccard(a: Column, b: Column): Column =
     jaccardDistinct(array_distinct(a), array_distinct(b))
 
   /** k MinHash values of a shingle set — native one-pass Catalyst kernel
@@ -448,31 +448,6 @@ object Dedup {
         col("band.band_id").as("band_id"), col("band.band_hash").as("band_hash"))
   }
 
-  /** Maintenance half of the incremental-dedup posture: once a probe
-    * batch is admitted, its band rows JOIN the index so the next batch
-    * probes against them too — banding is per-document, so appending the
-    * admitted docs' bands is exactly equivalent to rebuilding the index
-    * from the union of the corpora (DedupSpec proves probe-after-append ≡
-    * probe-against-rebuild). Parameters must match the index's original
-    * banding. */
-  def appendToBandIndex(index: DataFrame, admittedDocs: DataFrame, nGram: Int,
-      k: Int, bands: Int, rowsPerBand: Int): DataFrame =
-    index.unionByName(minhashBandIndex(admittedDocs, nGram, k, bands, rowsPerBand))
-
-  /** Persisted variant: append the admitted batch's band rows to the
-    * index TABLE through the lake seam — the production shape, where the
-    * index is a skinny parquet/Iceberg table written once and grown per
-    * admitted batch instead of rebuilt from 100 TB. Partitioned by
-    * band_id so maintenance (compaction per partition) stays bounded;
-    * the probe join reads all bands anyway, so partitioning is a
-    * file-layout choice, not a pruning one. */
-  def appendToBandIndexTable(fmt: graft.lake.TableFormat, tablePath: String,
-      admittedDocs: DataFrame, nGram: Int, k: Int, bands: Int,
-      rowsPerBand: Int): Unit =
-    fmt.createOrAppend(
-      minhashBandIndex(admittedDocs, nGram, k, bands, rowsPerBand),
-      tablePath, Seq("band_id"))
-
   /** Diagnostic: the band buckets of a [[minhashBandIndex]]-shaped
     * relation whose membership exceeds `bucketCap` — i.e. the buckets the
     * count-gated hot/cold split routes to star pairing. The capped
@@ -492,7 +467,7 @@ object Dedup {
   /** Diagnostic twin of [[hotBuckets]] for SimHash: band rows derived
     * from signatures exactly as [[simhashNearDupPairs]] derives them, so
     * the audited buckets are the operator's own. */
-  def simhashHotBands(sigs: DataFrame, bandCap: Int = DefaultBucketCap): DataFrame =
+  private[graft] def simhashHotBands(sigs: DataFrame, bandCap: Int = DefaultBucketCap): DataFrame =
     hotBuckets(
       sigs.withColumn("band_id", explode(sequence(lit(0), lit(SimhashBands - 1))))
         .withColumn("band_val",
@@ -739,20 +714,9 @@ object Dedup {
     labels
   }
 
-  /** Keep-one-per-component dedup — the materialized consumer of the
-    * whole pair→components pipeline: drops every document that is NOT
-    * its component's representative (left-anti join against the
-    * non-representative labels; singletons survive untouched). */
-  def dedupDocuments(docs: DataFrame, pairs: DataFrame): DataFrame = {
-    val nonReps = connectedComponents(pairs)
-      .filter(col("doc_id") =!= col("component"))
-      .select(col("doc_id"))
-    docs.join(nonReps, Seq("doc_id"), "left_anti")
-  }
-
   /** INCREMENTAL component maintenance — the labeling half of the
     * build-once/probe-new posture ([[minhashBandIndex]] /
-    * [[minhashProbePairs]] / [[appendToBandIndex]] are the pair half).
+    * [[minhashProbePairs]] are the pair half).
     * `labels` is the persisted (doc_id, component) table of the archive;
     * `newPairs` are the batch's pairs (batch-internal + probe cross
     * pairs). Only components TOUCHED by a new pair are relabeled:
@@ -1006,8 +970,8 @@ object Dedup {
       val withBucket = docs.withColumn("bucket", bucket)
       val indexed = withBucket.filter(col("bucket") < 95).drop("bucket")
       val incoming = withBucket.filter(col("bucket") >= 95).drop("bucket")
-      // production: `index` is a persisted table (minhashBandIndex /
-      // appendToBandIndexTable); materialized here to stand in for it
+      // production: `index` is a persisted minhashBandIndex table;
+      // materialized here to stand in for it
       val index = minhashBandIndex(indexed, nGram = 3, k = 96,
         bands = 48, rowsPerBand = 2).localCheckpoint()
       val members = probedBucketMembers(index, incoming, nGram = 3, k = 96,
@@ -1257,30 +1221,11 @@ object Dedup {
     * Skinny keys, both exchanges map-side combinable. Counts add
     * associatively across batches ONLY because each document is
     * admitted exactly once (the same disjointness contract the d71
-    * stream relies on), so append ≡ rebuild. */
+    * lifecycle relies on), so append ≡ rebuild. */
   def boilerplateIndex(docs: DataFrame, windowTokens: Int): DataFrame =
     spanWindows(docs, windowTokens, keep = Seq("source"))
       .select(col("source"), col("fp"), col("doc_id")).distinct()
       .groupBy(col("source"), col("fp")).agg(count(lit(1)).as("dd"))
-
-  /** Index maintenance: merge an admitted batch's membership counts. */
-  def appendToBoilerplateIndex(index: DataFrame, admittedDocs: DataFrame,
-      windowTokens: Int): DataFrame =
-    index.unionByName(boilerplateIndex(admittedDocs, windowTokens))
-      .groupBy(col("source"), col("fp")).agg(sum(col("dd")).as("dd"))
-
-  /** Membership-index retraction (takedown/GDPR): each admitted doc
-    * contributed exactly 1 to every (source, fp) it contains (the
-    * distinct-doc count under the admit-once contract), so subtraction
-    * of the retracted set's own membership counts is the exact inverse
-    * of [[appendToBoilerplateIndex]]; zero-count rows drop out —
-    * the [[retractFromFingerprintIndex]] algebra on the d73 index. */
-  def retractFromBoilerplateIndex(index: DataFrame, retractedDocs: DataFrame,
-      windowTokens: Int): DataFrame =
-    index.unionByName(boilerplateIndex(retractedDocs, windowTokens)
-        .withColumn("dd", -col("dd")))
-      .groupBy(col("source"), col("fp")).agg(sum(col("dd")).as("dd"))
-      .filter(col("dd") > 0)
 
   /** Incremental boilerplate scrub: rewrite a NEW batch's documents
     * with every window that reaches `minDocs` distinct same-source
@@ -1315,9 +1260,9 @@ object Dedup {
     * ONCE — the (scrub, append) pair of public calls tokenized, hashed
     * and distinct-aggregated the batch twice each (the d71 admission
     * always needs both outputs). Returns (scrubbed batch, new index).
-    * Algebra is [[incrementalBoilerplateScrub]] +
-    * [[appendToBoilerplateIndex]] verbatim: the batch membership count
-    * table IS both the probe's batch-side count and the appended
+    * Algebra is [[incrementalBoilerplateScrub]] plus a sum-merge of
+    * the batch's membership counts into `index`: the batch membership
+    * count table IS both the probe's batch-side count and the appended
     * delta — one aggregate, two consumers, materialized once
     * (lazy shared-RDD cut, the d07/AQE lesson). */
   def admitBoilerplateBatch(newDocs: DataFrame, index: DataFrame,

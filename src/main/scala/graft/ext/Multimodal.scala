@@ -119,13 +119,14 @@ object Multimodal {
   }
 
   /** Media transforms beyond decode — the resize / frame-sample stages of
-    * a training-data pipeline, real JDK implementations through the same
-    * per-partition batch shape as [[decodeFeatures]]. */
+    * a training-data pipeline as real JDK implementations, proven on real
+    * images by MultimodalSpec; the catalog gates run deterministic
+    * stand-ins (see [[frameSample]]). */
   object MediaTransforms {
 
     /** Re-encoded PNG scaled to (w, h) via Graphics2D bilinear drawImage;
       * None when the payload is not a decodable image. */
-    def resizeImage(bytes: Array[Byte], w: Int, h: Int): Option[Array[Byte]] =
+    private[graft] def resizeImage(bytes: Array[Byte], w: Int, h: Int): Option[Array[Byte]] =
       try {
         val src = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
         if (src == null) None
@@ -143,96 +144,10 @@ object Multimodal {
         }
       } catch { case _: Exception => None }
 
-    /** 64-bit average-hash (aHash) perceptual image fingerprint: decode,
-      * scale to 8×8 (same bilinear Graphics2D path as [[resizeImage]]),
-      * per-pixel luminance (ITU-R BT.601 weights), bit i set iff pixel i
-      * is brighter than the image mean. Hamming distance between hashes
-      * tracks visual similarity — re-encodes, small brightness shifts
-      * and resizes move few bits, unrelated images differ in ~32 —
-      * which makes the hash a drop-in `sig` for the SimHash banding
-      * pipeline ([[graft.ext.Dedup.simhashNearDupPairs]]). None when the
-      * payload is not a decodable image. Deterministic for identical
-      * bytes within a JVM (the spec contract; cross-JVM stability rides
-      * the JDK's fixed bilinear kernel). */
-    def perceptualHash(bytes: Array[Byte]): Option[Long] =
-      try {
-        val src = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-        if (src == null) None
-        else {
-          val dst = new java.awt.image.BufferedImage(8, 8,
-            java.awt.image.BufferedImage.TYPE_INT_RGB)
-          val g = dst.createGraphics()
-          g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-            java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-          g.drawImage(src, 0, 0, 8, 8, null)
-          g.dispose()
-          val lum = new Array[Double](64)
-          var i = 0
-          while (i < 64) {
-            val rgb = dst.getRGB(i % 8, i / 8)
-            lum(i) = 0.299 * ((rgb >> 16) & 0xff) +
-              0.587 * ((rgb >> 8) & 0xff) + 0.114 * (rgb & 0xff)
-            i += 1
-          }
-          val mean = lum.sum / 64.0
-          var sig = 0L
-          i = 0
-          while (i < 64) {
-            if (lum(i) > mean) sig |= (1L << i)
-            i += 1
-          }
-          Some(sig)
-        }
-      } catch { case _: Exception => None }
-
-    /** 64-bit energy-envelope audio fingerprint — [[perceptualHash]]'s
-      * audio sibling: decode 16-bit PCM (same javax.sound path as the
-      * feature decoder), split the sample stream into 64 equal chunks,
-      * bit i set iff chunk i's mean |amplitude| is above the whole
-      * clip's mean. The envelope shape — not the level — carries the
-      * bits, so uniform gain changes (re-encodes, normalization) leave
-      * the hash intact while a different loudness CONTOUR flips ~half
-      * the bits. Drop-in `sig` for the SimHash band pairing. None for
-      * undecodable or sub-64-sample payloads. */
-    def audioEnergyHash(bytes: Array[Byte]): Option[Long] =
-      try {
-        val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
-          new java.io.ByteArrayInputStream(bytes))
-        val fmt = in.getFormat
-        val data = in.readAllBytes()
-        in.close()
-        val n = data.length / 2
-        if (fmt.getSampleSizeInBits != 16 || n < 64) None
-        else {
-          val buf = java.nio.ByteBuffer.wrap(data).order(
-            if (fmt.isBigEndian) java.nio.ByteOrder.BIG_ENDIAN
-            else java.nio.ByteOrder.LITTLE_ENDIAN)
-          val energy = new Array[Double](64)
-          var c = 0
-          while (c < 64) {
-            val from = (c.toLong * n / 64).toInt
-            val until = ((c + 1).toLong * n / 64).toInt
-            var s = 0.0
-            var i = from
-            while (i < until) { s += math.abs(buf.getShort(i * 2).toDouble); i += 1 }
-            energy(c) = s / math.max(1, until - from)
-            c += 1
-          }
-          val mean = energy.sum / 64.0
-          var sig = 0L
-          c = 0
-          while (c < 64) {
-            if (energy(c) > mean) sig |= (1L << c)
-            c += 1
-          }
-          Some(sig)
-        }
-      } catch { case _: Exception => None }
-
     /** Every `stride`-th frame of a multi-frame image container (animated
       * GIF — the JDK's only multi-frame reader), re-encoded as PNGs.
       * Single-frame formats yield their one frame when sampled. */
-    def sampleFrames(bytes: Array[Byte], stride: Int): Seq[Array[Byte]] = {
+    private[graft] def sampleFrames(bytes: Array[Byte], stride: Int): Seq[Array[Byte]] = {
       require(stride > 0)
       val iis = javax.imageio.ImageIO.createImageInputStream(
         new java.io.ByteArrayInputStream(bytes))
@@ -250,19 +165,6 @@ object Multimodal {
       } catch { case _: Exception => Seq.empty }
       finally iis.close()
     }
-  }
-
-  /** Resize stage over a media frame: (doc_id, media) → (doc_id, resized
-    * binary | null, out_w, out_h) — per-partition batched like
-    * [[decodeFeatures]], stateless projection shape (no shuffle). */
-  def resizeImages(media: DataFrame, w: Int, h: Int): DataFrame = {
-    val ds = media.select(col("doc_id"), col("media"))
-      .as(Encoders.tuple(Encoders.scalaLong, Encoders.BINARY))
-    ds.map { case (id, bytes) =>
-      (id, MediaTransforms.resizeImage(bytes, w, h).orNull, w, h)
-    }(Encoders.tuple(Encoders.scalaLong, Encoders.BINARY,
-      Encoders.scalaInt, Encoders.scalaInt))
-      .toDF("doc_id", "resized", "out_w", "out_h")
   }
 
   /** Synthesize a media table from `documents`: text bytes stand in for
@@ -311,14 +213,6 @@ object Multimodal {
   def mediaHashIndex(media: DataFrame): DataFrame =
     media.select(md5(col("media")).as("content_hash")).distinct()
 
-  /** Index maintenance: set-union with an admitted batch's hashes
-    * (idempotent — re-admitting a hash is a no-op, so append ≡ rebuild
-    * without even needing the disjointness contract the count indexes
-    * rely on). */
-  def appendToMediaHashIndex(index: DataFrame,
-      admittedMedia: DataFrame): DataFrame =
-    index.unionByName(mediaHashIndex(admittedMedia)).distinct()
-
   /** Incremental exact media dedup — the admission posture of
     * [[mediaExactDedup]] (the d18/d24 algebra on the cheapest index in
     * the engine): a NEW batch is judged against the persisted hash set;
@@ -337,34 +231,6 @@ object Multimodal {
       .select(col("doc_id"), col("content_hash"),
         col("known").isNotNull.as("in_archive"),
         (col("known").isNull && col("rn") === 1).as("admitted"))
-  }
-
-  /** Perceptual near-dup pairs over an image corpus: decode → 64-bit
-    * aHash ([[MediaTransforms.perceptualHash]], per-partition batched
-    * like every decode stage) → the SimHash banding pipeline
-    * ([[graft.ext.Dedup.simhashNearDupPairs]]: 4×16-bit bands, count-
-    * gated hot-bucket cap, pigeonhole recall 1.0 for hamming ≤ 3) —
-    * candidate generation is an equi-join on band values, never an
-    * all-pairs hamming pass. Undecodable payloads drop out (no hash, no
-    * pairs) rather than failing the scan. */
-  def mediaNearDupPairs(media: DataFrame, maxHamming: Int): DataFrame =
-    hashedNearDupPairs(media, maxHamming, MediaTransforms.perceptualHash)
-
-  /** [[mediaNearDupPairs]] for audio payloads: the 64-bit energy-envelope
-    * fingerprint ([[MediaTransforms.audioEnergyHash]]) through the same
-    * banded pairing. */
-  def audioNearDupPairs(media: DataFrame, maxHamming: Int): DataFrame =
-    hashedNearDupPairs(media, maxHamming, MediaTransforms.audioEnergyHash)
-
-  private def hashedNearDupPairs(media: DataFrame, maxHamming: Int,
-      hash: Array[Byte] => Option[Long]): DataFrame = {
-    val ds = media.select(col("doc_id"), col("media"))
-      .as(Encoders.tuple(Encoders.scalaLong, Encoders.BINARY))
-    val sigs = ds.mapPartitions { it =>
-      it.flatMap { case (id, bytes) => hash(bytes).map(sig => (id, sig)) }
-    }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
-      .toDF("doc_id", "sig")
-    graft.ext.Dedup.simhashNearDupPairs(sigs, maxHamming)
   }
 
   // ---- catalog queries -----------------------------------------------
@@ -429,8 +295,8 @@ object Multimodal {
           round(avg(col("mean_intensity")), 4).as("avg_intensity"))
     })
 
-  /** Exact content dedup over the media table (decode-free half — the
-    * perceptual half is spec-proven on real PNGs, MultimodalSpec). */
+  /** Exact content dedup over the media table (decode-free: the content
+    * hash runs on the raw payload). */
   val m03MediaDedup: Q = Q(
     "m03_media_dedup",
     Some("""

@@ -106,16 +106,6 @@ object Retrieval {
   def appendToPostings(index: DataFrame, newDocs: DataFrame): DataFrame =
     index.unionByName(postings(newDocs))
 
-  /** Postings retraction (takedown/GDPR): every posting row belongs to
-    * exactly one document, so deletion is an anti-join on the retracted
-    * id set — no count arithmetic at all (the simplest retraction in
-    * the engine; through a table format a DELETE WHERE doc_id IN).
-    * Exact inverse of [[appendToPostings]] under the disjoint-doc
-    * contract; corpus statistics re-derive from what remains. */
-  def retractFromPostings(index: DataFrame, retractedDocIds: DataFrame): DataFrame =
-    index.join(retractedDocIds.select(col("doc_id")), Seq("doc_id"),
-      "left_anti")
-
   /** [[bm25TopK]] against an ALREADY-BUILT postings relation — the
     * production posture (the index is a persisted, append-maintained
     * table; queries arrive forever after). Same scoring, same

@@ -288,7 +288,7 @@ object Similarity {
     * exact top-k within the query's nProbe nearest inverted lists. The
     * persisted path — lists written partitioned by centroid so the probe
     * is a partition-pruned scan — is `graft.ext.IvfIndex`. */
-  def annTopKIvf(embeddings: DataFrame, queryVecId: Long, k: Int,
+  private[graft] def annTopKIvf(embeddings: DataFrame, queryVecId: Long, k: Int,
       nCentroids: Int, nProbe: Int, kmeansIters: Int = 3): DataFrame = {
     val cs = KMeans.fit(embeddings, "vec_id", "embedding", nCentroids, kmeansIters)
     val qv = embeddings.filter(col("vec_id") === queryVecId)
@@ -626,55 +626,6 @@ object Similarity {
       .limit(topK)
   }
 
-  /** Embedding near-duplicate pairs at HIGH cosine via multi-band
-    * hyperplane LSH — the linear-time scale path the exact grid join
-    * ([[cosineThresholdSelfJoin]]) cannot provide. Each vector gets
-    * `bands` independent `bandBits`-bit signatures (seeded md5-derived
-    * hyperplanes); any shared (band, signature) bucket makes a candidate
-    * pair — generated through [[graft.ext.Dedup.lshCandidatePairs]], so
-    * the count-gated hot/cold bucket split and its bounded-buffer
-    * guarantees carry over verbatim — and candidates are exact-cosine
-    * verified, so output ⊆ exact always.
-    *
-    * Recall is analytical, from the angular-LSH collision rate
-    * p = 1 − θ/π: at the near-dup regime this operator is FOR
-    * (τ ≥ 0.95, i.e. θ ≤ 18°, p ≥ 0.90) the defaults give per-pair miss
-    * (1 − p^16)^32 ≤ 2e-3, vanishing fast as similarity rises (2e-23 at
-    * τ = 0.999), while background pairs (cos ≈ 0, p = 0.5) collide with
-    * rate 1 − (1 − 0.5^16)^32 ≈ 5e-4 — candidates stay ∝ n + true dups,
-    * not n². At LOW thresholds (s03's 0.4: p = 0.63 vs background 0.5)
-    * angular LSH cannot separate signal from background — candidates
-    * degenerate toward all pairs — which is WHY s03 keeps the exact
-    * triangle-grid join: that problem is inherently quadratic, and the
-    * grid only shards the work. Two operators, two regimes, both
-    * deliberate. */
-  def cosineNearDupPairsLsh(embeddings: DataFrame, threshold: Double,
-      bandBits: Int = 16, bands: Int = 32, dim: Int = EmbeddingDim,
-      bucketCap: Int = graft.ext.Dedup.DefaultBucketCap): DataFrame = {
-    require(threshold > 0, "threshold must be positive (near-dup regime)")
-    require(bandBits >= 1 && bandBits <= 64, "bandBits must fit a Long")
-    val bandStructs = (0 until bands).map { b =>
-      struct(lit(b).as("band_id"),
-        graft.plans.HyperplaneSignatureExpr.hyperplaneSig(col("embedding"),
-          graft.plans.HyperplaneSignatureExpr.md5Signs(bandBits, dim, s"band$b"))
-          .as("band_hash"))
-    }
-    val bandRows = embeddings
-      .select(col("vec_id").as("doc_id"),
-        explode(array(bandStructs: _*)).as("band"))
-      .select(col("doc_id"), col("band.band_id").as("band_id"),
-        col("band.band_hash").as("band_hash"))
-    val candidates = graft.ext.Dedup.lshCandidatePairs(bandRows, bucketCap)
-      .select(col("doc_a").as("vec_a"), col("doc_b").as("vec_b"))
-    val e = embeddings.select(col("vec_id"), col("embedding"))
-    candidates.alias("c")
-      .join(e.alias("va"), col("c.vec_a") === col("va.vec_id"))
-      .join(e.alias("vb"), col("c.vec_b") === col("vb.vec_id"))
-      .select(col("c.vec_a").as("vec_a"), col("c.vec_b").as("vec_b"),
-        round(cosine(col("va.embedding"), col("vb.embedding")), 6).as("cos_sim"))
-      .filter(col("cos_sim") >= threshold)
-  }
-
   /** SemDeDup-style semantic dedup (Abbas et al., "SemDeDup: Data-efficient
     * learning at web-scale through semantic deduplication", 2023): cluster
     * the embedding space with the k-means coarse quantizer, then dedup
@@ -803,10 +754,8 @@ object Similarity {
 
   /** The probe half of [[semanticDedupIncremental]] against an
     * ALREADY-ASSIGNED archive relation (`a_id`, `a_emb`, `cid`) and its
-    * quantizer — the persisted-index posture
-    * ([[graft.streaming.AnnIndexStreaming]]'s dedup admission probes the
-    * committed lists through this). */
-  def semanticDedupAgainstAssigned(batch: DataFrame, assigned: DataFrame,
+    * quantizer. */
+  private def semanticDedupAgainstAssigned(batch: DataFrame, assigned: DataFrame,
       cs: Array[Array[Float]], nProbe: Int, threshold: Double): DataFrame = {
     require(nProbe > 0, "nProbe must be positive")
     val cand = batch

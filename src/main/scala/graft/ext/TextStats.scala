@@ -1160,17 +1160,6 @@ object TextStats {
     counts.unionByName(lmBigramCounts(newReference))
       .groupBy(col("bg")).agg(sum(col("c12")).as("c12"))
 
-  /** LM-model retraction (takedown of reference docs): subtract the
-    * retracted slice's counts, drop zeros — exact inverse of
-    * [[appendToLmCounts]] under the admitted-once contract (the
-    * boilerplate-index retraction pattern). */
-  def retractFromLmCounts(counts: DataFrame,
-      retractedReference: DataFrame): DataFrame =
-    counts.unionByName(lmBigramCounts(retractedReference)
-        .select(col("bg"), (-col("c12")).as("c12")))
-      .groupBy(col("bg")).agg(sum(col("c12")).as("c12"))
-      .filter(col("c12") > 0)
-
   /** [[ngramLmScore]] against an ALREADY-BUILT counts relation — the
     * production posture (the model is a persisted, append-maintained
     * artifact; candidate batches arrive forever after). Same smoothing

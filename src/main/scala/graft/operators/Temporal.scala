@@ -316,11 +316,9 @@ object Temporal {
         .select(col("event_id"), col("user_id"), col("ts_us"), col("last_click_ts_us"))
     })
 
-  /** Batch sessionization — the oracle-checkable twin of
-    * `streaming.EventsStreaming.sessionize`: a session boundary is a
-    * >30-minute gap to the previous event of the same user; session ids
-    * are the running sum of boundary flags. Same gap semantics as the
-    * stateful streaming version, expressed as two windows. */
+  /** Batch sessionization: a session boundary is a >30-minute gap to
+    * the previous event of the same user; session ids are the running
+    * sum of boundary flags, expressed as two windows. */
   val q37SessionizeBatch: Q = Q(
     "q37_sessionize_batch",
     Some("""

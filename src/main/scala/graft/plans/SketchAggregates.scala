@@ -115,11 +115,10 @@ object MisraGriesAgg {
       MisraGriesAgg(GraftSqlBridge.expression(c), capacity)
         .toAggregateExpression())
 
-  /** One Misra-Gries observation — the single-item update shared by the
-    * aggregate and the streaming twin
-    * ([[graft.streaming.EventsStreaming.heavyHittersStream]]): bump an
-    * existing counter, claim a free slot, or run the classic decrement
-    * step (every counter pays one, zeroed counters free their slot). */
+  /** One Misra-Gries observation — the aggregate's single-item update:
+    * bump an existing counter, claim a free slot, or run the classic
+    * decrement step (every counter pays one, zeroed counters free their
+    * slot). */
   def observe(buf: mutable.HashMap[String, Long], k: String)(capacity: Int): Unit =
     buf.get(k) match {
       case Some(c) => buf(k) = c + 1

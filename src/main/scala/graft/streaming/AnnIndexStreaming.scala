@@ -9,8 +9,7 @@ import graft.plans.NearestCentroidExpr
 
 /** Streaming maintenance of the IVF ANN index — FAISS's
   * train-once/add-many contract run forever over an embedding stream
-  * (the s22 lifecycle's streaming face, the way
-  * [[DocIndexStreaming.spanIndexStream]] is d71's): a base build trains
+  * (the s22 lifecycle's streaming face): a base build trains
   * the quantizer and writes the base inverted lists; each micro-batch
   * is assigned with the FROZEN quantizer and lands as its OWN
   * per-batch list layout (`b<batchId>/centroid_id=…`), committed by
@@ -137,7 +136,7 @@ object AnnIndexStreaming {
 
   /** Ids of batches whose commit marker exists AND that are not yet
     * folded into the committed base, ascending. */
-  def committedBatches(s: SparkSession, indexPath: String): Seq[Long] =
+  private[graft] def committedBatches(s: SparkSession, indexPath: String): Seq[Long] =
     committedBatchIds(s, indexPath, currentBase(s, indexPath))
 
   /** One admission: assign the batch with the frozen CURRENT-base
@@ -222,20 +221,14 @@ object AnnIndexStreaming {
   private def listsOf(s: SparkSession, indexPath: String,
       base: Base): DataFrame =
     (basePath(indexPath, base) +:
-        committedBatchIds(s, indexPath, base).map(id => s"$indexPath/b$id")
-          // a fully-evicted dedup admission commits its marker without a
-          // lists dir — BATCH dirs may be missing; the base root is read
-          // unconditionally so a committed base whose dir is gone (or an
-          // index persisted under a pre-(v,f)-layout) fails LOUDLY at
-          // read instead of silently returning batch-only data
-          .filter(r => fs(s, r).exists(new Path(r))))
+        committedBatchIds(s, indexPath, base).map(id => s"$indexPath/b$id"))
       .map(r => s.read.parquet(r))
       .reduce(_.unionByName(_))
 
   /** The grown index: committed base ∪ its unfolded committed batches.
     * Each root is read separately (its own partition discovery) and
     * unioned, so a centroid_id filter prunes inside every root. */
-  def currentLists(s: SparkSession, indexPath: String): DataFrame =
+  private[graft] def currentLists(s: SparkSession, indexPath: String): DataFrame =
     listsOf(s, indexPath, currentBase(s, indexPath))
 
   /** Fold base + committed batches into a fresh base, RE-TRAINING the
@@ -396,123 +389,4 @@ object AnnIndexStreaming {
         }
       }
   }
-
-  /** Dedup-on-admission (the s23 incremental SemDeDup as a stream): the
-    * batch is first JUDGED against the committed index — every batch
-    * vector multi-probes its `nProbe` nearest lists of the current base
-    * quantizer and is evicted when some indexed vector is within
-    * `threshold` cosine — the decisions (kept + best-neighbor eviction
-    * evidence) land in `decisionsPath/batch=<id>`, and ONLY admitted
-    * vectors append as `b<batchId>`. Same exactly-once contract as
-    * [[admitBatch]] (marker commit, replay no-op, overwrite-by-batch
-    * decisions). Decisions are written BEFORE the commit and never
-    * retracted, so `_COMMIT_batch_<id>` ⇒ decisions-present holds
-    * unconditionally; the converse does not — a crashed or aborted
-    * admission leaves judgments for a batch with no marker, which the
-    * retry overwrites — so decisions readers gate each `batch=<id>` on
-    * its marker, exactly like list readers do. Because foreachBatch serializes batches, the index seen
-    * by batch N contains exactly the ADMITTED vectors of batches
-    * 0..N−1 — a duplicate of an earlier admitted vector is evicted even
-    * though it never shared a micro-batch with it; forward-only, like
-    * every probe-the-index admission here. */
-  def admitDedupBatch(batch: DataFrame, batchId: Long, indexPath: String,
-      decisionsPath: String, nProbe: Int, threshold: Double,
-      vecCol: String = "embedding"): Unit =
-    admitDedupBatchImpl(batch, batchId, indexPath, decisionsPath, nProbe,
-      threshold, vecCol)
-
-  /** `beforeClaim` is a test seam into the judge→claim window — the
-    * same quantizer-coherence race [[admitBatchImpl]] guards. */
-  private[graft] def admitDedupBatchImpl(batch: DataFrame, batchId: Long,
-      indexPath: String, decisionsPath: String, nProbe: Int,
-      threshold: Double, vecCol: String = "embedding",
-      beforeClaim: () => Unit = () => ()): Unit = {
-    if (batch.isEmpty) return
-    val s = batch.sparkSession
-    val f = fs(s, indexPath)
-    if (f.exists(new Path(indexPath, s"_COMMIT_batch_$batchId"))) return // replay
-    val base = currentBase(s, indexPath)
-    val cs = IvfIndex.loadCentroids(s, basePath(indexPath, base))
-    require(cs.nonEmpty, s"admitDedupBatch: empty quantizer at $indexPath " +
-      s"base v${base.version} — the base was built on an empty corpus; rebuild")
-    val assigned = listsOf(s, indexPath, base)
-      .select(col("vec_id").as("a_id"), col(vecCol).as("a_emb"),
-        col("centroid_id").as("cid"))
-    // same width tripwire as admitBatch — a mismatched vector would be
-    // dedup-judged on a truncated cosine AND poison the lists
-    val decisions = graft.ext.Similarity.semanticDedupAgainstAssigned(
-        IvfIndex.requireDims(batch, vecCol, cs.head.length)
-          .withColumnRenamed(vecCol, "embedding"), assigned, cs,
-        nProbe, threshold)
-      .localCheckpoint() // judged against the PRE-append index, then reused
-    decisions.write.mode("overwrite")
-      .parquet(s"$decisionsPath/batch=$batchId")
-    val admitted = batch.join(
-      decisions.filter(col("kept") === 1L).select(col("vec_id")),
-      Seq("vec_id"), "left_semi")
-    // a fully-evicted batch commits its marker with no lists dir
-    // (listsOf skips missing batch roots); a non-empty one commits
-    // through [[StagedCommit]] like every versioned writer here
-    val marker = new Path(indexPath, s"_COMMIT_batch_$batchId")
-    if (admitted.isEmpty)
-      f.create(marker, true).close()
-    else {
-      // same quantizer-coherence tripwire as [[admitBatchImpl]]: the
-      // decisions AND the assignment above used the base resolved at
-      // entry — a concurrent compact committing a new base mid-admission
-      // would publish old-quantizer centroid_ids into the new read view
-      val outcome = StagedCommit.commitOutcome(
-        p => IvfIndex.writeLists(
-          admitted.withColumn("centroid_id",
-            NearestCentroidExpr.nearestCentroid(col(vecCol), cs)), p),
-        f, s.sparkContext.hadoopConfiguration,
-        s"$indexPath/b$batchId", marker,
-        beforeClaim = beforeClaim,
-        abortIf = () => currentBase(s, indexPath) != base)
-      // The decisions artifact is published BEFORE the commit and is
-      // NEVER retracted — by any outcome. Marker ⇒ decisions-present
-      // must hold unconditionally, and an abort here cannot prove no
-      // same-id twin is mid-commit: a twin that claimed before a
-      // retrain landed commits its marker moments after OUR tripwire
-      // fires, so deleting "our" decisions on abort would strip the
-      // artifact the twin's marker is about to rely on, permanently
-      // (the marker makes the batch a replay no-op — no retry would
-      // ever restore it). Lingering judgments for a batch that never
-      // commits are exactly what a CRASH between the decisions write
-      // and the marker already leaves behind, so readers must already
-      // gate decisions/batch=N on _COMMIT_batch_N — an abort reuses
-      // that contract, and the engine's retry overwrites the dir with
-      // fresh judgments anyway. Causes are TYPED ([[StagedCommit
-      // .Outcome]]), never re-probed post hoc: see [[admitBatchImpl]].
-      outcome match {
-        case StagedCommit.Outcome.Committed
-           | StagedCommit.Outcome.RacerCommitted => ()
-        case StagedCommit.Outcome.Tripped =>
-          throw new IllegalStateException(
-            s"admitDedupBatch($batchId): the committed base changed " +
-              "mid-admission (a concurrent retrain/compact on this " +
-              "index tree) — the staged assignment used the old " +
-              "quantizer and was discarded; retry the batch to " +
-              "re-judge and re-assign under the new base")
-        case StagedCommit.Outcome.LostClaim =>
-          throw new IllegalStateException(
-            s"admitDedupBatch($batchId): lost the claim to a " +
-              "concurrent same-id writer whose marker is still pending " +
-              "— retry the batch (it no-ops once the twin's marker " +
-              "lands, or rescues the batch if the twin crashed)")
-      }
-    }
-  }
-
-  /** The streaming writer for dedup-on-admission. */
-  def dedupIndexStream(embeddings: DataFrame, indexPath: String,
-      decisionsPath: String, checkpointDir: String, nProbe: Int,
-      threshold: Double, vecCol: String = "embedding")
-      : org.apache.spark.sql.streaming.DataStreamWriter[Row] =
-    embeddings.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admitDedupBatch(batch, batchId, indexPath, decisionsPath, nProbe,
-          threshold, vecCol)
-      }
 }

@@ -19,7 +19,7 @@ import graft.ext.{Dedup, TextStats}
   * [[graft.ext.TextStats.ngramContaminationAgainst]]).
   *
   * Exactly-once: benchmark admissions use the standard versioned-dir +
-  * marker commit ([[DocIndexStreaming.admitBatch]]'s contract — the
+  * marker commit ([[DocIndexStreaming]]'s contract — the
   * distinct-n-gram set merges by union-distinct, so each version
   * rewrites the index; replays no-op). Scoring is STATELESS per batch,
   * so its exactly-once is overwrite-by-batch-dir: a replayed batch
@@ -127,18 +127,6 @@ object ContaminationStreaming {
       new Path(indexPath, s"_COMMIT_v$batchId"))
     ()
   }
-
-  /** The streaming writer for benchmark admissions: an evaluation-set
-    * stream (text) folded into the persisted distinct-n-gram index per
-    * batch. */
-  def benchmarkStream(evalDocs: DataFrame, indexPath: String,
-      checkpointDir: String, n: Int)
-      : org.apache.spark.sql.streaming.DataStreamWriter[Row] =
-    evalDocs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admitBenchmarkBatch(batch, batchId, indexPath, n)
-      }
 
   /** Score one training batch (doc_id, text) against the CURRENT
     * committed benchmark index — stateless, so callers can run it any

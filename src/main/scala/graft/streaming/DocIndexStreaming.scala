@@ -2,44 +2,36 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.ext.Dedup
-
-/** Streaming maintenance of the span fingerprint index — the d71
-  * admit→append→probe lifecycle run forever over a document stream
-  * (the streaming face of incremental span dedup, the way
-  * [[EventsStreaming.mergeToLake]] is the streaming face of the MERGE
-  * sink): each micro-batch probes the CURRENT index for duplicated
-  * spans (against archive + in-batch counts), emits them, and is then
-  * ADMITTED — its window counts merged into a NEW index version.
+/** Streaming maintenance of the BM25 postings index — the s24 family's
+  * persisted-index posture run forever over a document stream: each
+  * micro-batch's postings land as their OWN immutable `b<batchId>` root
+  * and the reader unions the committed roots; [[compactPostings]] folds
+  * them into one `c<id>` root so the union stays bounded on a
+  * long-lived stream.
   *
-  * Exactly-once contract, spelled out (a naive
-  * read-append-overwrite breaks in two ways):
-  *   - the index lives in VERSIONED directories (`v<batchId>`) whose
-  *     commit point is the creation of a `_COMMIT_v<batchId>` marker
-  *     file, written LAST — file creation is atomic, so a crash
-  *     mid-write leaves the previous marker authoritative and readers
-  *     never see a partial index (no delete-then-rename window);
+  * Exactly-once contract, spelled out (a naive read-append-overwrite
+  * breaks in two ways):
+  *   - every root is committed by CREATING a marker file
+  *     (`_COMMIT_v<batchId>` for a batch, `_COMMIT_c<id>` for a fold),
+  *     written LAST through [[StagedCommit]] — file creation is atomic,
+  *     so a crash mid-write leaves the previous markers authoritative
+  *     and readers never see a partial root (no delete-then-rename
+  *     window);
   *   - a REPLAYED batch (foreachBatch redelivery after a crash between
-  *     the index commit and the engine checkpoint) detects its own
-  *     version already committed and skips the append — without this,
-  *     the replay would probe an index that already contains the
-  *     batch's windows and double-count them;
-  *   - per-batch span output goes to a `batch=<id>` directory written
-  *     with overwrite, so a replay rewrites identical bytes instead of
-  *     appending duplicates.
+  *     the marker and the engine checkpoint) finds its own marker
+  *     already committed and skips the write — without this, the replay
+  *     would add the batch's postings twice and inflate tf/df/BM25.
   *
-  * foreachBatch serializes batches, so the index seen by batch N
-  * contains exactly batches 0..N−1 — the d71 gate's two-batch algebra
-  * (probe ≡ from-scratch over archive ∪ batch, append ≡ rebuild)
-  * extended inductively; StreamingSpec proves the three-batch run
-  * equals the batch rebuild and the replay no-op. */
+  * [[latestVersion]] is the one reader of that marker contract; the
+  * release-delta and contamination lifecycles commit their versioned
+  * state the same way and resolve it through it.
+  *
+  * foreachBatch serializes batches, so the index seen after batch N
+  * holds exactly batches 0..N; StreamingSpec proves the streamed index
+  * equals a from-scratch build and the replay no-op. */
 object DocIndexStreaming {
-
-  private val indexSchema = StructType(Seq(
-    StructField("fp", LongType), StructField("cnt", LongType)))
 
   private def fs(s: SparkSession, p: String) =
     new Path(p).getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -64,110 +56,6 @@ object DocIndexStreaming {
     }
   }
 
-  /** The current committed index (empty relation before any commit). */
-  def currentIndex(s: SparkSession, indexPath: String): DataFrame =
-    latestVersion(s, indexPath) match {
-      case Some(v) => s.read.schema(indexSchema).parquet(s"$indexPath/v$v")
-      case None    => graft.LocalTable.of(s, indexSchema, Seq.empty[Row])
-    }
-
-  /** One admission: probe the committed index, emit the batch's
-    * duplicated spans to `spansPath/batch=<id>`, merge the batch's
-    * window counts into version `v<batchId>`, commit the pointer.
-    * Idempotent per batchId (see class doc). Public so the spec can
-    * drive and replay it without a streaming engine. */
-  def admitBatch(batch: DataFrame, batchId: Long, indexPath: String,
-      spansPath: String, windowTokens: Int): Unit = {
-    if (batch.isEmpty) return
-    val s = batch.sparkSession
-    val f = fs(s, indexPath)
-    val versionDir = new Path(indexPath, s"v$batchId")
-    val committed = latestVersion(s, indexPath)
-    if (committed.exists(_ >= batchId)) return // replay of an admitted batch
-    val index = currentIndex(s, indexPath)
-    Dedup.incrementalSpans(batch, index, windowTokens)
-      .write.mode("overwrite").parquet(s"$spansPath/batch=$batchId")
-    // commit = [[StagedCommit]] (stage → claim-by-rename → marker): a
-    // crash anywhere before the marker leaves the previous commit
-    // authoritative, and a racing same-id writer from a second session
-    // can never clobber a committed version dir
-    StagedCommit.commit(
-      p => Dedup.appendToFingerprintIndex(index, batch, windowTokens)
-        .write.mode("overwrite").parquet(p),
-      f, s.sparkContext.hadoopConfiguration,
-      versionDir.toString, new Path(indexPath, s"_COMMIT_v$batchId"))
-    ()
-  }
-
-  /** The streaming writer: wire a document stream (doc_id, text) into
-    * per-batch admission. Callers own trigger/start. */
-  def spanIndexStream(docs: DataFrame, indexPath: String, spansPath: String,
-      checkpointDir: String, windowTokens: Int)
-      : org.apache.spark.sql.streaming.DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admitBatch(batch, batchId, indexPath, spansPath, windowTokens)
-      }
-
-  // ---- boilerplate membership index (the d73 family's streaming twin) --
-
-  private val bpIndexSchema = StructType(Seq(
-    StructField("source", org.apache.spark.sql.types.StringType),
-    StructField("fp", LongType), StructField("dd", LongType)))
-
-  /** The committed boilerplate index (empty before any commit):
-    * per-(source, fp) distinct-doc membership counts. */
-  def currentBpIndex(s: SparkSession, indexPath: String): DataFrame =
-    latestVersion(s, indexPath) match {
-      case Some(v) => s.read.schema(bpIndexSchema).parquet(s"$indexPath/v$v")
-      case None    => graft.LocalTable.of(s, bpIndexSchema, Seq.empty[Row])
-    }
-
-  /** One admission for the boilerplate lifecycle: scrub the batch's
-    * documents against archive ∪ batch membership counts (the archive
-    * seen only through the committed index), emit the scrubbed docs to
-    * `scrubbedPath/batch=<id>`, merge the batch's counts into version
-    * `v<batchId>`, commit the marker. Same exactly-once contract as
-    * [[admitBatch]] (versioned dirs, marker-file commit, replay no-op,
-    * overwrite-by-batch-dir output). Forward-only semantics: documents
-    * emitted by earlier batches are never rewritten when a window later
-    * crosses the threshold — see
-    * [[graft.ext.Dedup.incrementalBoilerplateScrub]]. */
-  def admitBoilerplateBatch(batch: DataFrame, batchId: Long,
-      indexPath: String, scrubbedPath: String, windowTokens: Int,
-      minDocs: Long): Unit = {
-    if (batch.isEmpty) return
-    val s = batch.sparkSession
-    val f = fs(s, indexPath)
-    val versionDir = new Path(indexPath, s"v$batchId")
-    val committed = latestVersion(s, indexPath)
-    if (committed.exists(_ >= batchId)) return // replay of an admitted batch
-    val index = currentBpIndex(s, indexPath)
-    Dedup.incrementalBoilerplateScrub(batch, index, windowTokens, minDocs)
-      .write.mode("overwrite").parquet(s"$scrubbedPath/batch=$batchId")
-    StagedCommit.commit(
-      p => Dedup.appendToBoilerplateIndex(index, batch, windowTokens)
-        .write.mode("overwrite").parquet(p),
-      f, s.sparkContext.hadoopConfiguration,
-      versionDir.toString, new Path(indexPath, s"_COMMIT_v$batchId"))
-    ()
-  }
-
-  /** The streaming writer for the boilerplate lifecycle: a document
-    * stream (doc_id, source, text) scrubbed and admitted per batch. */
-  def boilerplateStream(docs: DataFrame, indexPath: String,
-      scrubbedPath: String, checkpointDir: String, windowTokens: Int,
-      minDocs: Long): org.apache.spark.sql.streaming.DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admitBoilerplateBatch(batch, batchId, indexPath, scrubbedPath,
-          windowTokens, minDocs)
-      }
-
-  // ---- postings index (the s24 family's streaming twin) ----------------
-
   private val postingsSchema = StructType(Seq(
     StructField("doc_id", LongType),
     StructField("term", org.apache.spark.sql.types.StringType),
@@ -176,9 +64,9 @@ object DocIndexStreaming {
   /** The committed postings index: the latest committed COMPACTED root
     * (if any) unioned with every committed batch root newer than it.
     * Under the disjoint-doc admission contract an append is a PURE
-    * UNION ([[graft.ext.Retrieval.appendToPostings]]), so — unlike the
-    * count indexes above, which must rewrite merged counts per
-    * version — each batch's postings land as their OWN immutable
+    * UNION ([[graft.ext.Retrieval.appendToPostings]]), so — unlike a
+    * count index, which must rewrite merged counts per version — each
+    * batch's postings land as their OWN immutable
     * `b<batchId>` directory (a plain INSERT through a table format) and
     * the reader unions the committed roots. Per-root reads, not one
     * multi-path read (the multi-root lesson from
@@ -187,7 +75,7 @@ object DocIndexStreaming {
     * every query's plan even though each leg is tiny — so production
     * runs a periodic compaction and the reader's recent-batch union
     * stays bounded by the compaction interval. */
-  def currentPostings(s: SparkSession, indexPath: String): DataFrame =
+  private[graft] def currentPostings(s: SparkSession, indexPath: String): DataFrame =
     readPostingsRoots(s, rootPaths(indexPath, postingsRoots(s, indexPath)))
 
   /** Reader-view roots for ONE directory listing: the latest committed
@@ -309,9 +197,9 @@ object DocIndexStreaming {
   /** One postings admission: tokenize+aggregate the batch and write its
     * postings as the immutable `b<batchId>` root, commit the marker.
     * Nothing else updates — every BM25 corpus statistic (df, dl, N,
-    * avgdl) re-derives from the postings aggregate at query time. Same
-    * exactly-once contract as [[admitBatch]] (marker-file commit, replay
-    * no-op, overwrite-by-batch-dir). */
+    * avgdl) re-derives from the postings aggregate at query time.
+    * Exactly-once per the object doc: staged write, marker commit,
+    * replay no-op. */
   def admitPostingsBatch(batch: DataFrame, batchId: Long,
       indexPath: String): Unit = {
     if (batch.isEmpty) return
@@ -358,115 +246,4 @@ object DocIndexStreaming {
         }
       }
   }
-
-  // ---- LM bigram-count model (the d85 lifecycle's streaming twin) ------
-
-  private val lmSchema = StructType(Seq(
-    StructField("bg", org.apache.spark.sql.types.StringType),
-    StructField("c12", LongType)))
-
-  /** The committed LM model (empty before any commit): reference bigram
-    * counts. Candidates score on demand via
-    * `TextStats.ngramLmScoreFromCounts(currentLmCounts(...), ...)` —
-    * reference text never re-read after admission. */
-  def currentLmCounts(s: SparkSession, countsPath: String): DataFrame =
-    latestVersion(s, countsPath) match {
-      case Some(v) => s.read.schema(lmSchema).parquet(s"$countsPath/v$v")
-      case None    => graft.LocalTable.of(s, lmSchema, Seq.empty[Row])
-    }
-
-  /** One model admission: sum-merge the reference batch's bigram counts
-    * into version `v<batchId>` (counts merge, so the version REWRITES
-    * the model — the fingerprint-index pattern, not the postings pure
-    * union), commit the marker. Same exactly-once contract as
-    * [[admitBatch]]. */
-  def admitLmBatch(batch: DataFrame, batchId: Long,
-      countsPath: String): Unit = {
-    if (batch.isEmpty) return
-    val s = batch.sparkSession
-    val f = fs(s, countsPath)
-    val committed = latestVersion(s, countsPath)
-    if (committed.exists(_ >= batchId)) return // replay of an admitted batch
-    StagedCommit.commit(
-      p => graft.ext.TextStats
-        .appendToLmCounts(currentLmCounts(s, countsPath), batch)
-        .write.mode("overwrite").parquet(p),
-      f, s.sparkContext.hadoopConfiguration,
-      s"$countsPath/v$batchId",
-      new Path(countsPath, s"_COMMIT_v$batchId"))
-    ()
-  }
-
-  /** The streaming writer for the LM-model lifecycle: a reference
-    * document stream (text) folded into the persisted bigram counts per
-    * batch. */
-  def lmCountsStream(reference: DataFrame, countsPath: String,
-      checkpointDir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[Row] =
-    reference.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admitLmBatch(batch, batchId, countsPath)
-      }
-
-  // ---- token-budget admission (the d84 lifecycle's streaming twin) -----
-
-  private val spentSchema = StructType(Seq(StructField("spent", LongType)))
-
-  /** Tokens spent by all committed admissions (0 before any commit) —
-    * the ONE long of carried state the budget lifecycle needs (the
-    * watermark pattern; nothing archive-sized is ever rescanned). */
-  def currentSpent(s: SparkSession, statePath: String): Long =
-    latestVersion(s, statePath) match {
-      case Some(v) => s.read.schema(spentSchema).parquet(s"$statePath/v$v")
-        .collect()(0).getLong(0)
-      case None => 0L
-    }
-
-  /** One budget admission: greedily fill whatever budget the committed
-    * admissions left ([[graft.ext.TextStats.tokenBudgetSelect]] over the
-    * batch — strict-prefix contract within the batch), write the
-    * admitted rows to `admittedPath/batch=<id>`, advance the spent-token
-    * state to version `v<batchId>`, commit the marker. The spent
-    * increment is summed from the parquet actually written, so the state
-    * always matches the committed admission byte-for-byte. Same
-    * exactly-once contract as [[admitBatch]]; arrival-order dependence
-    * is the documented lifecycle trade
-    * ([[graft.ext.TextStats.budgetAdmitLifecycle]]). */
-  def admitBudgetBatch(batch: DataFrame, batchId: Long, statePath: String,
-      admittedPath: String, budget: Long): Unit = {
-    require(budget >= 0, "budget must be non-negative")
-    if (batch.isEmpty) return
-    val s = batch.sparkSession
-    val f = fs(s, statePath)
-    val committed = latestVersion(s, statePath)
-    if (committed.exists(_ >= batchId)) return // replay of an admitted batch
-    val spent = currentSpent(s, statePath)
-    val outDir = s"$admittedPath/batch=$batchId"
-    graft.ext.TextStats.tokenBudgetSelect(batch, math.max(0L, budget - spent))
-      .select(lit(batchId).as("batch_id"), col("doc_id"), col("quality"),
-        col("n_tokens"), col("cum_tokens"))
-      .write.mode("overwrite").parquet(outDir)
-    val add = s.read.parquet(outDir)
-      .agg(coalesce(sum(col("n_tokens")), lit(0L))).collect()(0).getLong(0)
-    StagedCommit.commit(
-      p => graft.LocalTable.of(s, spentSchema, Seq(Row(spent + add)))
-        .coalesce(1).write.mode("overwrite").parquet(p),
-      f, s.sparkContext.hadoopConfiguration,
-      s"$statePath/v$batchId",
-      new Path(statePath, s"_COMMIT_v$batchId"))
-    ()
-  }
-
-  /** The streaming writer for the budget lifecycle: a document stream
-    * (doc_id, text) admitted per batch against the remaining corpus
-    * token budget. */
-  def budgetAdmitStream(docs: DataFrame, statePath: String,
-      admittedPath: String, checkpointDir: String, budget: Long)
-      : org.apache.spark.sql.streaming.DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admitBudgetBatch(batch, batchId, statePath, admittedPath, budget)
-      }
 }

@@ -26,8 +26,8 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * (the disjoint-doc admission contract every index lifecycle here
   * relies on); a doc re-delivered in a later batch would double-count.
   * Exactly-once versus engine replays is the standard marker contract
-  * of [[DocIndexStreaming.admitBatch]]: versioned state dirs, marker
-  * commit, replayed batches no-op.
+  * of [[DocIndexStreaming]]: versioned state dirs, marker commit,
+  * replayed batches no-op.
   *
   * Scale shape: per batch, ONE doc_id-keyed left join (batch side is
   * micro-batch-sized; v1 shuffles once per batch — callers with a big
@@ -120,7 +120,7 @@ object ReleaseDeltaStreaming {
     * `v<batchId>`, commit the marker. Counts MERGE (sums), so each
     * version REWRITES the sources-sized state — the fingerprint-index
     * pattern, not the postings pure union. Same exactly-once contract
-    * as [[DocIndexStreaming.admitBatch]]. Public so specs and
+    * as [[DocIndexStreaming]]. Public so specs and
     * hand-driven lifecycles can replay it without a streaming engine. */
   def admitBatch(batch: DataFrame, batchId: Long, v1: DataFrame,
       statePath: String): Unit = {

@@ -562,29 +562,6 @@ class DedupSpec extends SparkSpec {
     assert(!Dedup.incrementalSpans(probe, grown, windowTokens = 3).isEmpty)
   }
 
-  test("retractFromBoilerplateIndex: exact inverse of append under the admit-once contract") {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("source", StringType),
-      StructField("text", StringType)))
-    def docs(rs: (Long, String, String)*) = LocalTable.of(spark, schema,
-      rs.map { case (i, s, t) => Row(i, s, t) })
-    val archive = docs((1L, "srcA", "h1 h2 h3 body"),
-      (2L, "srcB", "h1 h2 h3 other"))
-    val removed = docs((5L, "srcA", "h1 h2 h3 gone"),
-      (6L, "srcA", "r1 r2 r3 x"))
-    def rows(ix: org.apache.spark.sql.DataFrame) =
-      ix.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    val grown = Dedup.appendToBoilerplateIndex(
-      Dedup.boilerplateIndex(archive, 3), removed, windowTokens = 3)
-    val back = Dedup.retractFromBoilerplateIndex(grown, removed, windowTokens = 3)
-    // shared (srcA, h1h2h3) decrements 2 → 1; removed-only fps VANISH
-    assert(rows(back) === rows(Dedup.boilerplateIndex(archive, 3)))
-    // full retraction empties the index
-    assert(Dedup.retractFromBoilerplateIndex(grown,
-      archive.unionByName(removed), windowTokens = 3).isEmpty)
-  }
-
   test("admitBoilerplateBatch: fused scrub+append equals the public pair; batch windows computed once") {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     val schema = StructType(Seq(
@@ -606,7 +583,8 @@ class DedupSpec extends SparkSpec {
       windowTokens = 3, minDocs = 2)
     val scrubbedPair = Dedup.incrementalBoilerplateScrub(batch, idx,
       windowTokens = 3, minDocs = 2)
-    val appendedPair = Dedup.appendToBoilerplateIndex(idx, batch, windowTokens = 3)
+    // admit-once counts add, so the appended index equals a rebuild
+    val appendedPair = Dedup.boilerplateIndex(archive.unionByName(batch), 3)
     def texts(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getString(1))).toSet
     def counts(df: org.apache.spark.sql.DataFrame) =
@@ -678,19 +656,6 @@ class DedupSpec extends SparkSpec {
     assert(got.nonEmpty) // the real corpus has cross-split duplicated spans
   }
 
-  test("dedupDocuments keeps representatives and singletons, drops the rest") {
-    val docs = strDf(
-      (1L, "alpha beta gamma delta epsilon zeta"),
-      (2L, "alpha beta gamma delta epsilon zeta"),
-      (3L, "alpha beta gamma delta epsilon zeta"),
-      (10L, "unique first document body here today"),
-      (11L, "another entirely distinct body of text"))
-    val pairs = Dedup.minhashNearDupPairs(docs, 3, 96, 48, 2, 0.5)
-    val kept = Dedup.dedupDocuments(docs, pairs.select("doc_a", "doc_b"))
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(kept === Set(1L, 10L, 11L))
-  }
-
   test("null text: excluded from pairs, labeled as singleton — never a throw or wrong row") {
     val df = strDf((1L, "alpha beta gamma delta"), (2L, "alpha beta gamma delta"))
       .union(LocalTable.of(spark,
@@ -705,31 +670,6 @@ class DedupSpec extends SparkSpec {
       .select(col("doc_id"), coalesce(col("component"), col("doc_id")).as("component"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labeled === Map(1L -> 1L, 2L -> 1L, 3L -> 3L))
-  }
-
-  test("appendToBandIndex: probe after append equals probe against a rebuilt index") {
-    val docs = Tables(spark, sfDir, "documents").select("doc_id", "text")
-    val batch1 = docs.filter(col("doc_id") % 3 === 0)
-    val batch2 = docs.filter(col("doc_id") % 3 === 1)
-    val incoming = docs.filter(col("doc_id") % 3 === 2)
-    val indexedDocs = docs.filter(col("doc_id") % 3 =!= 2)
-    val appended = Dedup.appendToBandIndex(
-      Dedup.minhashBandIndex(batch1, 3, 96, 48, 2), batch2, 3, 96, 48, 2)
-    val rebuilt = Dedup.minhashBandIndex(batch1.unionByName(batch2), 3, 96, 48, 2)
-    def probe(idx: org.apache.spark.sql.DataFrame) =
-      Dedup.minhashProbePairs(incoming, indexedDocs, idx, 3, 96, 48, 2, 0.5)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val viaAppend = probe(appended)
-    assert(viaAppend.nonEmpty, "corpus split should produce cross-batch near-dups")
-    assert(viaAppend === probe(rebuilt))
-
-    // persisted shape: two createOrAppend batches through the lake seam
-    // give the identical probe answer when read back
-    val dir = java.nio.file.Files.createTempDirectory("bandidx").toString
-    val path = s"$dir/band_index"
-    Dedup.appendToBandIndexTable(graft.lake.ParquetTableFormat, path, batch1, 3, 96, 48, 2)
-    Dedup.appendToBandIndexTable(graft.lake.ParquetTableFormat, path, batch2, 3, 96, 48, 2)
-    assert(probe(graft.lake.ParquetTableFormat.read(spark, path)) === viaAppend)
   }
 
   test("connectedComponents: reliable-checkpoint strategy agrees with localCheckpoint, incl. on graftfs://") {

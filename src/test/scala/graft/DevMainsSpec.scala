@@ -14,7 +14,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * The same source scan keeps the engine off SparkContext-global
   * checkpoint state: the reliable-vs-local lineage cut reads the
-  * session's checkpoint dir (`graft.Lineage`) and never sets it. */
+  * session's checkpoint dir (`graft.Lineage`) and never sets it, and
+  * pins the operator surface: a public operator in `ext/`,
+  * `operators/` or `streaming/` that nothing in the engine or the
+  * benchmark calls is deleted, narrowed to `private[graft]`, or listed
+  * with its reason. */
 class DevMainsSpec extends AnyFunSuite {
 
   private val allowed = Set(
@@ -48,6 +52,115 @@ class DevMainsSpec extends AnyFunSuite {
     assert(found === allowed,
       s"unexpected: ${(found -- allowed).toSeq.sorted.mkString(", ")}; " +
         s"missing: ${(allowed -- found).toSeq.sorted.mkString(", ")}")
+  }
+
+  /** Public defs that only specs and the restart soak reach, each kept
+    * on purpose. */
+  private val surfaceAllowlist = Map(
+    "Dedup.minhashNearDupCandidates" ->
+      "PlanSpec audits d07's lazy candidate plan through it",
+    "TextStats.sequencePackingAuto" ->
+      "the auto-scaling entry point: shard count from plan stats",
+    "TextStats.scoreHashedLogReg" ->
+      "PlanSpec audits the exchange-free scoring plan d35 inlines",
+    "AnnIndexStreaming.annIndexStream" ->
+      "the no-retrain ANN writer the restart soak drives")
+
+  /** `src` with comments and string literals blanked, line breaks kept —
+    * a name inside a doc link or an error message is not a caller. */
+  private def codeOnly(src: String): String = {
+    val out = new StringBuilder(src.length)
+    def blank(from: Int, until: Int): Int = {
+      var i = from
+      while (i < until) { out += (if (src(i) == '\n') '\n' else ' '); i += 1 }
+      until
+    }
+    def skipString(from: Int): Int = { // from: index of the opening quote
+      if (src.startsWith("\"\"\"", from)) {
+        var end = src.indexOf("\"\"\"", from + 3) + 3
+        while (end < src.length && src(end) == '"') end += 1
+        end
+      } else {
+        var i = from + 1
+        while (src(i) != '"' && src(i) != '\n') i += (if (src(i) == '\\') 2 else 1)
+        i + 1
+      }
+    }
+    var i = 0
+    while (i < src.length) {
+      if (src.startsWith("//", i)) {
+        val nl = src.indexOf('\n', i)
+        i = blank(i, if (nl < 0) src.length else nl)
+      } else if (src.startsWith("/*", i)) {
+        var depth = 1; var j = i + 2
+        while (depth > 0) {
+          if (src.startsWith("/*", j)) { depth += 1; j += 2 }
+          else if (src.startsWith("*/", j)) { depth -= 1; j += 2 }
+          else j += 1
+        }
+        i = blank(i, j)
+      } else if (src(i) == '"') i = blank(i, skipString(i))
+      else if (src(i) == '\'' && i + 2 < src.length &&
+          (src(i + 2) == '\'' || src(i + 1) == '\\'))
+        i = blank(i, src.indexOf('\'', if (src(i + 1) == '\\') i + 3 else i + 2) + 1)
+      else { out += src(i); i += 1 }
+    }
+    out.toString
+  }
+
+  private val Token = """[{}]|\bdef\s+([A-Za-z_]\w*)""".r
+  private val TemplateHead = """\b(object|class|trait)\s+\w+""".r
+  private val Hidden = """\b(private|protected|override)\b""".r
+
+  /** (`Object.name`, name) of every public, non-override member def:
+    * every enclosing brace opens a non-private object, class or trait
+    * (a def inside a method body or a `new` block is local). */
+  private def publicDefs(code: String): Seq[(String, String)] = {
+    val enclosing = scala.collection.mutable.Stack.empty[Option[String]]
+    Token.findAllMatchIn(code).toSeq.flatMap { m =>
+      m.matched match {
+        case "{" =>
+          val head = code.substring(
+            Seq(';', '{', '}', '=').map(code.lastIndexOf(_, m.start - 1)).max + 1,
+            m.start)
+          val template = TemplateHead.findFirstMatchIn(head)
+            .filter(_ => !head.contains("new ") && Hidden.findFirstIn(head).isEmpty)
+          enclosing.push(template.map(_.matched.split("\\s+").last))
+          Nil
+        case "}" => enclosing.pop(); Nil
+        case _ =>
+          val line = code.substring(code.lastIndexOf('\n', m.start) + 1, m.start)
+          if (enclosing.isEmpty || enclosing.exists(_.isEmpty) ||
+              Hidden.findFirstIn(line).isDefined) Nil
+          else Seq((s"${enclosing.top.get}.${m.group(1)}", m.group(1)))
+      }
+    }
+  }
+
+  test("every public operator in ext, operators and streaming has a caller in the engine or the benchmark, or an allowlisted reason") {
+    val code = (scalaSources(Paths.get("src/main/scala")) ++
+        scalaSources(Paths.get("perfbench/src")))
+      .map(f => f -> codeOnly(Files.readString(f))).toMap
+    val defs = code.toSeq
+      .filter { case (f, _) =>
+        """/graft/(ext|operators|streaming)/""".r.findFirstIn(f.toString).isDefined }
+      .flatMap { case (_, c) => publicDefs(c) }
+    // a name is used where it appears as a whole token, minus its def sites
+    def counts(tokens: Iterator[String]) =
+      tokens.toSeq.groupBy(identity).view.mapValues(_.size).toMap
+    val tokens = counts(code.values.iterator.flatMap("""[\w$]+""".r.findAllIn(_)))
+    val defSites = counts(code.values.iterator.flatMap(c =>
+      """\bdef\s+([\w$]+)""".r.findAllMatchIn(c).map(_.group(1))))
+    val uncalled = defs.collect {
+      case (q, n) if tokens.getOrElse(n, 0) == defSites.getOrElse(n, 0) => q
+    }.toSet
+    val unlisted = (uncalled -- surfaceAllowlist.keySet).toSeq.sorted
+    val stale = (surfaceAllowlist.keySet -- uncalled).toSeq.sorted
+    assert(surfaceAllowlist.size < 10)
+    assert(unlisted.isEmpty, "public defs with no caller in src/main or " +
+      s"perfbench/src: ${unlisted.mkString(", ")}")
+    assert(stale.isEmpty, "allowlisted defs that now have a caller or are " +
+      s"gone: ${stale.mkString(", ")}")
   }
 
   test("no file under src/main sets the checkpoint dir") {

@@ -102,27 +102,13 @@ class MultimodalSpec extends SparkSpec {
     bos.toByteArray
   }
 
-  test("resizeImage scales a real PNG; resizeImages runs the batch shape") {
+  test("resizeImage scales a real PNG") {
     val resized = Multimodal.MediaTransforms.resizeImage(pngBytes(4, 2, 0xFF0000), 2, 1)
     val back = javax.imageio.ImageIO.read(
       new java.io.ByteArrayInputStream(resized.get))
     assert(back.getWidth === 2 && back.getHeight === 1)
     assert((back.getRGB(0, 0) & 0xFFFFFF) === 0xFF0000) // color survives
     assert(Multimodal.MediaTransforms.resizeImage("junk".getBytes, 2, 2).isEmpty)
-
-    val media = LocalTable.of(spark,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("media",
-          org.apache.spark.sql.types.BinaryType))),
-      Seq(org.apache.spark.sql.Row(1L, pngBytes(8, 8, 0x00FF00)),
-        org.apache.spark.sql.Row(2L, "not-an-image".getBytes)))
-    val out = Multimodal.resizeImages(media, 4, 4)
-      .orderBy("doc_id").collect()
-    assert(out(0).getAs[Array[Byte]]("resized") != null)
-    assert(out(1).isNullAt(1)) // undecodable → null, batch survives
-    assert(out(0).getAs[Int]("out_w") === 4)
   }
 
   test("sampleFrames strides through a real animated GIF") {
@@ -154,7 +140,7 @@ class MultimodalSpec extends SparkSpec {
     assert(Multimodal.MediaTransforms.sampleFrames("junk".getBytes, 1).isEmpty)
   }
 
-  test("mediaIncrementalDedup: archive hit, in-batch keep-first, fresh admit; append equals rebuild") {
+  test("mediaIncrementalDedup: archive hit, in-batch keep-first, fresh admit") {
     import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("media", BinaryType)))
@@ -171,12 +157,6 @@ class MultimodalSpec extends SparkSpec {
       .toMap
     assert(out === Map(10L -> ((true, false)), 11L -> ((false, true)),
       12L -> ((false, false)), 13L -> ((false, true))))
-    // append ≡ rebuild: union-distinct of hashes is idempotent set union
-    val admitted = batch.filter(col("doc_id").isin(11L, 13L))
-    def hashes(ix: org.apache.spark.sql.DataFrame) =
-      ix.collect().map(_.getString(0)).toSet
-    assert(hashes(Multimodal.appendToMediaHashIndex(idx, admitted)) ===
-      hashes(Multimodal.mediaHashIndex(archive.unionByName(admitted))))
   }
 
   test("n_bytes matches the text byte length end-to-end") {
@@ -187,108 +167,6 @@ class MultimodalSpec extends SparkSpec {
       .select(col("n_bytes"), length(col("text")).cast("long").as("tl"))
       .collect()
     assert(joined.forall(r => r.getLong(0) === r.getLong(1)))
-  }
-
-  /** Half-dark / half-bright test card; `shift` brightens uniformly,
-    * `invert` swaps the halves. */
-  private def cardPng(w: Int, h: Int, shift: Int = 0,
-      invert: Boolean = false): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(w, h,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    (0 until w).foreach { x =>
-      (0 until h).foreach { y =>
-        val bright = (x >= w / 2) != invert
-        val v = (if (bright) 200 else 40) + shift
-        img.setRGB(x, y, (v << 16) | (v << 8) | v)
-      }
-    }
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    bos.toByteArray
-  }
-
-  private def hamming(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
-
-  test("perceptualHash: brightness- and scale-invariant, far from a different image") {
-    val ph = Multimodal.MediaTransforms.perceptualHash _
-    val a = ph(cardPng(16, 16)).get
-    assert(ph(cardPng(16, 16)).get === a, "deterministic for identical bytes")
-    // +10 uniform brightness moves every pixel AND the mean — bits survive
-    assert(hamming(a, ph(cardPng(16, 16, shift = 10)).get) <= 2)
-    // the same card at 2x resolution hashes the same 8x8 structure
-    assert(hamming(a, ph(cardPng(32, 32)).get) <= 2)
-    // the inverted card flips the structured bits
-    assert(hamming(a, ph(cardPng(16, 16, invert = true)).get) >= 32)
-    assert(ph("not an image".getBytes).isEmpty)
-    // a uniform image has no above-mean pixel: all-zero signature
-    assert(ph(pngBytes(8, 8, 0x808080)).get === 0L)
-  }
-
-  test("mediaNearDupPairs: banded aHash pairing finds the perceptual dup only") {
-    val media = LocalTable.of(spark,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("media",
-          org.apache.spark.sql.types.BinaryType))),
-      Seq(org.apache.spark.sql.Row(1L, cardPng(16, 16)),
-        org.apache.spark.sql.Row(2L, cardPng(16, 16, shift = 10)),
-        org.apache.spark.sql.Row(3L, cardPng(16, 16, invert = true)),
-        org.apache.spark.sql.Row(4L, "junk-not-an-image".getBytes)))
-    val pairs = Multimodal.mediaNearDupPairs(media, maxHamming = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs === Set((1L, 2L)),
-      "re-brightened card pairs; inverted card and undecodable junk do not")
-  }
-
-  /** Mono 16-bit PCM WAV from a sample generator (sample index → value). */
-  private def wavBytes(n: Int, gen: Int => Short): Array[Byte] = {
-    val pcm = java.nio.ByteBuffer.allocate(n * 2)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    (0 until n).foreach(i => pcm.putShort(gen(i)))
-    val fmt = new javax.sound.sampled.AudioFormat(8000f, 16, 1, true, false)
-    val ais = new javax.sound.sampled.AudioInputStream(
-      new java.io.ByteArrayInputStream(pcm.array()), fmt, n.toLong)
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.sound.sampled.AudioSystem.write(ais,
-      javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-    bos.toByteArray
-  }
-
-  test("audioEnergyHash: gain-invariant envelope bits; contour changes flip them") {
-    val ah = Multimodal.MediaTransforms.audioEnergyHash _
-    // loud first half, quiet second half — a clean envelope
-    def halfLoud(scale: Double)(i: Int): Short =
-      (if (i < 640) 16000 * scale else 800 * scale).toShort
-    val a = ah(wavBytes(1280, halfLoud(1.0))).get
-    assert(ah(wavBytes(1280, halfLoud(1.0))).get === a, "deterministic")
-    // uniform gain change: same envelope shape → same hash
-    assert(ah(wavBytes(1280, halfLoud(0.5))).get === a)
-    // reversed contour (quiet then loud) flips the structured bits
-    val rev = ah(wavBytes(1280, i => halfLoud(1.0)(1279 - i))).get
-    assert(java.lang.Long.bitCount(a ^ rev) >= 32)
-    // undecodable and too-short payloads yield no hash
-    assert(ah("junk".getBytes).isEmpty)
-    assert(ah(wavBytes(32, _ => 100)).isEmpty)
-  }
-
-  test("audioNearDupPairs: banded pairing finds the re-gained clip only") {
-    def halfLoud(scale: Double)(i: Int): Short =
-      (if (i < 640) 16000 * scale else 800 * scale).toShort
-    val media = LocalTable.of(spark,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("media",
-          org.apache.spark.sql.types.BinaryType))),
-      Seq(org.apache.spark.sql.Row(1L, wavBytes(1280, halfLoud(1.0))),
-        org.apache.spark.sql.Row(2L, wavBytes(1280, halfLoud(0.25))),
-        org.apache.spark.sql.Row(3L, wavBytes(1280, i => halfLoud(1.0)(1279 - i))),
-        org.apache.spark.sql.Row(4L, "not-audio".getBytes)))
-    val pairs = Multimodal.audioNearDupPairs(media, maxHamming = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs === Set((1L, 2L)),
-      "re-gained clip pairs; reversed contour and undecodable junk do not")
   }
 
   test("mediaExactDedup: byte-identical payloads collapse to the min-id representative") {

@@ -123,13 +123,6 @@ class RetrievalSpec extends SparkSpec {
     val fresh = Retrieval.bm25TopK(corpus, q, k = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSeq
     assert(viaIndex === fresh)
-    // retraction is the exact inverse of append: anti-join back to the
-    // archive-only index, and a retracted-everything index is empty
-    val back = Retrieval.retractFromPostings(grown,
-      batch.select(col("doc_id")))
-    assert(rows(back) === rows(Retrieval.postings(archive)))
-    assert(Retrieval.retractFromPostings(grown,
-      corpus.select(col("doc_id"))).isEmpty)
   }
 
   test("rrfFuse: hand-checked fusion of overlapping and disjoint rankings") {

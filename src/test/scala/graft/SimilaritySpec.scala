@@ -279,59 +279,6 @@ class SimilaritySpec extends SparkSpec {
     assert(model.subDim === 8)
   }
 
-  test("cosineNearDupPairsLsh: exact pair recovery on planted near-dups, candidates stay linear") {
-    // near-dup regime: tight clusters (cos ≈ 0.999 within, ≈ 0 across)
-    // plus unclustered background — the shape embedding dedup faces
-    val rnd = new scala.util.Random(7)
-    def unit(v: Array[Float]): Array[Float] = {
-      val n = math.sqrt(v.map(x => x.toDouble * x).sum).toFloat
-      v.map(_ / n)
-    }
-    val centers = Array.fill(3)(unit(Array.fill(64)(rnd.nextGaussian().toFloat)))
-    val dupRows = (0 until 12).map { i =>
-      val c = centers(i % 3)
-      // ~0.1% perturbation keeps within-cluster cosine ≥ ~0.999
-      Row(i.toLong, c.map(v => v + 0.002f * rnd.nextGaussian().toFloat).toSeq, i % 3)
-    }
-    val bgRows = (100 until 300).map(i =>
-      Row(i.toLong, Array.fill(64)(rnd.nextGaussian().toFloat).toSeq, 9))
-    val schema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType)),
-      StructField("label", IntegerType)))
-    val emb = LocalTable.of(spark, schema, dupRows ++ bgRows)
-    val threshold = 0.95
-    val exact = Similarity.cosineThresholdSelfJoin(emb, threshold, grid = 4)
-      .select("vec_a", "vec_b")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(exact.size === 3 * (4 * 3 / 2), "each planted cluster yields C(4,2) pairs")
-    val lsh = Similarity.cosineNearDupPairsLsh(emb, threshold)
-    val got = lsh.select("vec_a", "vec_b")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got === exact)
-    // the scale claim: candidate volume ∝ n + dups, nowhere near n²/2
-    val n = 12 + 200
-    val candCount = {
-      // recount through the operator's own banding (candidate stage only)
-      val bandStructs = (0 until 32).map { b =>
-        struct(lit(b).as("band_id"),
-          graft.plans.HyperplaneSignatureExpr.hyperplaneSig(col("embedding"),
-            graft.plans.HyperplaneSignatureExpr.md5Signs(16, 64, s"band$b"))
-            .as("band_hash"))
-      }
-      val bandRows = emb
-        .select(col("vec_id").as("doc_id"), explode(array(bandStructs: _*)).as("band"))
-        .select(col("doc_id"), col("band.band_id").as("band_id"),
-          col("band.band_hash").as("band_hash"))
-      graft.ext.Dedup.lshCandidatePairs(bandRows).count()
-    }
-    assert(candCount < n.toLong * (n - 1) / 20,
-      s"candidates ($candCount) must be far below all-pairs (${n.toLong * (n - 1) / 2})")
-    // equi-join plan only — same audit as the text near-dup family
-    val p = lsh.queryExecution.sparkPlan.toString
-    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"))
-  }
-
   test("semanticDedup: one survivor per dense direction group, isolated vectors untouched") {
     val schema = StructType(Seq(
       StructField("vec_id", LongType), StructField("embedding", ArrayType(FloatType))))
