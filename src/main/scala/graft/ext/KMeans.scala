@@ -219,97 +219,3 @@ object IvfIndex {
       .limit(k)
   }
 }
-
-/** IVF-PQ: the composed ANN index (FAISS's IVFPQ shape) — the coarse
-  * quantizer prunes WHICH lists are read, product quantization shrinks
-  * WHAT the lists store: each vector is m one-byte codes, the embedding
-  * column never reaches the index at all. A probe therefore reads
-  * `nProbe/k` of the corpus as codes-only rows (~32× smaller than the
-  * raw vectors here) and scores them via the query's precomputed ADC
-  * tables — the I/O profile that makes billion-vector search viable. */
-object IvfPq {
-
-  final case class Model(centroids: Array[Array[Float]],
-      codebooks: Seq[Array[Array[Float]]], subDim: Int)
-
-  private def codebooksPath(path: String): String = path + ".codebooks"
-
-  /** Fit coarse quantizer + per-subspace codebooks, encode every vector,
-    * and write code-only inverted lists partitioned by centroid id. */
-  def build(vectors: DataFrame, vecCol: String, kLists: Int, iters: Int,
-      subspaces: Int, codebookSize: Int, path: String,
-      idCol: String = "vec_id"): Model = {
-    val spark = vectors.sparkSession
-    val cs = KMeans.fit(vectors, idCol, vecCol, kLists, iters)
-    val pqInit = KMeans.fit(vectors, idCol, vecCol, codebookSize, iters)
-    val dim = pqInit.head.length
-    require(dim % subspaces == 0, s"dim $dim not divisible by $subspaces")
-    val sub = dim / subspaces
-    val codebooks = (0 until subspaces).map(m => pqInit.map(_.slice(m * sub, (m + 1) * sub)))
-    val codes = array((0 until subspaces).map(m =>
-      NearestCentroidExpr.nearestCentroid(
-        slice(col(vecCol), m * sub + 1, sub), codebooks(m))): _*)
-    IvfIndex.requireDims(vectors, vecCol, dim, idCol)
-      .withColumn("centroid_id", NearestCentroidExpr.nearestCentroid(col(vecCol), cs))
-      .withColumn("codes", codes)
-      .drop(vecCol) // the lists store CODES, never the vectors — the PQ win
-      .repartition(col("centroid_id"))
-      .write.mode("overwrite").partitionBy("centroid_id").parquet(path)
-    LocalTable.of(spark,
-        StructType(Seq(
-          StructField("centroid_id", IntegerType),
-          StructField("centroid", ArrayType(FloatType)))),
-        cs.toIndexedSeq.zipWithIndex.map { case (c, i) => Row(i, c.toIndexedSeq) })
-      .coalesce(1).write.mode("overwrite").parquet(IvfIndex.centroidsPath(path))
-    LocalTable.of(spark,
-        StructType(Seq(
-          StructField("m", IntegerType), StructField("cid", IntegerType),
-          StructField("codeword", ArrayType(FloatType)))),
-        for {
-          (cb, m) <- codebooks.zipWithIndex
-          (c, j) <- cb.toIndexedSeq.zipWithIndex
-        } yield Row(m, j, c.toIndexedSeq))
-      .coalesce(1).write.mode("overwrite").parquet(codebooksPath(path))
-    Model(cs, codebooks, sub)
-  }
-
-  def loadModel(spark: SparkSession, path: String): Model = {
-    val cs = IvfIndex.loadCentroids(spark, path)
-    val rows = spark.read.parquet(codebooksPath(path))
-      .orderBy(col("m"), col("cid")).collect()
-    val codebooks = rows.groupBy(_.getInt(0)).toSeq.sortBy(_._1).map {
-      case (_, rs) => rs.sortBy(_.getInt(1)).map(_.getSeq[Float](2).toArray)
-    }
-    Model(cs, codebooks, codebooks.head.head.length)
-  }
-
-  /** Top-k ADC probe: prune to the `nProbe` nearest lists (driver model
-    * math → partition filter), score the stored codes against the
-    * query's per-subspace dot tables — the embedding column is never
-    * read because it was never written. */
-  def probe(spark: SparkSession, path: String, queryVec: Array[Float],
-      k: Int, nProbe: Int, excludeVecId: Option[Long] = None): DataFrame = {
-    val model = loadModel(spark, path)
-    val probeIds = model.centroids.zipWithIndex
-      .map { case (c, i) => (CosineSimilarityExpr.cosine(queryVec, c), i) }
-      .sortBy { case (sim, i) => (-sim, i) }
-      .take(nProbe).map(_._2)
-    val sub = model.subDim
-    val adc: Seq[Seq[Double]] = model.codebooks.zipWithIndex.map { case (cb, m) =>
-      cb.toSeq.map { c =>
-        var d = 0.0; var i = 0
-        while (i < sub) { d += queryVec(m * sub + i).toDouble * c(i).toDouble; i += 1 }
-        d
-      }
-    }
-    val score = adc.indices.map { m =>
-      element_at(typedlit(adc(m)), element_at(col("codes"), m + 1) + 1)
-    }.reduce(_ + _)
-    val lists = spark.read.parquet(path)
-      .filter(col("centroid_id").isin(probeIds.toIndexedSeq: _*))
-    excludeVecId.fold(lists)(id => lists.filter(col("vec_id") =!= id))
-      .select(col("vec_id"), col("label"), round(score, 6).as("adc_score"))
-      .orderBy(col("adc_score").desc, col("vec_id").asc)
-      .limit(k)
-  }
-}

@@ -610,7 +610,6 @@ object TextStats {
     * arithmetic — no float surface at all. */
   def greedyPacking(docs: DataFrame, seqLen: Int, shards: Int): DataFrame = {
     require(seqLen > 0 && shards > 0, "seqLen and shards must be positive")
-    val spark = docs.sparkSession
     val shard = (conv(substring(md5(col("doc_id").cast("string")), 1, 15), 16, 10)
       .cast("long") % shards).as("shard")
     val base = docs.select(shard, col("doc_id"),
@@ -1561,18 +1560,6 @@ object TextStats {
         round(when(nWords > 0, nBpe.cast("double") / nWords.cast("double"))
           .otherwise(lit(0.0)), 4).as("fertility"))
     })
-
-  /** 60-bit md5 feature-hash bucket — the cross-engine identity every
-    * dedup/sampling operator uses, here for feature hashing. */
-  private def featBucket(g: Column, buckets: Int): Column =
-    conv(substring(md5(g), 1, 15), 16, 10).cast("long") % buckets
-
-  /** Hashed uni+bigram features of a text column (the DSIR feature
-    * space): token and bigram occurrences, multiplicity-preserving,
-    * through the native n-gram kernels. Empty text → empty array. */
-  private def hashedNgramFeatures(c: Column): Column =
-    concat(graft.plans.NgramsExpr.ngrams(c, 1),
-      graft.plans.NgramsExpr.ngrams(c, 2))
 
   /** DSIR-style importance weights (Xie et al., "Data Selection for
     * Language Models via Importance Resampling", NeurIPS 2023 — public):

@@ -1,6 +1,6 @@
 package graft.lake
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The reference's trusted-layer transformer abstraction
@@ -58,8 +58,7 @@ object TrustedLoad {
       incrementalCol: Map[String, String],
       versionCol: String,
       targetPath: String,
-      runAt: java.sql.Timestamp,
-      fmt: TableFormat = ParquetTableFormat): LoadResult = {
+      runAt: java.sql.Timestamp): LoadResult = {
 
     val spark = control.sparkSession
 
@@ -101,8 +100,8 @@ object TrustedLoad {
     val deduped = Lake.dedupByKeys(out, transformer.primaryKey, Some(versionCol))
       .localCheckpoint()
     val rows = deduped.count()
-    fmt.merge(spark, targetPath, deduped, transformer.primaryKey, versionCol,
-      transformer.partitionCol.toSeq)
+    ParquetTableFormat.merge(spark, targetPath, deduped, transformer.primaryKey,
+      versionCol, transformer.partitionCol.toSeq)
 
     // 5. audit append per incremental input that advanced
     val nextControl = loaded.foldLeft(control) {

@@ -3,7 +3,7 @@ package graft.lake
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** Medallion-lake table operations re-expressed Spark-first (SURVEY §2.1,
   * §2.2, §2.5): dedup-by-rank, schema evolution, MERGE-shaped upsert,

@@ -4,7 +4,7 @@ import java.util.UUID
 
 import scala.util.matching.Regex
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -101,9 +101,9 @@ object LogTable {
       stats: Map[String, Stat])
 
   /** The table as of one committed version. `txns` is the idempotence
-    * ledger: per streaming writer id, the highest batch id whose append
+    * ledger: per writer id, the highest batch id whose append
     * committed — the `txn` action of the published log-format design,
-    * what makes a foreachBatch sink exactly-once under redelivery. */
+    * what makes a re-delivered batch append exactly-once. */
   final case class Snapshot(version: Long, schema: StructType,
       clusterCols: Seq[String], files: Seq[AddFile],
       txns: Map[String, Long])
@@ -429,13 +429,13 @@ object LogTable {
   /** The live table. Old data files missing later-evolved columns read
     * as typed NULLs (the explicit snapshot schema backfills them). */
   def read(spark: SparkSession, path: String): DataFrame =
-    readSnapshot(spark, path, snapshot(path))
+    readFiles(spark, path, snapshot(path))
 
   /** `VERSION AS OF` time travel. */
   def readVersion(spark: SparkSession, path: String, version: Long): DataFrame =
-    readSnapshot(spark, path, snapshot(path, Some(version)))
+    readFiles(spark, path, snapshot(path, Some(version)))
 
-  private def readSnapshot(spark: SparkSession, path: String,
+  private def readFiles(spark: SparkSession, path: String,
       snap: Snapshot): DataFrame =
     if (snap.files.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -443,46 +443,6 @@ object LogTable {
     else
       spark.read.schema(snap.schema)
         .parquet(snap.files.map(f => s"$path/${f.path}"): _*)
-
-  /** Metadata-only row count: the sum of the log's per-file row counts —
-    * zero data I/O, the `count(*)` a log-structured format answers from
-    * its manifest (at 100 TB this is the difference between a catalog
-    * lookup and a full scan). Exact by construction: every add carries
-    * the count of the file it commits. */
-  def rowCount(path: String): Long = snapshot(path).files.map(_.rows).sum
-
-  /** Stats-pruned point read — the read-side twin of the pruned DELETE:
-    * only files whose min/max admit `value` are opened, everything else
-    * is skipped on log metadata alone (this format's replacement for
-    * directory partition pruning — appends cluster by the caller's
-    * columns precisely so these ranges stay tight). The filter still
-    * applies on top, so pruning can only skip, never change results. */
-  def readWhere(spark: SparkSession, path: String, colName: String,
-      value: String): DataFrame = {
-    val snap = snapshot(path)
-    val dt = snap.schema.fields.find(_.name == colName).map(_.dataType)
-      .getOrElse(throw new IllegalArgumentException(
-        s"LogTable($path): no column $colName to read by"))
-    val hits = snap.files.filter(mayContain(_, colName, dt, value))
-    val base =
-      if (hits.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], snap.schema)
-      else spark.read.schema(snap.schema)
-        .parquet(hits.map(f => s"$path/${f.path}"): _*)
-    base.filter(col(colName) === value)
-  }
-
-  /** The file subset [[readWhere]] would open — exposed so callers (and
-    * the spec) can audit the skip rate without tracing scan metrics. */
-  private[graft] def prunedFiles(path: String, colName: String,
-      value: String): Seq[AddFile] = {
-    val snap = snapshot(path)
-    val dt = snap.schema.fields.find(_.name == colName).map(_.dataType)
-      .getOrElse(throw new IllegalArgumentException(
-        s"LogTable($path): no column $colName"))
-    snap.files.filter(mayContain(_, colName, dt, value))
-  }
 
   // ------------------------------------------------------------------
   // writes
@@ -514,10 +474,10 @@ object LogTable {
     * `txn = Some((appId, batchId))` makes the append IDEMPOTENT per
     * writer id: if the snapshot's ledger already records `batchId` (or
     * newer) for `appId`, the append no-ops — including when a racing
-    * duplicate writer with the SAME id committed it first, which is the
-    * foreachBatch-redelivery and duplicate-job case the streaming sink
-    * needs for exactly-once. The ledger check re-runs on every retry,
-    * so losing the version race to one's own twin is a clean skip. */
+    * duplicate writer with the SAME id committed it first (batch
+    * redelivery and the duplicate-job race, both exactly-once). The
+    * ledger check re-runs on every retry, so losing the version race to
+    * one's own twin is a clean skip. */
   def append(spark: SparkSession, path: String, df: DataFrame,
       clusterCols: Seq[String] = Nil,
       txn: Option[(String, Long)] = None): Long = {
@@ -567,19 +527,6 @@ object LogTable {
         "commit contention this hot needs a writer queue")
   }
 
-  /** Exactly-once Structured Streaming sink: a `foreachBatch` body that
-    * appends each micro-batch under the `(appId, batchId)` txn ledger,
-    * so engine redelivery after a crash (same batch re-offered) and a
-    * duplicate same-id job racing the table both no-op instead of
-    * double-appending — the table-format twin of the marker-replay
-    * guards the streaming lifecycles already use. */
-  def foreachBatchSink(path: String, appId: String,
-      clusterCols: Seq[String] = Nil): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      append(batch.sparkSession, path, batch, clusterCols,
-        txn = Some((appId, batchId))); ()
-    }
-
   /** Generic optimistic copy-on-write commit: `attempt` sees a fresh
     * snapshot, writes whatever new files its transform needs, and
     * returns (adds, removed paths, new meta if the schema changes); a
@@ -622,7 +569,7 @@ object LogTable {
       keys: Seq[String], versionCol: String): Long = {
     if (!exists(path)) return append(spark, path, source)
     commitCow(path, { snap =>
-      val target = readSnapshot(spark, path, snap)
+      val target = readFiles(spark, path, snap)
         .select(source.columns.map(col).toIndexedSeq: _*)
       val merged = Lake.mergeUpsert(target, source, keys, versionCol)
       val schema = StructType(source.schema.fields)
@@ -723,7 +670,8 @@ object LogTable {
     * retained snapshot references — including crash-orphaned write dirs,
     * but only past `orphanGraceMs` (a mid-commit writer's files are
     * un-referenced too; age is the only thing distinguishing them). */
-  def vacuum(path: String, retainLast: Int, orphanGraceMs: Long = 600000L): Unit = {
+  private[graft] def vacuum(path: String, retainLast: Int,
+      orphanGraceMs: Long = 600000L): Unit = {
     require(retainLast >= 1, "vacuum must retain at least the live version")
     val (fs, table, _) = fsOf(path)
     val (entries, ckpts) = listLog(fs, table)
@@ -797,35 +745,4 @@ object LogTable {
       }
     }
   }
-}
-
-/** [[TableFormat]] face of [[LogTable]] — the second implementation the
-  * seam was built for (SURVEY §7.4 risk 2): the same lake verbs as
-  * [[ParquetTableFormat]], now with snapshot isolation, optimistic
-  * concurrency, file-skipping DELETE and version time travel instead of
-  * whole-table rewrites. `partitionCols` become the append's cluster
-  * columns (stats-pruned files are this format's partition pruning). */
-object LogTableFormat extends TableFormat {
-  override def exists(spark: SparkSession, path: String): Boolean =
-    LogTable.exists(path)
-  override def read(spark: SparkSession, path: String): DataFrame =
-    LogTable.read(spark, path)
-  override def createOrAppend(df: DataFrame, path: String,
-      partitionCols: Seq[String]): Unit = {
-    LogTable.append(df.sparkSession, path, df, partitionCols); ()
-  }
-  override def merge(spark: SparkSession, path: String, source: DataFrame,
-      keys: Seq[String], versionCol: String, partitionCols: Seq[String]): Unit = {
-    LogTable.merge(spark, path, source, keys, versionCol); ()
-  }
-  override def deleteWhere(spark: SparkSession, path: String, colName: String,
-      value: String, partitionCols: Seq[String]): Unit = {
-    LogTable.deleteWhere(spark, path, colName, value); ()
-  }
-  override def compact(spark: SparkSession, path: String,
-      partitionCols: Seq[String], targetMb: Int = 256): Unit = {
-    LogTable.compact(spark, path, targetMb); ()
-  }
-  override def expireSnapshots(path: String, retainLast: Int): Unit =
-    LogTable.vacuum(path, math.max(retainLast, 1), orphanGraceMs = 0L)
 }

@@ -1,6 +1,6 @@
 package graft.lake
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Key-salting for skewed equi-joins (builder scale checklist: "skewed
@@ -32,18 +32,4 @@ object SkewJoin {
         saltedLeft("__salt") === replicatedRight("__salt"))
       .drop("__salt")
   }
-
-  /** Skew-safe aggregation: two-phase groupBy where phase one groups on
-    * (key, salt) — spreading a hot key over `salts` reducers — and phase
-    * two merges the partials. `partialAggs` must be algebraic (sum/count/
-    * min/max) so the two phases compose. */
-  def saltedSumByKey(df: DataFrame, key: String, valueCol: String,
-      salts: Int): DataFrame =
-    df.withColumn("__salt",
-        pmod(xxhash64(col(key), monotonically_increasing_id()), lit(salts)))
-      .groupBy(col(key), col("__salt"))
-      .agg(sum(col(valueCol)).as("__partial"), count(lit(1)).as("__pcnt"))
-      .groupBy(col(key))
-      .agg(sum(col("__partial")).as(s"sum_$valueCol"),
-        sum(col("__pcnt")).as("n_rows"))
 }

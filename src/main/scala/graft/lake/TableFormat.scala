@@ -3,37 +3,15 @@ package graft.lake
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Thin table-format seam (SURVEY §7.4 risk 2): the reference's lake verbs
-  * — create/append, MERGE, DELETE-by-predicate — behind one trait so an
-  * Iceberg/Delta implementation can slot in when those jars exist. The
-  * shipped implementation realizes the same semantics over plain
-  * partitioned parquet with full-rewrite MERGE/DELETE (correct, if not
-  * snapshot-isolated — exactly the trade the reference's own join-based
-  * fallback makes).
-  */
-trait TableFormat {
-  def exists(spark: SparkSession, path: String): Boolean
-  def read(spark: SparkSession, path: String): DataFrame
-  /** First write creates, later writes append (etls_raw/main.py:318-345). */
-  def createOrAppend(df: DataFrame, path: String, partitionCols: Seq[String]): Unit
-  /** MERGE INTO semantics on a key list with newer-version-wins
-    * (datatrack_spark_utils.py:306-362). */
-  def merge(spark: SparkSession, path: String, source: DataFrame,
-      keys: Seq[String], versionCol: String, partitionCols: Seq[String]): Unit
-  /** DELETE FROM path WHERE col = value (forms_main.py:401-419). */
-  def deleteWhere(spark: SparkSession, path: String, colName: String,
-      value: String, partitionCols: Seq[String]): Unit
-  /** Maintenance: rewrite small files toward `targetMb` data files
-    * (the reference's rewrite_data_files analogue). */
-  def compact(spark: SparkSession, path: String, partitionCols: Seq[String],
-      targetMb: Int = 256): Unit
-  /** Maintenance: drop all but the newest `retainLast` table snapshots
-    * (expire_snapshots(retain_last=…), datatrack_spark_utils.py:756-768). */
-  def expireSnapshots(path: String, retainLast: Int): Unit
-}
-
-/** Parquet-directory implementation. Rewrites go through a temp directory
-  * plus atomic-ish rename so a crashed rewrite never truncates the table.
+/** The trusted layer's lake table: a plain partitioned parquet
+  * directory carrying the reference's lake verbs — create/append
+  * (etls_raw/main.py:318-345) and a newer-version-wins MERGE INTO
+  * (datatrack_spark_utils.py:306-362) — plus its catalog DDL (external
+  * table, MSCK repair, ADD COLUMNS evolution). MERGE is a full rewrite
+  * through a temp directory plus rename, so a crashed rewrite never
+  * truncates the table (correct, if not snapshot-isolated — exactly the
+  * trade the reference's own join-based fallback makes). The ACID format
+  * with stats-pruned DELETE, compaction and time travel is [[LogTable]].
   *
   * All filesystem access goes through the Hadoop `FileSystem` API resolved
   * from the table path, so the lake verbs work unchanged against any
@@ -42,14 +20,13 @@ trait TableFormat {
   * not just `java.io.File` paths. Note the usual object-store caveat:
   * S3A "rename" is copy+delete, so snapshot archival costs a copy there —
   * the same trade every rename-based committer makes. */
-object ParquetTableFormat extends TableFormat {
+object ParquetTableFormat {
 
   import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 
   /** Snapshots retained automatically after each rewrite; older ones are
-    * reclaimed inline so long-running merge/delete loops can't grow the
-    * table's footprint without bound. Call [[expireSnapshots]] with a
-    * larger value only to trim further. */
+    * reclaimed inline so long-running merge loops can't grow the
+    * table's footprint without bound. */
   val autoRetainSnapshots = 2
 
   private def fsOf(path: String): (FileSystem, HPath) = {
@@ -60,12 +37,12 @@ object ParquetTableFormat extends TableFormat {
     (p.getFileSystem(conf), p)
   }
 
-  override def exists(spark: SparkSession, path: String): Boolean = {
+  def exists(spark: SparkSession, path: String): Boolean = {
     val (fs, p) = fsOf(path)
     fs.exists(p)
   }
 
-  override def read(spark: SparkSession, path: String): DataFrame =
+  def read(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
   /** The reference's file-layout posture for lake tables: zstd
@@ -78,7 +55,8 @@ object ParquetTableFormat extends TableFormat {
       .option("compression", "zstd")
       .option("maxRecordsPerFile", 1000000L)
 
-  override def createOrAppend(df: DataFrame, path: String,
+  /** First write creates, later writes append. */
+  def createOrAppend(df: DataFrame, path: String,
       partitionCols: Seq[String]): Unit = {
     val w = layoutWriter(df).mode(SaveMode.Append)
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(path)
@@ -87,7 +65,7 @@ object ParquetTableFormat extends TableFormat {
   private val SnapshotSuffix = ".__snapshot_"
 
   /** Snapshot directories for `path`, oldest → newest. */
-  def listSnapshots(path: String): Seq[HPath] = {
+  private[graft] def listSnapshots(path: String): Seq[HPath] = {
     val (fs, p) = fsOf(path)
     val parent = Option(p.getParent).getOrElse(new HPath("."))
     val prefix = p.getName + SnapshotSuffix
@@ -100,8 +78,8 @@ object ParquetTableFormat extends TableFormat {
 
   /** Every rewrite archives the replaced table dir as the next numbered
     * snapshot (a rename, so it costs nothing on a rename-capable FS) —
-    * the parquet analogue of a format snapshot: time-travel reads stay
-    * possible until expiry reclaims the space, and a crashed rewrite
+    * the parquet analogue of a format snapshot: the replaced table stays
+    * readable until expiry reclaims the space, and a crashed rewrite
     * never truncates the live table. Snapshots beyond
     * [[autoRetainSnapshots]] are expired inline. */
   private def rewrite(spark: SparkSession, path: String, next: DataFrame,
@@ -121,44 +99,13 @@ object ParquetTableFormat extends TableFormat {
     expireSnapshots(path, autoRetainSnapshots)
   }
 
-  override def expireSnapshots(path: String, retainLast: Int): Unit = {
+  /** Drop all but the newest `retainLast` snapshots
+    * (expire_snapshots(retain_last=…), datatrack_spark_utils.py:756-768). */
+  private[graft] def expireSnapshots(path: String, retainLast: Int): Unit = {
     require(retainLast >= 0)
     val (fs, _) = fsOf(path)
     listSnapshots(path).dropRight(retainLast)
       .foreach(p => fs.delete(p, true))
-  }
-
-  /** Time-travel read — the Iceberg `VERSION AS OF` analogue over the
-    * archived snapshot chain: `stepsBack = 1` is the table as it was
-    * before the most recent rewrite (merge/delete/compact), 2 the state
-    * before that, and so on. Fails loudly past the retention horizon
-    * rather than silently serving the live table — a time-travel read
-    * that falls back to "now" corrupts whatever audit asked for it. */
-  def readSnapshot(spark: SparkSession, path: String,
-      stepsBack: Int): DataFrame = {
-    require(stepsBack >= 1, "stepsBack must be >= 1 (0 is the live table)")
-    val snaps = listSnapshots(path)
-    if (snaps.size < stepsBack)
-      throw new IllegalArgumentException(
-        s"readSnapshot: only ${snaps.size} snapshots retained at $path, " +
-          s"cannot travel $stepsBack back — raise autoRetainSnapshots")
-    spark.read.parquet(snaps(snaps.size - stepsBack).toString)
-  }
-
-  /** Small-file compaction: one rewrite that co-locates each partition's
-    * rows into one writer task (unpartitioned tables use the optimizer's
-    * size estimate for a ~targetMb shard count). At cluster scale the
-    * per-partition file count generalizes to `repartition(n, cols :+
-    * salt)`; the verb and the snapshot/expire lifecycle are the point. */
-  override def compact(spark: SparkSession, path: String,
-      partitionCols: Seq[String], targetMb: Int = 256): Unit = {
-    val current = read(spark, path)
-    val compacted =
-      if (partitionCols.nonEmpty)
-        current.repartition(partitionCols.map(col): _*)
-      else
-        graft.sources.Sources.sizeBasedRepartition(current, targetMb)
-    rewrite(spark, path, compacted.localCheckpoint(), partitionCols)
   }
 
   /** S12 — external-table DDL over an existing parquet directory + MSCK
@@ -205,20 +152,14 @@ object ParquetTableFormat extends TableFormat {
     missing.map(_.name).toIndexedSeq
   }
 
-  override def merge(spark: SparkSession, path: String, source: DataFrame,
+  /** MERGE INTO on `keys` through [[Lake.mergeUpsert]] (a source row wins
+    * only when its `versionCol` is newer), then one rewrite. */
+  def merge(spark: SparkSession, path: String, source: DataFrame,
       keys: Seq[String], versionCol: String, partitionCols: Seq[String]): Unit = {
     if (!exists(spark, path)) { createOrAppend(source, path, partitionCols); return }
     val target = read(spark, path).select(source.columns.map(col).toIndexedSeq: _*)
     // materialize the merge before the rewrite replaces its own input
     val merged = Lake.mergeUpsert(target, source, keys, versionCol).localCheckpoint()
     rewrite(spark, path, merged, partitionCols)
-  }
-
-  override def deleteWhere(spark: SparkSession, path: String, colName: String,
-      value: String, partitionCols: Seq[String]): Unit = {
-    val remaining = read(spark, path)
-      .filter(col(colName) =!= value || col(colName).isNull)
-      .localCheckpoint()
-    rewrite(spark, path, remaining, partitionCols)
   }
 }

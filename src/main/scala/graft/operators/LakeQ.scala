@@ -374,7 +374,7 @@ object LakeQ {
 
   /** ORC round-trip: the second columnar format the environment ships
     * (orc-core is on the Spark classpath; Iceberg/Delta jars remain
-    * absent — the TableFormat seam stays parked). The gate writes the
+    * absent). The gate writes the
     * orders table as ORC, reads it back through the native vectorized
     * ORC reader with a pushable predicate, and aggregates; the oracle
     * computes the identical aggregate straight from parquet — so the

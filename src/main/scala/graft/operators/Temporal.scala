@@ -591,7 +591,6 @@ object Temporal {
       GROUP BY i.interval_id
     """),
     (s, dir) => {
-      val fmt = "yyyy-MM-dd HH:mm:ss"
       val intervals = graft.LocalTable.of(s,
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("interval_id",

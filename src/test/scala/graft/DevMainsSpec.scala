@@ -16,9 +16,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * checkpoint state: the reliable-vs-local lineage cut reads the
   * session's checkpoint dir (`graft.Lineage`) and never sets it, and
   * pins the operator surface: a public operator in `ext/`,
-  * `operators/` or `streaming/` that nothing in the engine or the
-  * benchmark calls is deleted, narrowed to `private[graft]`, or listed
-  * with its reason. */
+  * `operators/`, `streaming/` or `lake/` that nothing in the engine or
+  * the benchmark calls is deleted, narrowed to `private[graft]`, or
+  * listed with its reason. */
 class DevMainsSpec extends AnyFunSuite {
 
   private val allowed = Set(
@@ -55,7 +55,8 @@ class DevMainsSpec extends AnyFunSuite {
   }
 
   /** Public defs that only specs and the restart soak reach, each kept
-    * on purpose. */
+    * on purpose: operator entry points the specs audit, and the
+    * reference's catalog DDL on the trusted parquet table. */
   private val surfaceAllowlist = Map(
     "Dedup.minhashNearDupCandidates" ->
       "PlanSpec audits d07's lazy candidate plan through it",
@@ -64,7 +65,13 @@ class DevMainsSpec extends AnyFunSuite {
     "TextStats.scoreHashedLogReg" ->
       "PlanSpec audits the exchange-free scoring plan d35 inlines",
     "AnnIndexStreaming.annIndexStream" ->
-      "the no-retrain ANN writer the restart soak drives")
+      "the no-retrain ANN writer the restart soak drives",
+    "ParquetTableFormat.createExternalTable" ->
+      "the reference's S12 external-table DDL + MSCK over a lake dir",
+    "ParquetTableFormat.repairTable" ->
+      "the reference's MSCK REPAIR after files land behind the catalog",
+    "ParquetTableFormat.evolveTable" ->
+      "the reference's evoluir_schema ALTER TABLE ADD COLUMNS")
 
   /** `src` with comments and string literals blanked, line breaks kept —
     * a name inside a doc link or an error message is not a caller. */
@@ -137,13 +144,13 @@ class DevMainsSpec extends AnyFunSuite {
     }
   }
 
-  test("every public operator in ext, operators and streaming has a caller in the engine or the benchmark, or an allowlisted reason") {
+  test("every public operator in ext, operators, streaming and lake has a caller in the engine or the benchmark, or an allowlisted reason") {
     val code = (scalaSources(Paths.get("src/main/scala")) ++
         scalaSources(Paths.get("perfbench/src")))
       .map(f => f -> codeOnly(Files.readString(f))).toMap
     val defs = code.toSeq
       .filter { case (f, _) =>
-        """/graft/(ext|operators|streaming)/""".r.findFirstIn(f.toString).isDefined }
+        """/graft/(ext|operators|streaming|lake)/""".r.findFirstIn(f.toString).isDefined }
       .flatMap { case (_, c) => publicDefs(c) }
     // a name is used where it appears as a whole token, minus its def sites
     def counts(tokens: Iterator[String]) =

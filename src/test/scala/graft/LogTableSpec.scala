@@ -6,13 +6,11 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.lake.{Lake, LogTable, LogTableFormat, ParquetTableFormat, TableFormat}
+import graft.lake.{Lake, LogTable}
 
 /** The log-structured table format: ACID commit fold, snapshot
   * isolation, optimistic concurrency, stats-pruned DELETE, time travel,
-  * checkpoints, vacuum — plus the TableFormat-seam contract run against
-  * BOTH implementations (the seam's original purpose: a second format
-  * slots in behind the same verbs). */
+  * checkpoints, vacuum. */
 class LogTableSpec extends SparkSpec {
 
   private val schema = StructType(Seq(
@@ -25,29 +23,23 @@ class LogTableSpec extends SparkSpec {
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toString + "/table"
 
-  /** The shared verb lifecycle from TableFormatSpec, now parameterized
-    * over the seam — both formats must pass it verbatim. */
-  private def lifecycle(fmt: TableFormat, path: String): Unit = {
-    assert(!fmt.exists(spark, path))
-    fmt.createOrAppend(df((1L, "a", 1L), (2L, "b", 1L)), path, Nil)
-    assert(fmt.exists(spark, path) && fmt.read(spark, path).count() === 2)
-    fmt.merge(spark, path, df((2L, "b2", 2L), (3L, "c", 2L)), Seq("k"), "ver", Nil)
-    val afterMerge = fmt.read(spark, path).orderBy("k")
+  test("verb lifecycle: create → merge → stale merge loses → delete → compact") {
+    val path = tmp("graft-log-lifecycle-")
+    assert(!LogTable.exists(path))
+    LogTable.append(spark, path, df((1L, "a", 1L), (2L, "b", 1L)))
+    assert(LogTable.exists(path) && LogTable.read(spark, path).count() === 2)
+    LogTable.merge(spark, path, df((2L, "b2", 2L), (3L, "c", 2L)), Seq("k"), "ver")
+    val afterMerge = LogTable.read(spark, path).orderBy("k")
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     assert(afterMerge === Seq((1L, "a"), (2L, "b2"), (3L, "c")))
-    fmt.merge(spark, path, df((2L, "stale", 0L)), Seq("k"), "ver", Nil)
-    assert(fmt.read(spark, path).filter(col("k") === 2)
+    LogTable.merge(spark, path, df((2L, "stale", 0L)), Seq("k"), "ver")
+    assert(LogTable.read(spark, path).filter(col("k") === 2)
       .collect()(0).getString(1) === "b2")
-    fmt.deleteWhere(spark, path, "v", "a", Nil)
-    assert(fmt.read(spark, path).count() === 2)
-    assert(fmt.read(spark, path).filter(col("v") === "a").count() === 0)
-    fmt.compact(spark, path, Nil)
-    assert(fmt.read(spark, path).count() === 2)
-  }
-
-  test("TableFormat seam: the SAME lifecycle passes on both implementations") {
-    lifecycle(ParquetTableFormat, tmp("graft-seam-pq-"))
-    lifecycle(LogTableFormat, tmp("graft-seam-log-"))
+    LogTable.deleteWhere(spark, path, "v", "a")
+    assert(LogTable.read(spark, path).count() === 2)
+    assert(LogTable.read(spark, path).filter(col("v") === "a").count() === 0)
+    LogTable.compact(spark, path)
+    assert(LogTable.read(spark, path).count() === 2)
   }
 
   test("append commits versions; reads are snapshot-isolated; time travel works") {
@@ -230,28 +222,6 @@ class LogTableSpec extends SparkSpec {
     assert(LogTable.currentVersion(path).get === vBefore + 1)
   }
 
-  test("metadata-only count and stats-pruned reads match full scans while opening fewer files") {
-    val path = tmp("graft-log-readwhere-")
-    LogTable.append(spark, path, df((1L, "aaa", 1L), (2L, "abc", 1L)))
-    LogTable.append(spark, path, df((3L, "mmm", 1L), (4L, "mno", 1L)))
-    LogTable.append(spark, path, df((5L, "zzz", 1L), (6L, "zzy", 1L)))
-    // count from the manifest alone — no scan, still exact
-    assert(LogTable.rowCount(path) === 6L)
-    // the pruned read opens only the admitting files…
-    val total = LogTable.snapshot(path).files.size
-    val opened = LogTable.prunedFiles(path, "v", "mmm").size
-    assert(opened < total, s"pruning opened $opened of $total files")
-    // …and returns exactly what the full-scan filter returns
-    val viaPrune = LogTable.readWhere(spark, path, "v", "mmm")
-      .collect().map(_.toSeq).toSet
-    val viaScan = LogTable.read(spark, path).filter(col("v") === "mmm")
-      .collect().map(_.toSeq).toSet
-    assert(viaPrune === viaScan && viaPrune.nonEmpty)
-    // a value outside every range: zero files opened, empty result
-    assert(LogTable.prunedFiles(path, "v", "qqq").isEmpty)
-    assert(LogTable.readWhere(spark, path, "v", "qqq").count() === 0)
-  }
-
   test("txn appends are exactly-once: redelivery no-ops, the ledger survives checkpoints and vacuum") {
     val path = tmp("graft-log-txn-")
     assert(LogTable.append(spark, path, df((1L, "a", 1L)),
@@ -292,39 +262,6 @@ class LogTableSpec extends SparkSpec {
     // exactly ONE twin's batch landed — the ledger re-check on the lost
     // version race turns the losers into clean skips
     assert(LogTable.read(spark, path).filter(col("k") === 7L).count() === 1)
-  }
-
-  test("foreachBatch sink: a real stream lands exactly-once, restart replays no-op") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val path = tmp("graft-log-sink-")
-    val ckpt = Files.createTempDirectory("graft-log-sink-ck-").toString
-    implicit val sql = spark.sqlContext
-    implicit val enc = org.apache.spark.sql.Encoders.product[(Long, String)]
-    val in = MemoryStream[(Long, String)]
-    def runWave(data: Seq[(Long, String)]): Unit = {
-      in.addData(data: _*)
-      val q = in.toDF().toDF("k", "v")
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          LogTable.foreachBatchSink(path, "sink-app")(b, id)
-        }
-        .start()
-      q.processAllAvailable(); q.stop()
-    }
-    runWave(Seq((1L, "a"), (2L, "b")))
-    assert(LogTable.read(spark, path).count() === 2)
-    // manual redelivery of batch 0 (what the engine does after a crash
-    // before the sink's commit was recorded in ITS checkpoint)
-    LogTable.foreachBatchSink(path, "sink-app")(
-      LocalTable.of(spark,
-        StructType(Seq(StructField("k", LongType), StructField("v", StringType))),
-        Seq(Row(1L, "a"), Row(2L, "b"))), 0L)
-    assert(LogTable.read(spark, path).count() === 2, "redelivered batch must no-op")
-    // a fresh query on the same checkpoint continues with new batches
-    runWave(Seq((3L, "c")))
-    assert(LogTable.read(spark, path).orderBy("k")
-      .collect().map(_.getLong(0)).toSeq === Seq(1L, 2L, 3L))
   }
 
   test("stats pruning is conservative: non-ASCII bounds and statless columns never skip") {

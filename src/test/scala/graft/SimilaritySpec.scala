@@ -245,40 +245,6 @@ class SimilaritySpec extends SparkSpec {
       s"probe read ${scan.metrics("numFiles").value} files")
   }
 
-  test("IVF-PQ index: codes-only lists, pruned probe, planted-cluster recall") {
-    val planted = plantedClusters(nClusters = 4, perCluster = 25)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-ivfpq-spec-").toString + "/lists"
-    graft.ext.IvfPq.build(planted, "embedding", kLists = 16, iters = 3,
-      subspaces = 8, codebookSize = 16, path = path)
-    // the PQ win: the index stores codes, the embedding column was never
-    // written — a probe physically cannot read vectors
-    assert(!spark.read.parquet(path).columns.contains("embedding"))
-
-    val qv = planted.filter(col("vec_id") === 0)
-      .select(col("embedding")).head().getSeq[Float](0).toArray
-    val probeDf = graft.ext.IvfPq.probe(spark, path, qv, k = 10,
-      nProbe = 4, excludeVecId = Some(0L))
-    probeDf.collect()
-    // partition pruning carries over from the IVF layout
-    val scan = findScan(probeDf.queryExecution.executedPlan)
-      .getOrElse(fail("no FileSourceScanExec in probe plan"))
-    assert(scan.metadata("PartitionFilters").contains("centroid_id"))
-    assert(scan.metrics("numFiles").value <= 4)
-
-    // the additive approximation over 1-byte codes still recovers the
-    // planted cluster of the query
-    val hits = probeDf.collect()
-    assert(hits.length === 10)
-    assert(hits.count(_.getInt(1) === 0) >= 9,
-      s"IVF-PQ should recover the planted cluster")
-
-    // model round-trip: persisted codebooks reload identically
-    val model = graft.ext.IvfPq.loadModel(spark, path)
-    assert(model.codebooks.length === 8 && model.codebooks.head.length === 16)
-    assert(model.subDim === 8)
-  }
-
   test("semanticDedup: one survivor per dense direction group, isolated vectors untouched") {
     val schema = StructType(Seq(
       StructField("vec_id", LongType), StructField("embedding", ArrayType(FloatType))))

@@ -17,8 +17,8 @@ class GraftTestFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("graftfs:///")
 }
 
-/** Table-format verbs over real parquet directories + salted skew-join
-  * equivalence. */
+/** The trusted parquet table's verbs and DDL over real parquet
+  * directories + salted skew-join equivalence. */
 class TableFormatSpec extends SparkSpec {
 
   private val schema = StructType(Seq(
@@ -45,13 +45,9 @@ class TableFormatSpec extends SparkSpec {
     fmt.merge(spark, path, df((2L, "stale", 0L)), Seq("k"), "ver", Nil)
     assert(fmt.read(spark, path).filter(col("k") === 2)
       .collect()(0).getString(1) === "b2")
-
-    fmt.deleteWhere(spark, path, "v", "a", Nil)
-    assert(fmt.read(spark, path).count() === 2)
-    assert(fmt.read(spark, path).filter(col("v") === "a").count() === 0)
   }
 
-  test("createOrAppend → merge → deleteWhere lifecycle on a parquet dir") {
+  test("createOrAppend → merge lifecycle on a parquet dir") {
     lifecycle(Files.createTempDirectory("graft-fmt-").toString + "/table")
   }
 
@@ -65,7 +61,7 @@ class TableFormatSpec extends SparkSpec {
     val path = s"graftfs://$local/table"
     lifecycle(path)
     // snapshot archival + expiry also ran through graftfs: the lifecycle
-    // did two rewrites (merge, delete) → snapshots exist under the scheme
+    // did two rewrites (merge, stale merge) → snapshots exist under the scheme
     assert(fmt.listSnapshots(path).nonEmpty)
     assert(fmt.listSnapshots(path).head.toUri.getScheme === "graftfs")
     fmt.expireSnapshots(path, 0)
@@ -77,7 +73,7 @@ class TableFormatSpec extends SparkSpec {
     fmt.createOrAppend(df((1L, "a", 1L), (2L, "b", 1L)), path, Nil)
     assert(fmt.listSnapshots(path).isEmpty)
     fmt.merge(spark, path, df((2L, "b2", 2L)), Seq("k"), "ver", Nil)     // snapshot 0
-    fmt.deleteWhere(spark, path, "v", "a", Nil)                          // snapshot 1
+    fmt.merge(spark, path, df((1L, "a2", 2L)), Seq("k"), "ver", Nil)    // snapshot 1
     assert(fmt.listSnapshots(path).map(_.getName.takeRight(5)) === Seq("00000", "00001"))
     // time travel: snapshot 0 is the pre-merge table
     assert(spark.read.parquet(fmt.listSnapshots(path).head.toString).count() === 2)
@@ -90,47 +86,9 @@ class TableFormatSpec extends SparkSpec {
     fmt.expireSnapshots(path, retainLast = 0)
     assert(fmt.listSnapshots(path).isEmpty)
     // live table untouched by expiry
-    assert(fmt.read(spark, path).count() === 2)
-  }
-
-  test("readSnapshot time-travels the archived chain and fails loudly past retention") {
-    val path = Files.createTempDirectory("graft-tt-").toString + "/table"
-    fmt.createOrAppend(df((1L, "a", 1L), (2L, "b", 1L)), path, Nil)
-    fmt.merge(spark, path, df((2L, "b2", 2L)), Seq("k"), "ver", Nil)   // snapshot 0
-    fmt.deleteWhere(spark, path, "v", "a", Nil)                        // snapshot 1
-    // stepsBack=1: before the delete (post-merge, 2 rows incl. b2)
-    val oneBack = fmt.readSnapshot(spark, path, 1)
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(oneBack === Set((1L, "a"), (2L, "b2")))
-    // stepsBack=2: the original table before the merge
-    val twoBack = fmt.readSnapshot(spark, path, 2)
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(twoBack === Set((1L, "a"), (2L, "b")))
-    // past the horizon: loud failure, never the live table
-    intercept[IllegalArgumentException](fmt.readSnapshot(spark, path, 3))
-    intercept[IllegalArgumentException](fmt.readSnapshot(spark, path, 0))
-  }
-
-  test("compact rewrites a fragmented partitioned table to one file per partition") {
-    val path = Files.createTempDirectory("graft-compact-").toString + "/table"
-    // 6 appends × 2 partitions → ≥12 small files
-    (1 to 6).foreach { i =>
-      fmt.createOrAppend(
-        df((i.toLong, "x", 1L), (100L + i, "y", 1L))
-          .withColumn("p", col("k") % 2), path, Seq("p"))
-    }
-    def dataFiles(dir: java.io.File): Seq[java.io.File] = {
-      val kids = Option(dir.listFiles()).getOrElse(Array.empty).toIndexedSeq
-      kids.filter(_.isFile).filter(_.getName.endsWith(".parquet")) ++
-        kids.filter(_.isDirectory).flatMap(dataFiles)
-    }
-    val before = dataFiles(new java.io.File(path)).size
-    assert(before >= 12)
-    val rows = fmt.read(spark, path).collect().map(_.toSeq).toSet
-    fmt.compact(spark, path, Seq("p"))
-    assert(dataFiles(new java.io.File(path)).size <= 2)
-    assert(fmt.read(spark, path).collect().map(_.toSeq).toSet === rows)
-    fmt.expireSnapshots(path, 0)
+    assert(fmt.read(spark, path).orderBy("k").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq ===
+      Seq((1L, "a2"), (2L, "b2"), (9L, "z")))
   }
 
   test("external-table DDL + MSCK recovers partitions added behind the catalog") {
@@ -182,15 +140,5 @@ class TableFormatSpec extends SparkSpec {
     assert(salted === plain)
     // 900 hot-key rows × 2 right matches (dim7 + hot); k=901..1000 unmatched
     assert(plain.size === 1800)
-  }
-
-  test("salted two-phase aggregation matches plain groupBy") {
-    val rows = (1L to 500L).map(i => (if (i <= 450) 7L else i % 10, s"x", i))
-    val d = df(rows: _*)
-    val plain = d.groupBy("k").agg(sum("ver").as("s"), count(lit(1)).as("n"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val salted = SkewJoin.saltedSumByKey(d, "k", "ver", salts = 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(salted === plain)
   }
 }
