@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** The engine's one lineage-cut rule, shared by the iterative Dedup and
-  * Graph families and the GlobalOrder two-pass operators. The session
-  * decides between the two cuts, never the call site:
+/** The engine's only lineage cut: every materialization barrier in
+  * `src/main` goes through [[cut]] (DevMainsSpec pins it), so the
+  * session decides between the two cuts, never the call site:
   *
   *   - no checkpoint dir (the default): `localCheckpoint` — executor-local
   *     blocks, fastest, right for local/interactive runs, lost with an
@@ -16,17 +16,30 @@ import org.apache.spark.sql.DataFrame
   * The dir is read, never set: it is SparkContext-global, and the engine
   * leaves it to whoever builds the session.
   *
-  * `eager = false` still collapses the plan to ONE shared RDD — every
-  * downstream reference reads the same blocks, so the subtree computes
-  * once — but defers materialization to the first action, keeping the
-  * whole query a single pipelined job instead of a sequence of
-  * checkpoint barriers (measured ~0.2 s/barrier at gate scale).
-  * Iterative loops need `eager = true`: each round must materialize
-  * before the driver can read its convergence metric. */
+  * A cut earns its job in one of three ways:
+  *   - an iterative round (`eager = true`): each round materializes
+  *     before the driver reads its convergence metric, and AQE re-plans
+  *     the next round on it;
+  *   - a lifecycle gate (`eager = true`): freeze an index version or a
+  *     file listing before the next step mutates what it reads;
+  *   - a shared subtree (`eager = false`): collapse the plan to ONE
+  *     shared RDD that materializes inside the first action, with no
+  *     job barrier of its own (measured ~0.2 s/barrier at gate scale).
+  *     Consumers that run as concurrent jobs may ask for the same
+  *     uncached partition at once; Spark's block manager makes the
+  *     later one wait on the writer's lock and read its copy (the
+  *     "Block rdd_… already exists" warning), so it still computes once.
+  *     An eager cut whose first consumer is an action reading every
+  *     partition (a count, a full aggregate) is the same cut plus a job.
+  *
+  * A reliable cut is always written eagerly: Spark writes a reliable
+  * checkpoint in a job of its own after the first action, which
+  * recomputes the unpersisted subtree, so deferring it would compute the
+  * subtree twice. */
 object Lineage {
 
   def cut(df: DataFrame, eager: Boolean = true): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-      df.checkpoint(eager)
+      df.checkpoint(eager = true)
     else df.localCheckpoint(eager)
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.{Q, Tables}
+import graft.{Lineage, Q, Tables}
 
 /** Data-quality / profiling operators — the observability layer a 100 TB
   * pipeline runs beside every load (the reference's control-table lineage
@@ -430,9 +430,11 @@ object DataQuality {
     // scans and the spine — would each re-derive the aggregate (and its
     // ref scan) otherwise; the cut also lets the empty-baseline guard
     // below fail LOUDLY instead of the NULL bounds silently clamping
-    // every current row into the top bin (greatest/least skip NULLs)
-    val bounds = ref.agg(min(v).as("lo"), max(v).as("hi"),
-      count(v).as("n_ref")).localCheckpoint()
+    // every current row into the top bin (greatest/least skip NULLs).
+    // LAZY: the guard's head() reads the one partition, so it
+    // materializes the cut — an eager cut would add a job doing the same
+    val bounds = Lineage.cut(ref.agg(min(v).as("lo"), max(v).as("hi"),
+      count(v).as("n_ref")), eager = false)
     require(bounds.head().getAs[Long]("n_ref") > 0,
       s"psiDrift: reference snapshot has no non-null $valueCol — " +
         "a PSI against an empty baseline would report fake extreme drift")

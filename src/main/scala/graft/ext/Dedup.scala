@@ -228,9 +228,14 @@ object Dedup {
     // LAZY for the same reason (and measured: same-JVM alternating A/B,
     // lazy ≤ eager in every aligned pass at sf0.1 — min 1.41 vs 1.48 s —
     // and parity at sf1, 8.09 vs 8.33 s; the eager barrier serialized
-    // the candidate job ahead of the verify stage for nothing). All
-    // consumers run inside one action, which materializes the shared
-    // RDD once.
+    // the candidate job ahead of the verify stage for nothing). The
+    // consumers of each cut run as concurrent jobs of one action; when
+    // two ask for the same uncached partition, the block manager makes
+    // the later one wait and read the writer's copy (the intermittent
+    // "Block rdd_… already exists" warning), so each partition still
+    // computes once — LineageSpec counts the evaluations. At the
+    // 500-doc gate corpus, lazy/lazy ran 10 jobs against 11 (eager band
+    // rows) and 12 (both eager) at equal wall time.
     val candidates = Lineage.cut(
       lshCandidatePairs(bandRows, bucketCap), eager = false)
     if (verifySampleRate >= 1.0) verifyJaccardPairs(docs, candidates, nGram, threshold)
@@ -905,23 +910,22 @@ object Dedup {
       // halves (lshCandidatePairs / lshProbeCandidates /
       // verifyJaccardPairs) exist precisely so this composition never
       // recomputes a scan+shingle+minhash pipeline per consumer.
-      val idxBands = minhashBandIndex(indexed, nGram = 3, k = 96,
-        bands = 48, rowsPerBand = 2).localCheckpoint()
-      val newBands = minhashBandIndex(incoming, nGram = 3, k = 96,
-        bands = 48, rowsPerBand = 2).localCheckpoint()
+      val idxBands = Lineage.cut(minhashBandIndex(indexed, nGram = 3, k = 96,
+        bands = 48, rowsPerBand = 2))
+      val newBands = Lineage.cut(minhashBandIndex(incoming, nGram = 3, k = 96,
+        bands = 48, rowsPerBand = 2))
       // day 0: archive paired and labeled
       val archivePairs = verifyJaccardPairs(indexed,
-        lshCandidatePairs(idxBands).localCheckpoint(), nGram = 3, threshold = 0.5)
+        Lineage.cut(lshCandidatePairs(idxBands)), nGram = 3, threshold = 0.5)
       val labels = connectedComponents(archivePairs.select(col("doc_a"), col("doc_b")))
       // day 1: the batch's internal candidates + the index-probe cross
       // candidates verify in ONE pass — their pair sets are disjoint
       // (new×new vs new×old) and both feed the same relabel, so one
       // candidate union, one materialization, one semi-join+shingle
       // chain instead of two of each
-      val dayCands = lshCandidatePairs(newBands)
+      val dayCands = Lineage.cut(lshCandidatePairs(newBands)
         .unionByName(lshProbeCandidates(newBands, idxBands)
-          .select(col("doc_new").as("doc_a"), col("doc_old").as("doc_b")))
-        .localCheckpoint()
+          .select(col("doc_new").as("doc_a"), col("doc_old").as("doc_b"))))
       val dayPairs = verifyJaccardPairs(docs, dayCands, nGram = 3, threshold = 0.5)
       val cc = updateComponents(labels,
         dayPairs.select(col("doc_a"), col("doc_b")))
@@ -972,8 +976,8 @@ object Dedup {
       val incoming = withBucket.filter(col("bucket") >= 95).drop("bucket")
       // production: `index` is a persisted minhashBandIndex table;
       // materialized here to stand in for it
-      val index = minhashBandIndex(indexed, nGram = 3, k = 96,
-        bands = 48, rowsPerBand = 2).localCheckpoint()
+      val index = Lineage.cut(minhashBandIndex(indexed, nGram = 3, k = 96,
+        bands = 48, rowsPerBand = 2))
       val members = probedBucketMembers(index, incoming, nGram = 3, k = 96,
         bands = 48, rowsPerBand = 2)
       val archiveSlice = indexed.join(members, Seq("doc_id"), "left_semi")
@@ -1269,12 +1273,11 @@ object Dedup {
       windowTokens: Int, minDocs: Long): (DataFrame, DataFrame) = {
     require(windowTokens >= 1, "windowTokens must be positive")
     require(minDocs >= 2, "minDocs below 2 would mark every window")
-    val wins = spanWindows(newDocs, windowTokens, keep = Seq("source"))
-      .localCheckpoint(false)
-    val batchCounts = wins
+    val wins = Lineage.cut(
+      spanWindows(newDocs, windowTokens, keep = Seq("source")), eager = false)
+    val batchCounts = Lineage.cut(wins
       .select(col("source"), col("fp"), col("doc_id")).distinct()
-      .groupBy(col("source"), col("fp")).agg(count(lit(1)).as("bdd"))
-      .localCheckpoint(false)
+      .groupBy(col("source"), col("fp")).agg(count(lit(1)).as("bdd")), eager = false)
     val hot = batchCounts
       .join(index, Seq("source", "fp"), "left")
       .filter(col("bdd") + coalesce(col("dd"), lit(0L)) >= minDocs)
@@ -1544,7 +1547,7 @@ object Dedup {
       val batch = withBucket.filter(col("bucket") >= 95).drop("bucket")
       // production: the index is a persisted table; materialized here to
       // stand in for it — the archive TEXT is never touched below
-      val index = fingerprintIndex(archive, windowTokens = 8).localCheckpoint()
+      val index = Lineage.cut(fingerprintIndex(archive, windowTokens = 8))
       incrementalSpans(batch, index, windowTokens = 8)
     })
 
@@ -1608,10 +1611,9 @@ object Dedup {
       val batch2 = withBucket.filter(col("bucket") >= 95).drop("bucket")
       // production: persisted index table; the lineage cuts stand in for
       // the two materializations (write-after-build, read-before-probe)
-      val index0 = fingerprintIndex(archive, windowTokens = 8).localCheckpoint()
+      val index0 = Lineage.cut(fingerprintIndex(archive, windowTokens = 8))
       val probe1 = incrementalSpans(batch1, index0, windowTokens = 8)
-      val index1 = appendToFingerprintIndex(index0, batch1, windowTokens = 8)
-        .localCheckpoint()
+      val index1 = Lineage.cut(appendToFingerprintIndex(index0, batch1, windowTokens = 8))
       val probe2 = incrementalSpans(batch2, index1, windowTokens = 8)
       probe1.withColumn("batch", lit(1))
         .unionByName(probe2.withColumn("batch", lit(2)))
@@ -1693,13 +1695,13 @@ object Dedup {
       val batch1 = withBucket.filter(col("bucket") >= 90 && col("bucket") < 95)
         .drop("bucket")
       val batch2 = withBucket.filter(col("bucket") >= 95).drop("bucket")
-      val idx0 = boilerplateIndex(archive, windowTokens = 3).localCheckpoint()
+      val idx0 = Lineage.cut(boilerplateIndex(archive, windowTokens = 3))
       // admission computes batch1's window rows + membership counts ONCE
       // for both its scrub and the index append (the old scrub+append
       // pair re-tokenized and re-aggregated the batch per consumer)
       val (scrub1, idx1Raw) = admitBoilerplateBatch(batch1, idx0,
         windowTokens = 3, minDocs = 2)
-      val idx1 = idx1Raw.localCheckpoint()
+      val idx1 = Lineage.cut(idx1Raw)
       val scrub2 = incrementalBoilerplateScrub(batch2, idx1,
         windowTokens = 3, minDocs = 2)
       scrub1.withColumn("batch", lit(1))
@@ -1758,9 +1760,9 @@ object Dedup {
       val retracted = withBucket.filter(col("bucket") >= 90 && col("bucket") < 95)
         .drop("bucket")
       val batch = withBucket.filter(col("bucket") >= 95).drop("bucket")
-      val idx = fingerprintIndex(admitted, windowTokens = 8).localCheckpoint()
-      val shrunk = retractFromFingerprintIndex(idx, retracted, windowTokens = 8)
-        .localCheckpoint()
+      val idx = Lineage.cut(fingerprintIndex(admitted, windowTokens = 8))
+      val shrunk = Lineage.cut(
+        retractFromFingerprintIndex(idx, retracted, windowTokens = 8))
       incrementalSpans(batch, shrunk, windowTokens = 8)
     })
 
@@ -1790,11 +1792,10 @@ object Dedup {
       spanIndex: DataFrame, windowTokens: Int,
       minQuality: Double): DataFrame = {
     require(windowTokens >= 1, "windowTokens must be positive")
-    val scored = batch.select(col("doc_id"), col("text"),
+    val scored = Lineage.cut(batch.select(col("doc_id"), col("text"),
         TextStats.qualityScore(col("text")).as("quality"),
         TextStats.fingerprint(col("text")).as("fp"))
-      .withColumn("q_keep", col("quality") >= minQuality)
-      .localCheckpoint()
+      .withColumn("q_keep", col("quality") >= minQuality))
     val byFp = org.apache.spark.sql.expressions.Window
       .partitionBy(col("fp")).orderBy(col("doc_id"))
     val dedupFlags = scored.filter(col("q_keep"))
@@ -1803,10 +1804,9 @@ object Dedup {
       .withColumn("rn", row_number().over(byFp))
       .select(col("doc_id"),
         (col("known").isNull && col("rn") === 1).as("dup_keep"))
-    val flagged = scored.join(dedupFlags, Seq("doc_id"), "left")
+    val flagged = Lineage.cut(scored.join(dedupFlags, Seq("doc_id"), "left")
       .withColumn("admitted",
-        col("q_keep") && coalesce(col("dup_keep"), lit(false)))
-      .localCheckpoint()
+        col("q_keep") && coalesce(col("dup_keep"), lit(false))))
     val admitted = flagged.filter(col("admitted"))
       .select(col("doc_id"), col("text"))
     val scrubbed = scrubWithSpans(admitted,
@@ -1916,10 +1916,9 @@ object Dedup {
       val batch = withBucket.filter(col("bucket") >= 95).drop("bucket")
       // the two persisted admission indexes, materialized from the
       // archive ONCE (production keeps them as tables; cf. d24/d71)
-      val fpIdx = archive.select(TextStats.fingerprint(col("text")).as("fp"))
-        .distinct().localCheckpoint()
-      val spanIdx = fingerprintIndex(archive, windowTokens = 8)
-        .localCheckpoint()
+      val fpIdx = Lineage.cut(archive.select(TextStats.fingerprint(col("text")).as("fp"))
+        .distinct())
+      val spanIdx = Lineage.cut(fingerprintIndex(archive, windowTokens = 8))
       incrementalCuration(batch, fpIdx, spanIdx, windowTokens = 8,
         minQuality = 0.45)
     })
@@ -2099,7 +2098,7 @@ object Dedup {
       val batch = withBucket.filter(col("bucket") >= 95).drop("bucket")
       // production: the index is a persisted table and the bloom a stored
       // per-snapshot artifact; built inline here to stand in for both
-      val index = contentHashIndex(archive).localCheckpoint()
+      val index = Lineage.cut(contentHashIndex(archive))
       newDocsViaBloom(batch, index, expectedItems = 1000L, fpp = 0.01)
     })
 
@@ -2142,9 +2141,8 @@ object Dedup {
     // shingle arrays is itself expensive — but at corpus scale the
     // three re-shingling passes it removes are corpus-bound while the
     // cache is one pass, the same trade d19's composition makes.
-    val s = docs.select(col(idCol).as("doc_id"),
-      shingles(col(textCol), nGram).as("sh"))
-      .localCheckpoint(false)
+    val s = Lineage.cut(docs.select(col(idCol).as("doc_id"),
+      shingles(col(textCol), nGram).as("sh")), eager = false)
     val h = s.select(col("doc_id"), explode(col("sh")).as("u"))
       .withColumn("hh",
         conv(substring(md5(col("u")), 1, 15), 16, 10).cast("long"))

@@ -267,11 +267,10 @@ object Graph {
     // and the closing semi-join — without it each consumer re-derives
     // the dedup + degree joins (the minhashNearDupPairs lesson: AQE's
     // broadcast conversions defeat ReusedExchange on shared subtrees)
-    val oriented = withDeg.select(
+    val oriented = Lineage.cut(withDeg.select(
         when(toB, struct(col("a").as("u"), col("b").as("v")))
           .otherwise(struct(col("b").as("u"), col("a").as("v"))).as("e"))
-      .select(col("e.u").as("u"), col("e.v").as("v"))
-      .localCheckpoint(false)
+      .select(col("e.u").as("u"), col("e.v").as("v")), eager = false)
     val wedges = oriented.alias("x")
       .join(oriented.select(col("u"), col("v").as("w")).alias("y"), Seq("u"))
       .filter(col("v") =!= col("w"))
@@ -362,9 +361,8 @@ object Graph {
     // pair counts) would each re-run the corpus scan + distinct shuffle
     // otherwise — the triangleCounts/minhashNearDupPairs lesson (AQE
     // re-prunes each copy; ReusedExchange does not survive it)
-    val baskets = lineitem
-      .select(col("l_orderkey"), col("l_partkey")).distinct()
-      .localCheckpoint(false)
+    val baskets = Lineage.cut(lineitem
+      .select(col("l_orderkey"), col("l_partkey")).distinct(), eager = false)
     val n = baskets.select(col("l_orderkey")).distinct()
       .agg(count(lit(1)).as("n"))
     val itemCounts = baskets.groupBy(col("l_partkey"))

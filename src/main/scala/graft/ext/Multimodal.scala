@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 
-import graft.{Q, Tables}
+import graft.{Lineage, Q, Tables}
 
 /** Multimodal-column plumbing for a training-data pipeline: media as
   * opaque `binary` columns with a typed metadata struct, plus a
@@ -335,7 +335,7 @@ object Multimodal {
       val withB = media.withColumn("bucket", bucket)
       val archive = withB.filter(col("bucket") < 95).drop("bucket")
       val batch = withB.filter(col("bucket") >= 95).drop("bucket")
-      val idx = mediaHashIndex(archive).localCheckpoint()
+      val idx = Lineage.cut(mediaHashIndex(archive))
       mediaIncrementalDedup(batch, idx)
     })
 

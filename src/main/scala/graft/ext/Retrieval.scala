@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Q, Tables}
+import graft.{Lineage, Q, Tables}
 
 /** Lexical retrieval over the document corpus — the inverted-index /
   * BM25 family a training-data pipeline uses for retrieval-based
@@ -87,12 +87,12 @@ object Retrieval {
     // per consumer (AQE re-prunes each copy; ReusedExchange does not
     // survive it). Materialize once: this is the same barrier the
     // persisted production index pays at build time, amortized over
-    // every query batch thereafter. Measured (round 7, same-JVM
-    // alternating min-of-3 at sf0.1): materialized ≈ fully lazy — the
-    // barrier is free here; the postings build is 0.5 s of a 3.97 s
-    // query, scoring the rest. Callers holding an already-persisted
-    // index call [[bm25TopKFromPostings]] directly.
-    bm25TopKFromPostings(postings(docs).localCheckpoint(), queries, k, k1, b,
+    // every query batch thereafter. EAGER, because it pays: same-JVM
+    // alternating runs on the 500-doc sf0.01 corpus (10 per shape,
+    // local[4]) put the median at 0.82 s eager, 1.00 s lazy and 1.29 s
+    // uncut. Callers holding an already-persisted index call
+    // [[bm25TopKFromPostings]] directly.
+    bm25TopKFromPostings(Lineage.cut(postings(docs)), queries, k, k1, b,
       maxDfFrac)
   }
 
@@ -305,8 +305,8 @@ object Retrieval {
       val archive = withH.filter(col("h") < 90).drop("h")
       val batch1 = withH.filter(col("h") >= 90 && col("h") < 95).drop("h")
       val batch2 = withH.filter(col("h") >= 95).drop("h")
-      val idx0 = postings(archive).localCheckpoint()
-      val idx1 = appendToPostings(idx0, batch1).localCheckpoint()
+      val idx0 = Lineage.cut(postings(archive))
+      val idx1 = Lineage.cut(appendToPostings(idx0, batch1))
       val idx2 = appendToPostings(idx1, batch2)
       bm25TopKFromPostings(idx2, queries, k = 5)
     })
@@ -483,7 +483,7 @@ object Retrieval {
     * cross-engine reproducible. */
   def tfidfKeywords(docs: DataFrame, k: Int): DataFrame = {
     require(k > 0, "k must be positive")
-    val post = postings(docs).localCheckpoint()
+    val post = Lineage.cut(postings(docs))
     val df = post.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val n = post.agg(count_distinct(col("doc_id")).cast("double").as("n"))
     val score = round(col("tf") *
@@ -631,7 +631,7 @@ object Retrieval {
     val cols = Seq("qid", "vec_id", "rel", "embedding")
     require(cols.forall(candidates.columns.contains),
       s"candidates must carry ${cols.mkString(", ")}")
-    var remaining = candidates.select(cols.map(col): _*).localCheckpoint(false)
+    var remaining = Lineage.cut(candidates.select(cols.map(col): _*), eager = false)
     var selected: DataFrame = null
     var out: DataFrame = null
     for (step <- 1 to k) {
@@ -652,19 +652,18 @@ object Retrieval {
         col("rel") * lambda - col("__max_sim") * (1.0 - lambda))
       val w = Window.partitionBy(col("qid"))
         .orderBy(col("score").desc, col("vec_id").asc)
-      val pick = scored.withColumn("__rn", row_number().over(w))
+      val pick = Lineage.cut(scored.withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1)
         .drop("__rn", "__max_sim")
-        .withColumn("step", lit(step))
-        .localCheckpoint(false)
+        .withColumn("step", lit(step)), eager = false)
       selected =
         if (selected == null) pick else selected.unionByName(pick)
       val stepOut = pick.select(col("qid"), col("step"), col("vec_id"),
         col("score"))
       out = if (out == null) stepOut else out.unionByName(stepOut)
-      remaining = remaining.join(
+      remaining = Lineage.cut(remaining.join(
         pick.select(col("qid"), col("vec_id")), Seq("qid", "vec_id"),
-        "left_anti").localCheckpoint(false)
+        "left_anti"), eager = false)
     }
     out
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Q, Tables}
+import graft.{Lineage, Q, Tables}
 
 /** Similarity search over the `embeddings` table (`Array[Float]`, 64-dim):
   * brute-force cosine top-k as the exact baseline, a k-NN self-join, an
@@ -515,11 +515,10 @@ object Similarity {
         .select(col("embedding")).head().getSeq[Float](0).toArray
       // each probe materializes BEFORE the next append mutates the layout
       def probe(stage: Int): DataFrame =
-        IvfIndex.probe(s, lists, qv, k = 10, nProbe = 4,
+        Lineage.cut(IvfIndex.probe(s, lists, qv, k = 10, nProbe = 4,
             excludeVecId = Some(0L), cs = cs)
           .withColumn("stage", lit(stage))
-          .select(col("stage"), col("vec_id"), col("label"), col("cos_sim"))
-          .localCheckpoint()
+          .select(col("stage"), col("vec_id"), col("label"), col("cos_sim")))
       val p1 = probe(1)
       IvfIndex.append(batch1, "embedding", lists, cs)
       val p2 = probe(2)
@@ -657,13 +656,12 @@ object Similarity {
     val centroidsLit = typedlit(cs.map(_.toIndexedSeq).toIndexedSeq)
     val w = Window.partitionBy(col("cid"))
       .orderBy(col("centroid_sim").desc, col("vec_id").asc)
-    val ranked = embeddings
+    val ranked = Lineage.cut(embeddings
       .select(col("vec_id"), col("embedding"),
         graft.plans.NearestCentroidExpr.nearestCentroid(col("embedding"), cs).as("cid"))
       .withColumn("centroid_sim",
         round(cosine(col("embedding"), element_at(centroidsLit, col("cid") + 1)), 6))
-      .withColumn("rk", row_number().over(w))
-      .localCheckpoint()
+      .withColumn("rk", row_number().over(w)))
     val a = ranked.select(col("cid"), col("embedding").as("ea"), col("rk").as("rka"))
     val b = ranked.select(col("cid"), col("vec_id").as("idb"),
       col("embedding").as("eb"), col("rk").as("rkb"))
@@ -729,12 +727,13 @@ object Similarity {
     * |batch| × probed-list size, never |batch| × |archive|.
     *
     * Scale shape: archive assignment is the zero-shuffle codegen'd
-    * projection, materialized once (at 100 TB it IS a persisted table
-    * bucketed by cluster id); each batch vector multi-probes its
-    * `nProbe` nearest clusters (codegen'd kernel) and equi-joins only
-    * those clusters' members. Like all probe-the-index admission
-    * (d18/d24/d77), the answer is forward-only: archive members are
-    * never re-judged against the batch.
+    * projection, read by the probe join alone, so it is not cut (at
+    * 100 TB it IS a persisted table bucketed by cluster id); each batch
+    * vector multi-probes its `nProbe` nearest clusters (codegen'd
+    * kernel) and equi-joins only those clusters' members. Like all
+    * probe-the-index admission (d18/d24/d77), the answer is
+    * forward-only: archive members are never re-judged against the
+    * batch.
     *
     * Returns every batch vector with `kept` (1 = admitted), and its best
     * probed archive neighbor (`nn_id`, `nn_sim`; NULL when the probed
@@ -748,7 +747,6 @@ object Similarity {
       .select(col("vec_id").as("a_id"), col("embedding").as("a_emb"),
         graft.plans.NearestCentroidExpr.nearestCentroid(col("embedding"), cs)
           .as("cid"))
-      .localCheckpoint() // stands in for the persisted assignment table
     semanticDedupAgainstAssigned(batch, assigned, cs, nProbe, threshold)
   }
 
@@ -1422,13 +1420,12 @@ object Similarity {
     * regime only. */
   private[graft] def marginMineExchange(src: DataFrame, tgt: DataFrame, k: Int,
       tau: Double): DataFrame = {
-    val scores = src
+    val scores = Lineage.cut(src
       .select(col("vec_id").as("src_id"), col("embedding").as("__se"))
       .crossJoin(broadcast(tgt.select(col("vec_id").as("tgt_id"),
         col("embedding").as("__te"))))
       .select(col("src_id"), col("tgt_id"),
-        round(cosine(col("__se"), col("__te")), 6).as("cos_sim"))
-      .localCheckpoint(false)
+        round(cosine(col("__se"), col("__te")), 6).as("cos_sim")), eager = false)
     marginSelect(scores,
       knnAvgOf(scores, "src_id", "tgt_id", k, "src_knn"),
       knnAvgOf(scores, "tgt_id", "src_id", k, "tgt_knn"), tau)
@@ -1516,7 +1513,7 @@ object Similarity {
     // forward candidates feed TWO consumers (source averages + the
     // margin join) — lazily cut so the probe computes once under AQE;
     // backward candidates have one consumer, no cut needed
-    val fwd = probeScores(src, "src_id", tgt, "tgt_id", csT).localCheckpoint(false)
+    val fwd = Lineage.cut(probeScores(src, "src_id", tgt, "tgt_id", csT), eager = false)
     val bwd = probeScores(tgt, "tgt_id", src, "src_id", csS)
     marginSelect(fwd,
       knnAvgOf(fwd, "src_id", "tgt_id", k, "src_knn"),
@@ -2240,11 +2237,10 @@ object Similarity {
         .select(col("embedding")).head().getSeq[Float](0).toArray
       // each probe materializes BEFORE the layout mutates (the s22 rule)
       def probe(stage: Int): DataFrame =
-        AnnIndexStreaming.probe(s, idx, qv, k = 10, nProbe = 4,
+        Lineage.cut(AnnIndexStreaming.probe(s, idx, qv, k = 10, nProbe = 4,
             excludeVecId = Some(0L))
           .withColumn("stage", lit(stage))
-          .select(col("stage"), col("vec_id"), col("label"), col("cos_sim"))
-          .localCheckpoint()
+          .select(col("stage"), col("vec_id"), col("label"), col("cos_sim")))
       val p1 = probe(1)
       AnnIndexStreaming.admitBatch(batch1, 0L, "embedding", idx)
       val p2 = probe(2)
@@ -2284,8 +2280,7 @@ object Similarity {
     * DuckDB oracle replay the identical graph. */
   def nnDescentGraph(embeddings: DataFrame, k: Int, iters: Int,
       reverseCap: Int): DataFrame = {
-    val vecs = embeddings.select(col("vec_id"), col("embedding"))
-      .localCheckpoint()
+    val vecs = Lineage.cut(embeddings.select(col("vec_id"), col("embedding")))
     val hashed = vecs.select(col("vec_id"),
       md5(concat(lit("nnd:"), col("vec_id").cast("string"))).as("h"))
     val ranked = graft.operators.GlobalOrder.withRanks(hashed,
@@ -2298,11 +2293,10 @@ object Similarity {
       .select(col("vec_id").as("src"), col("pos"),
         explode(sequence(lit(1), lit(k))).as("j"))
       .withColumn("npos", (col("pos") + col("j")) % n) // below the generate
-    var edges = offs
+    var edges = Lineage.cut(offs
       .join(pos.select(col("pos").as("npos"), col("vec_id").as("dst")), "npos")
       .select(col("src"), col("dst"), lit(0.0).as("cos_sim"),
-        col("j").cast("int").as("rk"))
-      .localCheckpoint()
+        col("j").cast("int").as("rk")))
     val embSrc = vecs.select(col("vec_id").as("src"), col("embedding").as("se"))
     val embDst = vecs.select(col("vec_id").as("dst"), col("embedding").as("de"))
     for (_ <- 1 to iters) {
@@ -2311,7 +2305,7 @@ object Similarity {
       val rev = fwd.select(col("dst").as("src"), col("src").as("dst"))
         .withColumn("rrk", row_number().over(wRev))
         .filter(col("rrk") <= reverseCap).drop("rrk")
-      val g = fwd.union(rev).distinct().localCheckpoint()
+      val g = Lineage.cut(fwd.union(rev).distinct())
       val non = g.as("g1").join(g.as("g2"), col("g1.dst") === col("g2.src"))
         .select(col("g1.src").as("src"), col("g2.dst").as("dst"))
         .filter(col("src") =!= col("dst"))
@@ -2321,9 +2315,8 @@ object Similarity {
           round(cosine(col("se"), col("de")), 6).as("cos_sim"))
       val w = Window.partitionBy(col("src"))
         .orderBy(col("cos_sim").desc, col("dst").asc)
-      edges = scored.withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= k)
-        .localCheckpoint()
+      edges = Lineage.cut(scored.withColumn("rk", row_number().over(w))
+        .filter(col("rk") <= k))
     }
     edges
   }

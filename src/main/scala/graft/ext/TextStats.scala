@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
-import graft.{Q, Tables}
+import graft.{Lineage, Q, Tables}
 
 /** Text-analysis operators for an LLM training-data pipeline (BASELINE
   * north star): token counting, quality scoring, n-gram-heuristic language
@@ -1136,7 +1136,7 @@ object TextStats {
     // re-scan the reference text (ReusedExchange does not survive AQE's
     // per-consumer re-pruning). Materialized once: the model IS the
     // persisted artifact of this operator in production.
-    ngramLmScoreFromCounts(lmBigramCounts(reference).localCheckpoint(), docs, alpha)
+    ngramLmScoreFromCounts(Lineage.cut(lmBigramCounts(reference)), docs, alpha)
 
   /** The LM model artifact: reference bigram counts `(bg, c12)` — the
     * ONLY state [[ngramLmScoreFromCounts]] needs (context counts and
@@ -1691,13 +1691,13 @@ object TextStats {
       iters: Int = 2, lr: Double = 0.1): (Array[Double], Double) = {
     require(iters >= 1 && buckets > 0 && lr > 0)
     // featurization is ONE in-row projection (no explode, no exchange);
-    // localCheckpoint: the skinny (id, y, x[buckets]) table is scanned
-    // once per iteration
-    val feats = labeled
+    // the skinny (id, y, x[buckets]) table is cut once and scanned once
+    // per iteration. LAZY: the count below reads every partition, so it
+    // materializes the cut — an eager cut would add a job doing the same
+    val feats = Lineage.cut(labeled
       .select(col(idCol), col(labelCol).cast("double").as("y"),
         graft.plans.HashedBucketCountsExpr.hashedBucketCounts(
-          lower(col(textCol)), buckets).as("x"))
-      .localCheckpoint()
+          lower(col(textCol)), buckets).as("x")), eager = false)
     val nDocs = feats.count().toDouble
     val w = Array.fill(buckets)(0.0)
     var bias = 0.0
@@ -2780,9 +2780,8 @@ object TextStats {
     val vocab = docs.select(explode(tokens(col("text"))).as("w"))
       .filter(col("w").rlike("^[a-z0-9]+$"))
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-    var state = vocab.select(col("freq"),
-      concat_ws(" ", filter(split(col("w"), ""), x => x =!= "")).as("sym"))
-      .localCheckpoint()
+    var state = Lineage.cut(vocab.select(col("freq"),
+      concat_ws(" ", filter(split(col("w"), ""), x => x =!= "")).as("sym")))
     val merges = Seq.newBuilder[Row]
     for (r <- 1 to k) {
       val top = state
@@ -2796,9 +2795,8 @@ object TextStats {
         val cnt = top(0).getLong(1)
         val Array(a, b) = pair.split(" ", 2)
         merges += Row(r, a, b, cnt)
-        state = state.select(col("freq"),
-          graft.plans.BpeApplyExpr.bpeApply(col("sym"), lit(pair)).as("sym"))
-          .localCheckpoint()
+        state = Lineage.cut(state.select(col("freq"),
+          graft.plans.BpeApplyExpr.bpeApply(col("sym"), lit(pair)).as("sym")))
       }
     }
     graft.LocalTable.of(spark, StructType(Seq(
@@ -3399,8 +3397,10 @@ object TextStats {
     batches.zipWithIndex.map { case (b, i) =>
       // materialize each admission once: the spent aggregate below AND
       // the returned union both consume it, and tokenBudgetSelect's
-      // prefix-sum machinery must not re-run per consumer
-      val admitted = tokenBudgetSelect(b, remaining).localCheckpoint()
+      // prefix-sum machinery must not re-run per consumer. LAZY: the
+      // spent aggregate reads every partition, so its job materializes
+      // the cut — an eager cut would add a job doing the same
+      val admitted = Lineage.cut(tokenBudgetSelect(b, remaining), eager = false)
       val spent = admitted.agg(coalesce(sum(col("n_tokens")), lit(0L)))
         .collect()(0).getLong(0)
       remaining -= spent
@@ -3793,11 +3793,11 @@ object TextStats {
         .select(col("doc_id"), col("text"), bucket.as("bucket"))
       val candidates = docs.filter(col("bucket") >= 50)
         .select(col("doc_id"), col("text"))
-      val archiveCounts = lmBigramCounts(
-        docs.filter(col("bucket") < 30).select(col("text"))).localCheckpoint()
-      val grownCounts = appendToLmCounts(archiveCounts,
+      val archiveCounts = Lineage.cut(lmBigramCounts(
+        docs.filter(col("bucket") < 30).select(col("text"))))
+      val grownCounts = Lineage.cut(appendToLmCounts(archiveCounts,
         docs.filter(col("bucket") >= 30 && col("bucket") < 50)
-          .select(col("text"))).localCheckpoint()
+          .select(col("text"))))
       ngramLmScoreFromCounts(archiveCounts, candidates, alpha = 0.5)
         .select(lit(0L).as("stage"), col("doc_id"), col("n_bigrams"),
           col("avg_logprob"))
@@ -3862,9 +3862,8 @@ object TextStats {
       // one corpus pass feeds both the exact counts and the probe set —
       // the global top-20 rolls up from the (source, token) counts
       // instead of re-exploding the text
-      val counts = toks.groupBy(col("source"), col("token"))
-        .agg(count(lit(1)).as("c_true"))
-        .localCheckpoint()
+      val counts = Lineage.cut(toks.groupBy(col("source"), col("token"))
+        .agg(count(lit(1)).as("c_true")))
       val probe = counts.groupBy(col("token")).agg(sum(col("c_true")).as("c_g"))
         .orderBy(col("c_g").desc, col("token").asc).limit(20).select("token")
       counts.join(broadcast(probe), Seq("token"))

@@ -3,6 +3,8 @@ package graft.lake
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Lineage
+
 /** The reference's trusted-layer transformer abstraction
   * (base_entity_transformer.py:14-63): a multi-input → single-output
   * entity transform with pre/transform/post hooks, plus the write
@@ -95,10 +97,12 @@ object TrustedLoad {
 
     // 4. W1 dedup within the batch, then version-guarded MERGE upsert.
     //    Materialized once: the row count and the merge both consume the
-    //    deduped frame — without the checkpoint the dedup would compute
-    //    twice (count job + merge input).
-    val deduped = Lake.dedupByKeys(out, transformer.primaryKey, Some(versionCol))
-      .localCheckpoint()
+    //    deduped frame — without the cut the dedup would compute twice
+    //    (count job + merge input). LAZY: the count reads every partition,
+    //    so it materializes the cut — an eager cut would add a job doing
+    //    the same.
+    val deduped = Lineage.cut(
+      Lake.dedupByKeys(out, transformer.primaryKey, Some(versionCol)), eager = false)
     val rows = deduped.count()
     ParquetTableFormat.merge(spark, targetPath, deduped, transformer.primaryKey,
       versionCol, transformer.partitionCol.toSeq)

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.Lineage
+
 /** Medallion-lake table operations re-expressed Spark-first (SURVEY §2.1,
   * §2.2, §2.5): dedup-by-rank, schema evolution, MERGE-shaped upsert,
   * idempotent delete+append, ingestion lineage columns.
@@ -279,8 +281,7 @@ object Lake {
     // (sampling seeds derive from RDD ids) — file SPLIT POINTS are
     // sampling-dependent either way; row contents and the clustering
     // property are not.
-    zorderBy(df, c1, c2, bits)
-      .localCheckpoint(false)
+    Lineage.cut(zorderBy(df, c1, c2, bits), eager = false)
       .repartitionByRange(numFiles, col("__z"))
       .sortWithinPartitions(col("__z"))
       .drop("__z")

@@ -3,6 +3,8 @@ package graft.lake
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Lineage
+
 /** The trusted layer's lake table: a plain partitioned parquet
   * directory carrying the reference's lake verbs — create/append
   * (etls_raw/main.py:318-345) and a newer-version-wins MERGE INTO
@@ -159,7 +161,7 @@ object ParquetTableFormat {
     if (!exists(spark, path)) { createOrAppend(source, path, partitionCols); return }
     val target = read(spark, path).select(source.columns.map(col).toIndexedSeq: _*)
     // materialize the merge before the rewrite replaces its own input
-    val merged = Lake.mergeUpsert(target, source, keys, versionCol).localCheckpoint()
+    val merged = Lineage.cut(Lake.mergeUpsert(target, source, keys, versionCol))
     rewrite(spark, path, merged, partitionCols)
   }
 }

@@ -130,13 +130,15 @@ object SoakWorker {
     // duplicate writer can hit: the quantizer-coherence tripwire and the
     // pending-marker lost-claim (IllegalStateException "retry the
     // batch"), and StagedCommit's vanished-target residual
-    // (IOException "caller must retry"). Bounded — anything else, or a
-    // 6th failure, propagates and fails the worker loudly.
-    def withEngineRetry(what: String)(op: => Unit): Unit = {
+    // (IOException "caller must retry") — admissions and maintenance
+    // (fold, retrain) alike, since a retrain or fold that loses the
+    // staged-commit race throws the same residual. Bounded — anything
+    // else, or a 6th failure, propagates and fails the worker loudly.
+    def withEngineRetry[A](what: String)(op: => A): A = {
       var attempts = 0
-      var done = false
-      while (!done) {
-        try { op; done = true }
+      var result: Option[A] = None
+      while (result.isEmpty) {
+        try result = Some(op)
         catch {
           case e @ (_: IllegalStateException | _: java.io.IOException)
               if attempts < 5 && Option(e.getMessage).exists(m =>
@@ -148,6 +150,7 @@ object SoakWorker {
             System.out.flush()
         }
       }
+      result.get
     }
     (0 until nDoc).foreach { i =>
       val docs = spark.read.parquet(s"$base/doc_chunks/$i")
@@ -166,11 +169,15 @@ object SoakWorker {
           "embedding", s"$base/ann")
       }
       if (i % 2 == 1) {
-        val folded = DocIndexStreaming.maybeCompactPostings(
-          spark, s"$base/postings", maxUnionLegs = 3)
-        val retrained = AnnIndexStreaming.maybeRetrain(
-          spark, s"$base/ann", "embedding", heldOut, k = 4, nProbe = 2,
-          minRecall = 0.6, maxImbalance = 1.2, retrainK = 8, iters = 0)
+        val folded = withEngineRetry(s"batch=$i postings fold") {
+          DocIndexStreaming.maybeCompactPostings(
+            spark, s"$base/postings", maxUnionLegs = 3)
+        }
+        val retrained = withEngineRetry(s"batch=$i ann retrain") {
+          AnnIndexStreaming.maybeRetrain(
+            spark, s"$base/ann", "embedding", heldOut, k = 4, nProbe = 2,
+            minRecall = 0.6, maxImbalance = 1.2, retrainK = 8, iters = 0)
+        }
         System.out.println(
           s"[worker-$workerId] batch=$i folded=$folded retrained=$retrained")
         System.out.flush()

@@ -7,14 +7,15 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `src/main` carries only the entry points the project runs: the
-  * verify and bench mains (`Verify`, `Bench`), the plan dumper, the two
-  * workers the crash specs fork, and the staged-commit bench. A single-use probe
+  * verify and bench mains (`Verify`, `Bench`), the plan dumper and the
+  * two workers the crash specs fork. A single-use probe or micro-bench
   * main belongs in a scratch checkout, not in the engine; the per-layer
   * span tracer under `perfbench/` does the timing such probes did.
   *
   * The same source scan keeps the engine off SparkContext-global
   * checkpoint state: the reliable-vs-local lineage cut reads the
   * session's checkpoint dir (`graft.Lineage`) and never sets it, and
+  * `graft.Lineage.cut` is the only place that cuts lineage. It also
   * pins the operator surface: a public operator in `ext/`,
   * `operators/`, `streaming/` or `lake/` that nothing in the engine or
   * the benchmark calls is deleted, narrowed to `private[graft]`, or
@@ -24,7 +25,7 @@ class DevMainsSpec extends AnyFunSuite {
   private val allowed = Set(
     "graft.Bench", "graft.Verify",
     "graft.tools.Explain", "graft.tools.SoakWorker",
-    "graft.tools.LogTableCrashWorker", "graft.tools.StagedCommitBench")
+    "graft.tools.LogTableCrashWorker")
 
   private val PackageDecl = """(?m)^\s*package\s+([\w.]+)""".r
   private val ObjectDecl = """\bobject\s+(\w+)""".r
@@ -168,6 +169,16 @@ class DevMainsSpec extends AnyFunSuite {
       s"perfbench/src: ${unlisted.mkString(", ")}")
     assert(stale.isEmpty, "allowlisted defs that now have a caller or are " +
       s"gone: ${stale.mkString(", ")}")
+  }
+
+  test("no file under src/main cuts lineage outside graft.Lineage") {
+    val cut = """\blocalCheckpoint\s*\(|\.checkpoint\s*\(""".r
+    val callers = scalaSources(Paths.get("src/main/scala"))
+      .filter(f => f.getFileName.toString != "Lineage.scala" &&
+        cut.findFirstIn(codeOnly(Files.readString(f))).isDefined)
+      .map(_.toString).sorted
+    assert(callers.isEmpty, "direct lineage cuts (call graft.Lineage.cut " +
+      s"instead) in: ${callers.mkString(", ")}")
   }
 
   test("no file under src/main sets the checkpoint dir") {
