@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** The engine's only lineage cut: every materialization barrier in
   * `src/main` goes through [[cut]] (DevMainsSpec pins it), so the
@@ -35,11 +36,29 @@ import org.apache.spark.sql.DataFrame
   * A reliable cut is always written eagerly: Spark writes a reliable
   * checkpoint in a job of its own after the first action, which
   * recomputes the unpersisted subtree, so deferring it would compute the
-  * subtree twice. */
+  * subtree twice.
+  *
+  * A lazy cut's lineage is truncated when the first job that reads it
+  * ends, but a job that started before then still reports the SQL
+  * metrics of the subtree behind the cut when its tasks end. So the
+  * subtree's executed plan, which owns those metrics, lives as long as
+  * the cut's RDD does; without it the driver garbage-collects the
+  * metrics and logs "Failed to update accumulator" for each one. */
 object Lineage {
+
+  private val lazyCutPlans =
+    java.util.Collections.synchronizedMap(new java.util.WeakHashMap[AnyRef, AnyRef]())
 
   def cut(df: DataFrame, eager: Boolean = true): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
       df.checkpoint(eager = true)
-    else df.localCheckpoint(eager)
+    else if (eager) df.localCheckpoint(eager = true)
+    else {
+      val cut = df.localCheckpoint(eager = false)
+      cut.queryExecution.logical.foreach {
+        case l: LogicalRDD => lazyCutPlans.put(l.rdd, df.queryExecution.executedPlan)
+        case _ =>
+      }
+      cut
+    }
 }

@@ -308,7 +308,7 @@ object Dedup {
     * count-gated hot/cold split, the distinct. Emits (doc_a, doc_b)
     * candidate pairs, doc_a < doc_b within cold buckets, representative
     * first for hot ones. */
-  def minhashNearDupCandidates(docs: DataFrame, nGram: Int, k: Int,
+  private[graft] def minhashNearDupCandidates(docs: DataFrame, nGram: Int, k: Int,
       bands: Int, rowsPerBand: Int,
       bucketCap: Int = DefaultBucketCap): DataFrame =
     lshCandidatePairs(

@@ -45,7 +45,7 @@ object Multimodal {
       * failing the batch — the per-record behavior a 100 TB decode pass
       * needs (one corrupt file must not kill a partition). */
     object RealCodec extends MediaDecoder {
-      def decode(docId: Long, kind: String, bytes: Array[Byte]): MediaFeatures = {
+      override def decode(docId: Long, kind: String, bytes: Array[Byte]): MediaFeatures = {
         val decoded = kind match {
           case "image" => decodeImage(bytes)
           case "audio" => decodeAudio(bytes)
@@ -107,7 +107,7 @@ object Multimodal {
       * derives "image dimensions" from the doc id and a fake intensity
       * from the raw bytes — stable, content-dependent, codec-free. */
     object DeterministicStub extends MediaDecoder {
-      def decode(docId: Long, kind: String, bytes: Array[Byte]): MediaFeatures = {
+      override def decode(docId: Long, kind: String, bytes: Array[Byte]): MediaFeatures = {
         val w = (docId % 64 + 1).toInt
         val h = (docId % 48 + 1).toInt
         val mean =

@@ -1736,7 +1736,7 @@ object TextStats {
     * ([[graft.plans.HashedBucketCountsExpr]]), the weight vector a
     * generated-code reference object ([[graft.plans.DotProductLitExpr]]),
     * margin and sigmoid in the same projection. */
-  def scoreHashedLogReg(docs: DataFrame, textCol: String,
+  private[graft] def scoreHashedLogReg(docs: DataFrame, textCol: String,
       weights: Array[Double], bias: Double,
       idCol: String = "doc_id"): DataFrame = {
     docs

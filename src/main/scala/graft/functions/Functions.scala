@@ -31,38 +31,9 @@ object money {
     val parsed  = when(length(num) > 0, num.cast("double")).otherwise(lit(null).cast("double"))
     when(canon.rlike("-$"), -parsed).otherwise(parsed)
   }
-
-  /** double → pt-BR money string "R$ 1.234,56".
-    * Reference: compare_budget.py:108-111 (swap '.'/',' separators).
-    */
-  def toBrl(c: Column): Column =
-    concat(lit("R$ "), translate(format_number(c, 2), ",.", ".,"))
-
-  /** Signed value from a (+|-) marker column — BB statement sign suffix
-    * (bb_statement.py:176-178). */
-  def signedValue(value: Column, sinal: Column): Column =
-    when(sinal === "+", value).otherwise(-value)
 }
 
 object textnorm {
-
-  /** Collapse runs of spaces/tabs and trim (bb_bill.py:24-25 `normalize_space`). */
-  def normalizeSpace(c: Column): Column =
-    trim(regexp_replace(c, "[ \\t]+", " "))
-
-  /** Uppercase + whitespace-collapse used before rule matching
-    * (rules/categories_bb.py:219-220 `_norm`). */
-  def normUpper(c: Column): Column = upper(normalizeSpace(c))
-
-  /** Filesystem-safe slug: lower, non [a-z0-9-_.] → '_', squeeze repeats
-    * (etls_raw/main.py:134-139). */
-  def slugify(c: Column): Column =
-    regexp_replace(regexp_replace(lower(trim(c)), "[^a-z0-9\\-_\\.]+", "_"), "_+", "_")
-
-  /** Brazilian CPF normalization: strip [.-\s], left-pad to 11 with '0',
-    * NULL stays NULL (datatrack_utils/scripts/transform/helpers.py:84-98). */
-  def normalizeCpf(c: Column): Column =
-    lpad(regexp_replace(c, "[.\\-\\s]", ""), 11, "0")
 
   /** Blank/whitespace-only → NULL (helpers.py:26-34). */
   def blankToNull(c: Column): Column =

@@ -68,15 +68,4 @@ object FinTrackJob {
       df.coalesce(1).write.mode("overwrite")
         .option("header", "true").csv(s"$dir/$name")
     }
-
-  /** The full slice: CSV in → two report frames + CSVs on disk. */
-  def run(spark: SparkSession, csvPath: String, clientSlug: String,
-      budget: Seq[(String, Double)], reportDir: String,
-      ingestedAt: java.sql.Timestamp): (DataFrame, DataFrame) = {
-    val raw     = formsToRaw(spark, csvPath, clientSlug, None, ingestedAt)
-    val monthly = monthlySummary(raw)
-    val compare = compareBudget(monthly, budget)
-    writeReports(reportDir, "monthly_by_category" -> monthly, "budget_vs_actual" -> compare)
-    (monthly, compare)
-  }
 }

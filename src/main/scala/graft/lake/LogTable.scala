@@ -428,7 +428,7 @@ object LogTable {
 
   /** The live table. Old data files missing later-evolved columns read
     * as typed NULLs (the explicit snapshot schema backfills them). */
-  def read(spark: SparkSession, path: String): DataFrame =
+  private[graft] def read(spark: SparkSession, path: String): DataFrame =
     readFiles(spark, path, snapshot(path))
 
   /** `VERSION AS OF` time travel. */

@@ -82,55 +82,6 @@ object Parsers {
       }.out
   }
 
-  /** BB bill summary record — representative subset of `FaturaResumo`
-    * (bb_bill.py:64-86); fields recovered by first-match regexes over the
-    * whole document (F6 find-first extraction, bb_bill.py:43-58). All
-    * nullable: absent fields stay null. */
-  final case class FaturaResumo(
-      titular: String, vencimento: String, valor_total: java.lang.Double,
-      limite_unico: java.lang.Double, pagamento_minimo: java.lang.Double,
-      fatura_fechada_em: String)
-
-  private val RVencimento = """Vencimento:?\s*(\d{2}/\d{2}/\d{4})""".r.unanchored
-  private val RValorTotal = """Valor total desta fatura\s+R\$\s*([\d.,]+)""".r.unanchored
-  private val RValor      = """\bValor\b\s*R\$\s*([\d.,]+)""".r.unanchored
-  private val RTotal      = """\bTotal\b\s*R\$\s*([\d.,]+)""".r.unanchored
-  private val RLimite     = """Limite único\s+R\$\s*([\d.,]+)""".r.unanchored
-  private val RPagMin     = """Pagamento mínimo:?\s*R\$\s*([\d.,]+)""".r.unanchored
-  private val RPagMinWin  = """(?s)Pagamento mínimo.{0,250}?R\$\s*([\d.,]+)""".r.unanchored
-  private val RFechada    = """Fatura fechada em:?\s*(\d{2}/\d{2}/\d{4})""".r.unanchored
-  private val RDate       = """(\d{2}/\d{2}/\d{4})""".r.unanchored
-
-  /** `find_date_after_keyword` (bb_bill.py:48-58): first dd/MM/yyyy inside
-    * a bounded window after the keyword — how the real faturas lay out the
-    * "Vencimento" header with its value a few lines below. */
-  private def dateAfterKeyword(text: String, keyword: String, window: Int): Option[String] = {
-    val i = text.indexOf(keyword)
-    if (i < 0) None
-    else RDate.findFirstMatchIn(
-      text.substring(i, math.min(text.length, i + keyword.length + window)))
-      .map(_.group(1))
-  }
-
-  def parseFaturaResumo(text: String): FaturaResumo = {
-    def find1(re: scala.util.matching.Regex): Option[String] =
-      re.findFirstMatchIn(text).map(_.group(1))
-    def money1(res: scala.util.matching.Regex*): java.lang.Double =
-      res.view.flatMap(find1(_)).headOption.flatMap(brl).map(Double.box).orNull
-    // titular: first card-context holder, else first all-caps name line
-    val titular = text.linesIterator.map(normSpace).collectFirst {
-      case CardContext(h, _) if h.trim.nonEmpty => normSpace(h)
-      case l if l.matches("[A-ZÀ-Þ][A-ZÀ-Þ ]{5,}") => l
-    }.orNull
-    FaturaResumo(
-      titular,
-      find1(RVencimento).orElse(dateAfterKeyword(text, "Vencimento", 250)).orNull,
-      money1(RValorTotal, RValor, RTotal),
-      money1(RLimite),
-      money1(RPagMin, RPagMinWin),
-      find1(RFechada).orNull)
-  }
-
   // ---------- BB checking-account statement ----------------------------
 
   /** One statement movement (extrato_bb_lancamentos, FIXTURES §3). */
@@ -139,18 +90,6 @@ object Parsers {
       historico: String, complemento: String, historico_full: String,
       valor: Double, sinal: String)
 
-  /** Statement header (ExtratoHeader, bb_statement.py:35-42). */
-  final case class ExtratoHeader(
-      cliente: String, periodo_inicio: String, periodo_fim: String,
-      agencia: String, conta: String, competencia: String)
-
-  // Independent header regexes (bb_statement.py:45-74 parse_header) — the
-  // real statements put Agência/Conta/Cliente on one line with colons.
-  private val RCliente = """(?i)Cliente:?\s+([A-ZÀ-ÿa-z ]+)""".r.unanchored
-  private val RPeriodo = """(?i)Período:\s*(\d{2})\s*a\s*(\d{2})/(\d{2})/(\d{4})""".r.unanchored
-  private val RAgencia = """(?i)Agência:\s*([0-9A-Za-z\-]+)""".r.unanchored
-  private val RConta   = """(?i)Conta:\s*([0-9A-Za-z\-]+)""".r.unanchored
-
   private val StmtTxn  = """^(\d{2}/\d{2}/\d{4})(?: (\d{2,}))?(?: (\d{2,}))? (.+?) ([\d.,]+) \(([+-])\)$""".r
   /** Real-layout movement: trailing C (credit) / D (debit) marker, with an
     * optional day-balance pair after it ("Autoatendimento BB" statements:
@@ -158,24 +97,6 @@ object Parsers {
   private val CdTxn    = """^(\d{2}/\d{2}/\d{4}) (.*?) ?([\d.,]+) ([CD])(?: [\d.,]+ [CD])?$""".r
   private val GroupLine = """^[A-Za-zÀ-ÿ][A-Za-zÀ-ÿ /.-]*$""".r
   private val NumToken  = """^[\d.]{3,}$""".r
-
-  def parseExtratoHeader(text: String): Option[ExtratoHeader] = {
-    def find1(re: scala.util.matching.Regex): Option[String] =
-      re.findFirstMatchIn(text).map(_.group(1))
-    val cliente = find1(RCliente).map(normSpace).orNull
-    val agencia = find1(RAgencia).orNull
-    val conta = find1(RConta).orNull
-    val periodo = RPeriodo.findFirstMatchIn(text)
-    if (cliente == null && agencia == null && conta == null && periodo.isEmpty) None
-    else Some(periodo match {
-      case Some(m) =>
-        // "Período: 01 a 30/11/2025" → start shares month/year with end
-        // (date recomposition, bb_statement.py:53-63 / SURVEY F14)
-        val (d0, d1, mm, yyyy) = (m.group(1), m.group(2), m.group(3), m.group(4))
-        ExtratoHeader(cliente, s"$d0/$mm/$yyyy", s"$d1/$mm/$yyyy", agencia, conta, s"$yyyy-$mm")
-      case None => ExtratoHeader(cliente, null, null, agencia, conta, null)
-    })
-  }
 
   /** Line machine with group-section state and continuation-line append
     * (bb_statement.py:84-202): non-transaction mixed-case alpha lines set
@@ -357,23 +278,6 @@ object Parsers {
   final case class BradescoMov(
       data: String, historico: String, documento: String,
       valor: Double, saldo: java.lang.Double, complemento: String)
-
-  /** Bradesco statement header: Nome / Ag / Conta / as-of data. */
-  final case class BradescoExtratoHeader(
-      nome: String, agencia: String, conta: String, data: String)
-
-  private val BradNome  = """(?i)Nome:\s+([A-ZÀ-ÿa-z ]+)""".r.unanchored
-  private val BradAgCta = """(?i)Ag:\s*(\S+)\s*\|\s*Conta:\s*(\S+)""".r.unanchored
-  private val BradData  = """(?i)Data:\s*(\d{2}/\d{2}/\d{4})""".r.unanchored
-
-  def parseBradescoExtratoHeader(text: String): Option[BradescoExtratoHeader] = {
-    val nome = BradNome.findFirstMatchIn(text).map(m => normSpace(m.group(1)))
-    val agCta = BradAgCta.findFirstMatchIn(text)
-    val data = BradData.findFirstMatchIn(text).map(_.group(1))
-    if (nome.isEmpty && agCta.isEmpty) None
-    else Some(BradescoExtratoHeader(nome.orNull,
-      agCta.map(_.group(1)).orNull, agCta.map(_.group(2)).orNull, data.orNull))
-  }
 
   private val ShortDate = """\d{2}/\d{2}/\d{2}"""
   private val MoneyPart = """\d{1,3}(?:\.\d{3})*,\d{2}"""

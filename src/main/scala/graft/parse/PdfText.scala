@@ -42,18 +42,15 @@ object PdfText {
   /** Typed extraction result: the page-concat text plus the distinct
     * stream filters the extractor had to SKIP (DCTDecode images,
     * CCITTFax scans, LZW …). A non-empty `skippedFilters` is the
-    * diagnostic that the text may be partial — callers that must not
-    * ship partial rows check [[PdfExtraction.isComplete]] instead of
-    * guessing from an empty string, and a scanned-image PDF comes back
-    * as (empty text, [/DCTDecode]) rather than a silent "". */
-  final case class PdfExtraction(text: String, skippedFilters: Seq[String]) {
-    def isComplete: Boolean = skippedFilters.isEmpty
-  }
+    * diagnostic that the text may be partial, and a scanned-image PDF
+    * comes back as (empty text, [/DCTDecode]) rather than a silent "". */
+  final case class PdfExtraction(text: String, skippedFilters: Seq[String])
 
   /** [[extractText]] plus skipped-filter diagnostics — never throws on
     * exotic or corrupted streams; unsupported filters are skipped and
-    * reported, exactly like the per-object decode path does. */
-  def extract(pdf: Array[Byte]): PdfExtraction =
+    * reported, exactly like the per-object decode path does. The specs
+    * audit what the engine's extractor skipped through it. */
+  private[graft] def extract(pdf: Array[Byte]): PdfExtraction =
     PdfExtraction(extractText(pdf), unsupportedStreamFilters(pdf))
 
   /** Filter names (beyond /FlateDecode) attached to stream dictionaries
@@ -63,9 +60,9 @@ object PdfText {
     * (`/Fl#61teDecode` IS FlateDecode), and an INDIRECT filter value
     * (`/Filter 12 0 R`) — which this raw scan cannot resolve — is
     * reported as the `/IndirectFilterRef` marker rather than silently
-    * passing, so [[PdfExtraction.isComplete]] stays honest on documents
-    * that route their filter through an object reference. */
-  def unsupportedStreamFilters(pdf: Array[Byte]): Seq[String] = {
+    * passing, so `skippedFilters` stays honest on documents that route
+    * their filter through an object reference. */
+  private[graft] def unsupportedStreamFilters(pdf: Array[Byte]): Seq[String] = {
     val doc = new String(pdf, java.nio.charset.StandardCharsets.ISO_8859_1)
     FilterNamesRe.findAllMatchIn(doc)
       .flatMap { m =>

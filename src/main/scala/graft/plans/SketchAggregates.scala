@@ -161,7 +161,7 @@ object MisraGriesAgg {
 
   /** Sketch-artifact form of [[mergeCounters]] over the (item, est)
     * pairs [[freqItems]] emits / a caller persists. */
-  def mergeSketches(a: Seq[(String, Long)], b: Seq[(String, Long)],
+  private[graft] def mergeSketches(a: Seq[(String, Long)], b: Seq[(String, Long)],
       capacity: Int): Seq[(String, Long)] = {
     val m = mergeCounters(mutable.HashMap(a: _*), mutable.HashMap(b: _*), capacity)
     m.toSeq.sortBy { case (k, c) => (-c, k) }
@@ -546,12 +546,6 @@ object QuantileSketchOps {
       QuantileSketchAgg(GraftSqlBridge.expression(c), capacity)
         .toAggregateExpression())
 
-  /** Aggregate Column: merge persisted sketch ARTIFACTS (rollup). */
-  def quantileSketchMerge(c: Column, capacity: Int): Column =
-    GraftSqlBridge.column(
-      QuantileSketchMergeAgg(GraftSqlBridge.expression(c), capacity)
-        .toAggregateExpression())
-
   /** Total weight of the artifact — the group's exact row count (the
     * odd-leftover rule preserves weight through every compaction). */
   def qskTotal(sk: Column): Column =
@@ -744,7 +738,7 @@ object CountMinAgg {
     * 60-bit halves of ONE md5(item) — one digest serves every row, and
     * the SQL twin is two `substr(md5(item), …, 15)` casts. SketchSpec
     * pins the JVM and Column forms bit-identical. */
-  def bucket(r: Int, item: String, width: Int): Int = {
+  private[graft] def bucket(r: Int, item: String, width: Int): Int = {
     val d = md5Digest.get()
     d.reset()
     val h = d.digest(item.getBytes("UTF-8"))

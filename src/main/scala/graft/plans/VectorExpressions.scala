@@ -432,72 +432,6 @@ case class NgramsExpr(child: Expression, n: Int)
     copy(child = newChild)
 }
 
-/** Native per-document term counting — the postings build collapsed to a
-  * single projection. `explode(termCounts(text))` yields the exact rows
-  * `groupBy(doc_id, term).count()` over exploded tokens yields — a
-  * document's tokens all live in ONE row, so its term frequencies never
-  * need an Exchange to meet: the token-level explode, the partial hash
-  * aggregate and the (doc_id, term) shuffle all disappear (guide §2.4,
-  * remove shuffles outright). At 100 TB this converts the inverted-index
-  * build from scan+shuffle(|tokens| rows) to a pure scan→project pass.
-  *
-  * Tokenization matches [[graft.ext.TextStats.tokens]] (trim, split on
-  * whitespace, empty → no tokens); callers lowercase beforehand exactly
-  * as they did for the exploded form. Counting preserves first-occurrence
-  * key order (LinkedHashMap) so the map is deterministic; consumers
-  * aggregate or join by term, so only the (term → count) VALUES matter. */
-case class TermCountsExpr(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType =
-    org.apache.spark.sql.types.MapType(
-      org.apache.spark.sql.types.StringType,
-      org.apache.spark.sql.types.LongType, valueContainsNull = false)
-
-  override protected def nullSafeEval(input: Any): Any =
-    TermCountsExpr.countsOf(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.plans.TermCountsExpr.countsOf($a)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object TermCountsExpr {
-  import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData, MapData}
-  import org.apache.spark.unsafe.types.UTF8String
-
-  def countsOf(text: UTF8String): MapData = {
-    val toks = text.toString.trim.split("\\s+")
-    val counts = new java.util.LinkedHashMap[String, Long]()
-    var i = 0
-    while (i < toks.length) {
-      val t = toks(i)
-      if (t.nonEmpty) counts.merge(t, 1L, (a, b) => a + b)
-      i += 1
-    }
-    val n = counts.size
-    val keys = new Array[Any](n)
-    val vals = new Array[Any](n)
-    var j = 0
-    val it = counts.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      keys(j) = UTF8String.fromString(e.getKey)
-      vals(j) = e.getValue
-      j += 1
-    }
-    new ArrayBasedMapData(new GenericArrayData(keys), new GenericArrayData(vals))
-  }
-
-  def termCounts(c: Column): Column = {
-    import org.apache.spark.sql.GraftSqlBridge
-    GraftSqlBridge.column(TermCountsExpr(GraftSqlBridge.expression(c)))
-  }
-}
-
 object NgramsExpr {
   import org.apache.spark.sql.catalyst.util.GenericArrayData
   import org.apache.spark.unsafe.types.UTF8String
@@ -900,7 +834,7 @@ object NormalizeTextExpr {
   * top-unigram frequency, char-weighted duplicate-bigram and -trigram
   * fractions — never need the (doc, n, gram) explode + two shuffled
   * aggregations + pivot + spine join the composable formulation paid
-  * (guide §2.4: remove the shuffle outright; the postings/TermCounts
+  * (guide §2.4: remove the shuffle outright; the in-row counting
   * lesson applied to the whole query). One pass over the token array per
   * n-gram level, inside whole-stage codegen.
   *
@@ -987,7 +921,7 @@ object RepetitionSignalsExpr {
   }
 
   def signalsOf(text: UTF8String): InternalRow = {
-    // same tokenizer as NgramsExpr/TermCountsExpr (the d-family contract)
+    // same tokenizer as NgramsExpr (the d-family contract)
     val toks = text.toString.trim.split("\\s+").filter(_.nonEmpty)
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       Array[Any](
@@ -1200,7 +1134,7 @@ object Simhash60Expr {
   * its OWN tokens, so the token explode, the partial hash aggregate and
   * the (doc, bucket) exchange the composable formulation paid per
   * TRAINING ITERATION all disappear (guide §2.4 — remove the shuffle
-  * outright; the TermCounts/postings lesson applied to the feature
+  * outright; the in-row counting lesson applied to the feature
   * space).
   *
   * The bucket is the engine's cross-engine 60-bit identity of the token

@@ -61,27 +61,6 @@ object Sources {
       .toDF("path", "text")
   }
 
-  /** [[extractPdfTexts]] plus the skipped-filter diagnostic column: a
-    * scanned-image PDF (DCTDecode/CCITTFax streams the JDK-only
-    * extractor cannot decode) yields its path with `skipped_filters`
-    * populated instead of a silently empty text — pipelines route those
-    * rows to quarantine rather than parsing partial text as fact. */
-  def extractPdfTextsWithDiagnostics(landing: DataFrame): DataFrame = {
-    val ds = landing
-      .filter(lower(col("path")).endsWith(".pdf"))
-      .select(col("path"), col("content"))
-      .as(Encoders.tuple(Encoders.STRING, Encoders.BINARY))
-    ds.map { case (p, bytes) =>
-      val e = graft.parse.PdfText.extract(bytes)
-      (p, e.text, e.skippedFilters.mkString(","))
-    }(Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.STRING))
-      .toDF("path", "text", "skipped")
-      .withColumn("skipped_filters",
-        when(length(col("skipped")) > 0, split(col("skipped"), ","))
-          .otherwise(array().cast("array<string>")))
-      .drop("skipped")
-  }
-
   /** The forms CSV's quirky source headers (FIXTURES §1; two contain
     * embedded newlines) → normalized names (forms_main.py:228-276). */
   val formsRenameMap: Seq[(String, String)] = Seq(
@@ -135,31 +114,6 @@ object Sources {
       textnorm.blankToNull(col("categoria")).as("categoria"),
       lit(clientSlug).as("client_slug"),
       input_file_name().as("landing_object_key"))
-  }
-
-  /** Optimizer-statistics size estimate in MB (A9 — the reference reaches
-    * through py4j for this, datatrack_spark_utils.py:582-596; Scala reads
-    * it directly). */
-  def estimatedSizeMb(df: DataFrame): Double =
-    df.queryExecution.optimizedPlan.stats.sizeInBytes.toDouble / (1024 * 1024)
-
-  /** Size-based repartition: ceil(MB / targetMB), capped — the reference's
-    * shard policy (datatrack_spark_utils.py:564-596, cap 4000). */
-  def sizeBasedRepartition(df: DataFrame, targetMb: Int = 256,
-      cap: Int = 4000): DataFrame = {
-    val n = math.min(cap, math.max(1, math.ceil(estimatedSizeMb(df) / targetMb).toInt))
-    df.repartition(n)
-  }
-
-  /** S14 — JSONL landing sink with size-targeted shard count (~targetMb of
-    * pre-compression JSON per shard, json_writer.py:105-208): rows →
-    * `to_json(struct(*))` lines → gzip text shards. */
-  def writeJsonlGz(df: DataFrame, dir: String, targetMb: Int = 256): Unit = {
-    val jsonLines = df.select(to_json(struct(df.columns.map(col).toIndexedSeq: _*)).as("value"))
-    sizeBasedRepartition(jsonLines, targetMb)
-      .write.mode(SaveMode.Overwrite)
-      .option("compression", "gzip")
-      .text(dir)
   }
 
   /** S9/S12 — partitioned parquet lake sink (y/m/d partition columns from

@@ -24,15 +24,6 @@ object Yaml {
       case YMap(m) => m
       case other => throw new IllegalArgumentException(s"expected map, got $other")
     }
-    def asSeq: Seq[YValue] = this match {
-      case YList(xs) => xs
-      case other => throw new IllegalArgumentException(s"expected list, got $other")
-    }
-    def asStr: String = this match {
-      case YStr(s) => s
-      case YNum(d) => if (d == d.toLong.toDouble) d.toLong.toString else d.toString
-      case other => throw new IllegalArgumentException(s"expected scalar, got $other")
-    }
     def asDouble: Double = this match {
       case YNum(d) => d
       case YStr(s) => s.toDouble
@@ -190,7 +181,7 @@ object Yaml {
     case other => YStr(other)
   }
 
-  // ---- the two config shapes the engine consumes ----------------------
+  // ---- the config shape the engine consumes ---------------------------
 
   /** Flat budget map `categoria: orçado` (compare_budget.py:12-25): null
     * values skipped, everything else coerced to Double — same contract as
@@ -206,22 +197,6 @@ object Yaml {
       }
     }
   }
-
-  /** Client registry (clients.yaml:1-16) flattened to relational rows:
-    * one (client_slug, display_name, bank_code, bank_name, doc_type) per
-    * bank × doc_type. */
-  final case class ClientBankDoc(slug: String, displayName: String,
-      bankCode: String, bankName: String, docType: String)
-
-  def clients(text: String): Seq[ClientBankDoc] =
-    for {
-      client <- parse(text).asMap("clients").asSeq
-      cm = client.asMap
-      bank <- cm("banks").asSeq
-      bm = bank.asMap
-      doc <- bm("doc_types").asSeq
-    } yield ClientBankDoc(cm("slug").asStr, cm("display_name").asStr,
-      bm("code").asStr, bm("name").asStr, doc.asStr)
 
   /** Read a classpath resource or filesystem path as UTF-8 text. */
   def readConfig(pathOrResource: String): String = {

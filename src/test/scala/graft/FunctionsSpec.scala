@@ -32,32 +32,8 @@ class FunctionsSpec extends SparkSpec {
     assert(got === Seq(5899.51, -6797.51, 40.0, 237.63, -1234.56, -12027.45, null, null, null))
   }
 
-  test("toBrl formats pt-BR money") {
-    val df = LocalTable.of(spark,
-      StructType(Seq(StructField("v", DoubleType))),
-      Seq(Row(1234.56), Row(0.5), Row(-9876543.21)))
-    val got = df.select(money.toBrl(col("v"))).collect().map(_.getString(0)).toSeq
-    assert(got === Seq("R$ 1.234,56", "R$ 0,50", "R$ -9.876.543,21"))
-  }
-
-  test("signedValue applies (+/-) marker") {
-    val df = LocalTable.of(spark,
-      StructType(Seq(StructField("v", DoubleType), StructField("s", StringType))),
-      Seq(Row(10.0, "+"), Row(10.0, "-")))
-    val got = df.select(money.signedValue(col("v"), col("s"))).collect().map(_.getDouble(0)).toSeq
-    assert(got === Seq(10.0, -10.0))
-  }
-
-  test("normalizeSpace / normUpper / slugify / blankToNull") {
-    assert(evalStr(Seq("  a \t b  "), textnorm.normalizeSpace) === Seq("a b"))
-    assert(evalStr(Seq(" uber *Trip  br "), textnorm.normUpper) === Seq("UBER *TRIP BR"))
-    assert(evalStr(Seq("Banco do Brasil S.A.!"), textnorm.slugify) === Seq("banco_do_brasil_s.a._"))
+  test("blankToNull: blank and whitespace-only become NULL") {
     assert(evalStr(Seq("   ", "x"), textnorm.blankToNull) === Seq(null, "x"))
-  }
-
-  test("normalizeCpf pads and strips") {
-    assert(evalStr(Seq("123.456.789-01", "1234567", null), textnorm.normalizeCpf)
-      === Seq("12345678901", "00001234567", null))
   }
 
   test("toDateMulti coalesces over patterns") {

@@ -6,9 +6,8 @@ import org.apache.spark.sql.functions._
 
 import graft.jobs.FinTrackJob
 import graft.lake.ControlTable
-import graft.parse.Parsers
 
-/** End-to-end job + control-table lifecycle + resumo parser. */
+/** End-to-end job + control-table lifecycle. */
 class JobsSpec extends SparkSpec {
 
   private def tmp(): String = Files.createTempDirectory("graft-job-").toString
@@ -25,10 +24,13 @@ class JobsSpec extends SparkSpec {
   test("full slice: forms CSV → raw → monthly summary → budget compare → CSVs") {
     val dir = tmp()
     Files.writeString(Paths.get(dir, "forms.csv"), formsCsv)
-    val (monthly, compare) = FinTrackJob.run(spark, s"$dir/forms.csv", "cruz_raulino",
-      budget = Seq("Alimentação" -> 500.0, "Transporte" -> 100.0, "Lazer" -> 80.0),
-      reportDir = s"$dir/reports",
-      ingestedAt = java.sql.Timestamp.valueOf("2026-08-12 09:00:00"))
+    val raw = FinTrackJob.formsToRaw(spark, s"$dir/forms.csv", "cruz_raulino", None,
+      java.sql.Timestamp.valueOf("2026-08-12 09:00:00"))
+    val monthly = FinTrackJob.monthlySummary(raw)
+    val compare = FinTrackJob.compareBudget(monthly,
+      Seq("Alimentação" -> 500.0, "Transporte" -> 100.0, "Lazer" -> 80.0))
+    FinTrackJob.writeReports(s"$dir/reports",
+      "monthly_by_category" -> monthly, "budget_vs_actual" -> compare)
 
     val m = monthly.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(m === Map("Alimentação" -> 600.0, "Transporte" -> 50.0, "Financeiro" -> 30.0))
@@ -78,23 +80,5 @@ class JobsSpec extends SparkSpec {
     val justBefore = new java.sql.Timestamp(wm1.getTime - 1000)
     val (tail, _) = ControlTable.incrementalLoad(events, "ts", Some(justBefore))
     assert(tail.count() >= 1)
-  }
-
-  test("FaturaResumo find-first extraction") {
-    val text =
-      """SERGIO MAIA RAULINO (Cartão 1234)
-        |Vencimento: 10/12/2025
-        |Valor total desta fatura R$ 5.899,51
-        |Limite único R$ 12.000,00
-        |Pagamento mínimo R$ 589,95
-        |Fatura fechada em: 30/11/2025
-        |05/11 UBER *TRIP R$ 24,90
-        |""".stripMargin
-    val r = Parsers.parseFaturaResumo(text)
-    assert(r === Parsers.FaturaResumo("SERGIO MAIA RAULINO", "10/12/2025",
-      5899.51, 12000.0, 589.95, "30/11/2025"))
-    // absent fields stay null
-    val sparse = Parsers.parseFaturaResumo("nothing useful here")
-    assert(sparse.vencimento === null && sparse.valor_total === null)
   }
 }

@@ -1,7 +1,16 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
+
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, Logger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.SessionCheckpointDir.{filesUnder, onGraftfs}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -15,6 +24,7 @@ import graft.lake.ParquetTableFormat
   * checkpoint dir, and the paths that used to call `localCheckpoint`
   * directly take reliable checkpoints when the session sets one. */
 class LineageSpec extends SparkSpec {
+  import LineageSpec._
 
   /** `df` with every row's `text` passed through a non-deterministic
     * identity UDF that counts its evaluations. */
@@ -65,6 +75,45 @@ class LineageSpec extends SparkSpec {
     assert(runs.map(_._1).toSet.size === 1 && runs.head._1 > 0)
   }
 
+  /** The messages `logger` logs while `body` runs. */
+  private def logged(logger: String)(body: => Unit): Seq[String] = {
+    val seen = new ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("lineage-spec", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val log = LogManager.getLogger(logger).asInstanceOf[Logger]
+    log.addAppender(appender)
+    try body finally { log.removeAppender(appender); appender.stop() }
+    seen.toArray(Array.empty[String]).toSeq
+  }
+
+  /** A lazy cut of a one-partition scan; the pre-cut frame stays local. */
+  private def lazyCut(): DataFrame =
+    Lineage.cut(textRows.coalesce(1).withColumn("len", length(col("text"))), eager = false)
+
+  test("a lazy cut read by a still-running job keeps its subtree's SQL metrics registered") {
+    // job B computes the cut's partition, then blocks; job A reads the
+    // cached partition and finishes, which truncates the cut's lineage.
+    // B's task still reports the metrics of the subtree behind the cut
+    // when it ends: they must be registered on the driver, not
+    // garbage-collected with the truncated lineage
+    val errors = logged("org.apache.spark.scheduler.DAGScheduler") {
+      val cut = lazyCut()
+      val gate = udf((id: Long) => { entered.countDown(); released.await(60, TimeUnit.SECONDS); id })
+        .asNondeterministic()
+      val b = Future(cut.filter(gate(col("doc_id")) > 0L).count())
+      try {
+        assert(entered.await(60, TimeUnit.SECONDS))
+        assert(cut.count() === 200L)
+        (1 to 3).foreach { _ => System.gc(); Thread.sleep(100) }
+      } finally released.countDown()
+      assert(Await.result(b, 60.seconds) === 200L)
+    }
+    assert(errors.filter(_.contains("accumulator")).isEmpty, errors.mkString("\n"))
+  }
+
   test("the trusted MERGE and s09's postings cut take reliable checkpoints under a session checkpoint dir") {
     val schema = StructType(Seq(StructField("k", LongType),
       StructField("v", StringType), StructField("ver", LongType)))
@@ -97,4 +146,9 @@ class LineageSpec extends SparkSpec {
     assert(bm25Reliable.map(_.getLong(0)).toSet === Set(1L, 2L))
     assert((filesUnder(mergeDir), filesUnder(bm25Dir)) === written)
   }
+}
+
+object LineageSpec {
+  private val entered = new CountDownLatch(1)
+  private val released = new CountDownLatch(1)
 }

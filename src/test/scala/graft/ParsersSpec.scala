@@ -76,12 +76,6 @@ class ParsersSpec extends SparkSpec {
     assert(got(4).valor === -35.0)
   }
 
-  test("BB statement: header recomposition (F14)") {
-    val h = Parsers.parseExtratoHeader(extratoText).get
-    assert(h === Parsers.ExtratoHeader("SERGIO MAIA RAULINO",
-      "01/11/2025", "30/11/2025", "4041-X", "18506-X", "2025-11"))
-  }
-
   test("BB statement: groups, lote/doc, sign, continuation append") {
     val got = Parsers.parseExtrato(extratoText)
     assert(got.length === 3)

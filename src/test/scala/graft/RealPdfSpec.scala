@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import graft.jobs.FinTrackJob
 import graft.parse.{Parsers, ParsePipeline, PdfText}
 import graft.sources.Sources
 
@@ -44,7 +45,7 @@ class RealPdfSpec extends SparkSpec {
     }
   }
 
-  test("BB faturas (CID fonts + ToUnicode): transactions, card context, resumo") {
+  test("BB faturas (CID fonts + ToUnicode): transactions, card context") {
     val faturas = pdfsUnder("bb/faturas")
     assert(faturas.size === 4)
     faturas.foreach { p =>
@@ -62,20 +63,9 @@ class RealPdfSpec extends SparkSpec {
     assert(fiap.valor === 490.0 && fiap.pais === "BR" && fiap.data === "05/09")
     // negative payment row survives the sign
     assert(rows.exists(_.valor < -15000))
-    val resumo = Parsers.parseFaturaResumo(out25)
-    assert(resumo.vencimento === "05/10/2025")
-    assert(resumo.valor_total === 13703.95)
-    assert(resumo.titular != null)
-    // every bill in the corpus yields a vencimento and a total
-    faturas.foreach { p =>
-      val r = Parsers.parseFaturaResumo(text(p))
-      assert(r.vencimento != null && r.vencimento.matches("""\d{2}/\d{2}/\d{4}"""),
-        s"no vencimento from $p")
-      assert(r.valor_total != null && r.valor_total > 0, s"no total from $p")
-    }
   }
 
-  test("BB extratos (real C/D layout): movements, groups, header") {
+  test("BB extratos (real C/D layout): movements, groups") {
     val extratos = pdfsUnder("bb/extratos")
     assert(extratos.size === 4)
     extratos.foreach { p =>
@@ -83,9 +73,6 @@ class RealPdfSpec extends SparkSpec {
       assert(rows.nonEmpty, s"no movements parsed from $p")
     }
     val jan = text(extratos.find(_.toString.contains("2026/01")).get)
-    val hdr = Parsers.parseExtratoHeader(jan).get
-    assert(hdr.agencia === "4041-X" && hdr.conta === "18506-X")
-    assert(hdr.cliente === "SERGIO MAIA RAULINO")
     val rows = Parsers.parseExtrato(jan)
     // Pix credit of 461,80 on 02/01 with its Documento column recovered
     val pix = rows.find(r => r.valor == 461.80).get
@@ -126,7 +113,7 @@ class RealPdfSpec extends SparkSpec {
       r.cartao_final == "9952"))
   }
 
-  test("Bradesco extratos: header + movements (an extractor the reference never " +
+  test("Bradesco extratos: movements (an extractor the reference never " +
       "built — etls_raw/main.py:231-232)") {
     val extratos = pdfsUnder("bradesco/extratos")
     assert(extratos.size === 4)
@@ -134,9 +121,6 @@ class RealPdfSpec extends SparkSpec {
       assert(Parsers.parseBradescoExtrato(text(p)).nonEmpty, s"no movements from $p")
     }
     val out = text(extratos.find(_.toString.contains("2025/10")).get)
-    val hdr = Parsers.parseBradescoExtratoHeader(out).get
-    assert(hdr.nome === "SERGIO MAIA RAULINO")
-    assert(hdr.agencia === "2515" && hdr.conta === "7787-9")
     val rows = Parsers.parseBradescoExtrato(out)
     // pending-histórico line above a dated credit, saldo column, complemento
     val pix = rows.find(r => r.documento == "1033051").get
@@ -201,9 +185,12 @@ class RealPdfSpec extends SparkSpec {
     val out = Files.createTempDirectory("graft-realjob-").toString
     val budget = Seq("1. Alimentação" -> 2000.0, "3. Água, Luz e Gás" -> 800.0,
       "99. Inexistente" -> 50.0)
-    val (monthly, compare) = graft.jobs.FinTrackJob.run(spark, csv.toString,
-      "cruz_raulino_familia", budget, out,
-      java.sql.Timestamp.valueOf("2026-01-03 00:00:00"))
+    val raw = FinTrackJob.formsToRaw(spark, csv.toString, "cruz_raulino_familia",
+      None, java.sql.Timestamp.valueOf("2026-01-03 00:00:00"))
+    val monthly = FinTrackJob.monthlySummary(raw)
+    val compare = FinTrackJob.compareBudget(monthly, budget)
+    FinTrackJob.writeReports(out,
+      "monthly_by_category" -> monthly, "budget_vs_actual" -> compare)
     val m = monthly.collect()
     assert(m.nonEmpty && m.forall(r => r.getAs[String]("categoria") != null))
     val c = compare.collect().map(r => r.getAs[String]("categoria") -> r).toMap

@@ -296,6 +296,7 @@ class SketchSpec extends SparkSpec {
   }
 
   test("qsk: artifact rollup — merge agg over per-group sketches ≡ whole-stream in the exact regime") {
+    graft.plans.GraftFunctions.register(spark)
     val vs = scala.util.Random.shuffle((1 to 800).map(_.toDouble)).toSeq
     val grouped = LocalTable.of(spark,
       StructType(Seq(StructField("g", IntegerType), StructField("v", DoubleType))),
@@ -303,7 +304,7 @@ class SketchSpec extends SparkSpec {
     val rolled = grouped
       .groupBy(col("g"))
       .agg(QuantileSketchOps.quantileSketch(col("v"), 2048).as("sk"))
-      .agg(QuantileSketchOps.quantileSketchMerge(col("sk"), 2048).as("sk"))
+      .agg(expr("quantile_sketch_merge(sk, 2048)").as("sk"))
     val art = rolled.select(explode(col("sk")))
       .collect().map(r => { val s = r.getStruct(0); (s.getDouble(0), s.getLong(1)) })
     assert(art.toSeq === vs.sorted.map((_, 1L)),
@@ -314,6 +315,7 @@ class SketchSpec extends SparkSpec {
   }
 
   test("qsk: artifact rollup stays rank-bounded in the compaction regime") {
+    graft.plans.GraftFunctions.register(spark)
     val n = 20000
     val vs = scala.util.Random.shuffle((1 to n).map(_.toDouble)).toSeq
     val grouped = LocalTable.of(spark,
@@ -322,7 +324,7 @@ class SketchSpec extends SparkSpec {
     val rolled = grouped
       .groupBy(col("g"))
       .agg(QuantileSketchOps.quantileSketch(col("v"), 128).as("sk"))
-      .agg(QuantileSketchOps.quantileSketchMerge(col("sk"), 128).as("sk"))
+      .agg(expr("quantile_sketch_merge(sk, 128)").as("sk"))
     val est = rolled.select(QuantileSketchOps.qskQuantile(col("sk"), 0.5).as("m"))
       .collect().head.getDouble(0)
     assert(math.abs(est - math.ceil(0.5 * n)) <= 0.04 * n,

@@ -8,7 +8,7 @@ import graft.sources.Sources
 
 /** Sources/sinks driven against real temp-dir trees: landing listing with
   * path-derived columns, forms CSV normalization (quirky multiline
-  * headers), JSONL.gz sharded sink, partitioned parquet sink. */
+  * headers), partitioned parquet sink. */
 class SourcesSpec extends SparkSpec {
 
   private def tmpDir(): String =
@@ -49,13 +49,6 @@ class SourcesSpec extends SparkSpec {
     assert(got.length === 1)
     assert(got(0).getString(0).endsWith("fatura_nov.pdf"))
     assert(got(0).getString(1) === lines.mkString("\n"))
-
-    // diagnostics variant: a clean Flate PDF reports no skipped filters
-    val diag = Sources.extractPdfTextsWithDiagnostics(
-      Sources.landingFiles(spark, root)).collect()
-    assert(diag.length === 1)
-    assert(diag(0).getString(1) === lines.mkString("\n"))
-    assert(diag(0).getSeq[String](2) === Seq.empty)
   }
 
   test("readFormsCsv: quirky headers, BRL + date parse, NULL survival") {
@@ -85,18 +78,6 @@ class SourcesSpec extends SparkSpec {
     assert(got(1).getAs[Double]("valor") === 237.63)
   }
 
-  test("writeJsonlGz: gzip shards round-trip as JSON lines") {
-    val dir = tmpDir() + "/out"
-    val df = Tables(spark, "/root/testdata/sf0.001", "nation")
-    Sources.writeJsonlGz(df, dir, targetMb = 256)
-    val back = spark.read.json(dir)
-    assert(back.count() === df.count())
-    assert(back.columns.sorted.toSeq === df.columns.sorted.toSeq)
-    // gzip extension on the shard files
-    val shards = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".gz"))
-    assert(shards.nonEmpty)
-  }
-
   test("writePartitionedParquet: y/m/d directory layout + partition pruning") {
     val dir = tmpDir() + "/lake"
     val base = Tables(spark, "/root/testdata/sf0.001", "region")
@@ -112,12 +93,5 @@ class SourcesSpec extends SparkSpec {
       java.sql.Timestamp.valueOf("2026-08-13 10:00:00"))
     Sources.writePartitionedParquet(again, dir)
     assert(spark.read.parquet(dir).count() === base.count() * 2)
-  }
-
-  test("sizeBasedRepartition derives shard count from optimizer stats") {
-    val df = Tables(spark, "/root/testdata/sf0.001", "lineitem")
-    assert(Sources.estimatedSizeMb(df) > 0)
-    // tiny table → 1 partition at 256MB target
-    assert(Sources.sizeBasedRepartition(df).rdd.getNumPartitions === 1)
   }
 }

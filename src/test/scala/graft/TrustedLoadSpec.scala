@@ -8,11 +8,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.lake.{ControlTable, EntityTransformer, TrustedLoad}
-import graft.sources.TableConfig
 
 /** The trusted-layer lifecycle (SURVEY §3.3): EntityTransformer hooks +
-  * control-table incremental + dedup + version-guarded MERGE, and the
-  * JSON table-config registry that drives it. */
+  * control-table incremental + dedup + version-guarded MERGE. */
 class TrustedLoadSpec extends SparkSpec {
 
   private val txnSchema = StructType(Seq(
@@ -126,33 +124,5 @@ class TrustedLoadSpec extends SparkSpec {
     assert(spark.read.parquet(target).count() === 2)
     assert(ControlTable.currentWatermark(r.control, enricher.entityName,
       "raw.lancamentos") === None)
-  }
-
-  test("carregar_source: JSON registry flattens with folded origin metadata") {
-    val dir = Files.createTempDirectory("graft-cfg-")
-    Files.writeString(dir.resolve("fintrack.json"),
-      """{"informacoes": {"banco": "bb", "sistema": "FinTrack", "schemas": {
-        |  "Raw": {
-        |    "Lancamentos": {"primary_key": ["id"], "coluna_particao": "dt",
-        |                    "tipo_particionamento": "DIA",
-        |                    "coluna_incremental": "dt_ingestao"},
-        |    "Resumos": {"primary_key": ["doc_id"]}
-        |  }}}}""".stripMargin)
-    Files.writeString(dir.resolve("other.json"),
-      """{"informacoes": {"banco": "bradesco", "sistema": "Cards", "schemas": {
-        |  "raw": {"faturas": {"primary_key": ["cartao_final", "data"]}}}}}""".stripMargin)
-    val reg = TableConfig.load(dir.toString)
-    assert(reg.size === 3)
-    val l = reg("fintrack_raw.lancamentos")
-    assert(l.banco === "bb" && l.sistema === "FinTrack" && l.schema === "Raw" &&
-      l.nome === "Lancamentos")
-    assert(l.primaryKey === Seq("id") && l.colunaParticao === Some("dt") &&
-      l.tipoParticionamento === Some("DIA") &&
-      l.colunaIncremental === Some("dt_ingestao"))
-    val r = reg("fintrack_raw.resumos")
-    assert(r.primaryKey === Seq("doc_id") && r.colunaParticao === None)
-    assert(reg("cards_raw.faturas").banco === "bradesco")
-    // invalid path fails loudly, like the reference's ValueError
-    intercept[IllegalArgumentException](TableConfig.load(dir.toString + "/nope"))
   }
 }

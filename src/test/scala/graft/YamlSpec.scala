@@ -23,13 +23,27 @@ class YamlSpec extends AnyFunSuite {
   }
 
   test("clients registry: nested lists of maps with inline arrays flatten") {
-    val text = Yaml.readConfig("/clients_registry.yaml")
-    val rows = Yaml.clients(text)
+    def items(v: YValue) = v match {
+      case YList(xs) => xs
+      case other => fail(s"expected list, got $other")
+    }
+    def str(v: YValue) = v match {
+      case YStr(s) => s
+      case other => fail(s"expected string, got $other")
+    }
+    val rows = for {
+      client <- items(Yaml.parse(Yaml.readConfig("/clients_registry.yaml")).asMap("clients"))
+      cm = client.asMap
+      bank <- items(cm("banks"))
+      bm = bank.asMap
+      doc <- items(bm("doc_types"))
+    } yield (str(cm("slug")), str(cm("display_name")), str(bm("code")),
+      str(bm("name")), str(doc))
     assert(rows.size === 5)
-    assert(rows.head === ClientBankDoc("cruz_raulino_familia",
-      "Família Cruz Raulino", "bb", "Banco do Brasil", "extratos"))
-    assert(rows.map(_.bankCode).distinct === Seq("bb", "bradesco", "cef"))
-    assert(rows.count(_.slug == "cruz_raulino_familia") === 4)
+    assert(rows.head === (("cruz_raulino_familia", "Família Cruz Raulino", "bb",
+      "Banco do Brasil", "extratos")))
+    assert(rows.map(_._3).distinct === Seq("bb", "bradesco", "cef"))
+    assert(rows.count(_._1 == "cruz_raulino_familia") === 4)
   }
 
   test("scalars: quotes, booleans, numbers, comments, inline lists") {
