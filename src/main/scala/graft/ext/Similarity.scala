@@ -20,7 +20,7 @@ import graft.{Lineage, Q, Tables}
 object Similarity {
 
   /** Cosine similarity of two float-array columns, accumulated in double —
-    * a native codegen'd Catalyst expression (graft.plans.CosineSimilarityExpr);
+    * a row kernel, one static call in generated code (graft.plans.CosineSimilarityExpr);
     * the equivalent zip_with+aggregate HOF chain is interpreted and breaks
     * whole-stage codegen on the hot pair-join path. */
   def cosine(a: Column, b: Column): Column =
@@ -857,7 +857,11 @@ object Similarity {
     * top-k before the exchange — so the shuffle carries k rows per
     * unlabeled vector, not the |unlabeled| × |seed| score matrix. For
     * seed sets too big to broadcast, compose [[annTopK]]'s IVF probe as
-    * the candidate stage instead. */
+    * the candidate stage instead.
+    *
+    * Contract: one output row per unlabeled ROW. A vec_id that repeats is
+    * classified once per occurrence, each by its own vector's neighbors,
+    * in the kernel, exchange and IVF shapes alike. */
   def knnClassify(labeled: DataFrame, unlabeled: DataFrame, k: Int): DataFrame = {
     require(k > 0, "k must be positive")
     // Kernel path (guide §2.4/§8): the seed set is driver-sized by
@@ -920,24 +924,30 @@ object Similarity {
       k: Int): DataFrame = {
     val l = labeled.select(col("vec_id").as("nid"), col("embedding").as("ne"),
       col("label"))
-    val scored = unlabeled.select(col("vec_id"), col("embedding"))
+    val scored = queryRows(unlabeled).select(col("__row"), col("vec_id"), col("embedding"))
       .crossJoin(broadcast(l))
-      .select(col("vec_id"), col("label"),
+      .select(col("__row"), col("vec_id"), col("label"),
         round(cosine(col("embedding"), col("ne")), 6).as("cos_sim"), col("nid"))
     voteTopK(scored, k)
   }
 
+  /** The unlabeled side with a `__row` key unique per row: the kNN
+    * classifiers vote per row, not per vec_id (see [[knnClassify]]). */
+  private def queryRows(unlabeled: DataFrame): DataFrame =
+    unlabeled.withColumn("__row", monotonically_increasing_id())
+
   /** Shared tail of the kNN classifiers: top-k by (cos_sim desc, nid asc)
-    * per query, then majority vote with (votes desc, label asc)
-    * tie-breaks. Input: (vec_id, label, cos_sim, nid) candidate rows. */
+    * per query row, then majority vote with (votes desc, label asc)
+    * tie-breaks. Input: (__row, vec_id, label, cos_sim, nid) candidate
+    * rows. */
   private def voteTopK(scored: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("vec_id"))
+    val w = Window.partitionBy(col("__row"))
       .orderBy(col("cos_sim").desc, col("nid").asc)
     val votes = scored.withColumn("rk", row_number().over(w))
       .filter(col("rk") <= k)
-      .groupBy(col("vec_id"), col("label"))
+      .groupBy(col("__row"), col("vec_id"), col("label"))
       .agg(count(lit(1)).as("votes"))
-    val wv = Window.partitionBy(col("vec_id"))
+    val wv = Window.partitionBy(col("__row"))
       .orderBy(col("votes").desc, col("label").asc)
     votes.withColumn("vrk", row_number().over(wv)).filter(col("vrk") === 1)
       .select(col("vec_id"), col("label").as("pred_label"), col("votes"))
@@ -966,11 +976,11 @@ object Similarity {
     val l = ivfAssignments(labeled, cs)
       .select(col("centroid_id"), col("vec_id").as("nid"),
         col("embedding").as("ne"), col("label"))
-    val probed = unlabeled.select(col("vec_id"), col("embedding"),
+    val probed = queryRows(unlabeled).select(col("__row"), col("vec_id"), col("embedding"),
       explode(graft.plans.NearestCentroidsExpr.nearestCentroids(
         col("embedding"), cs, nProbe)).as("centroid_id"))
     val scored = probed.join(l, Seq("centroid_id"))
-      .select(col("vec_id"), col("label"),
+      .select(col("__row"), col("vec_id"), col("label"),
         round(cosine(col("embedding"), col("ne")), 6).as("cos_sim"), col("nid"))
     voteTopK(scored, k)
   }
@@ -1400,15 +1410,12 @@ object Similarity {
         val targets = new graft.plans.MarginTargetsRef(
           tgtRows.map(_.getLong(0)), tgtEmbs,
           tgtRows.map(r => tgtKnn(r.getLong(0))))
-        // pass B — the distributed scan of the src side
+        // pass B — the distributed scan of the src side; the kernel's
+        // zero-or-one array expands through `inline`, which keeps its one
+        // evaluation above the spread (see MarginBestExpr)
         return src.repartition(par).select(col("vec_id").as("src_id"),
-            graft.plans.MarginBestExpr.marginBest(
-              col("embedding"), targets, k, tau).as("__b"))
-          .filter(col("__b").isNotNull)
-          .select(col("src_id"),
-            col("__b").getField("tgt_id").as("tgt_id"),
-            col("__b").getField("cos_sim").as("cos_sim"),
-            col("__b").getField("margin").as("margin"))
+            inline(graft.plans.MarginBestExpr.marginBest(
+              col("embedding"), targets, k, tau)))
       }
     }
     marginMineExchange(src, tgt, k, tau)

@@ -1,9 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BooleanType, DataType}
+import org.apache.spark.sql.{Column, GraftSqlBridge}
+import org.apache.spark.sql.types.BooleanType
 import org.apache.spark.util.sketch.BloomFilter
 
 /** Bloom-filter membership of a long hash column against a SERIALIZED
@@ -11,32 +9,14 @@ import org.apache.spark.util.sketch.BloomFilter
   * incremental exact dedup: "might this content hash already be in the
   * 100 TB archive?" answered per row with zero shuffle and zero join.
   *
-  * Why a custom Expression: Spark's own `BloomFilterMightContain` is
-  * internal to its runtime-filter rewrite (not constructible from the
-  * public Column API), and a Scala UDF closure would break whole-stage
-  * codegen on the batch scan. The filter travels as its serialized bytes
-  * (a plan reference object, like the centroid matrices); executors
-  * deserialize once per distinct filter through a content-keyed cache, so
-  * the per-row cost is `mightContainLong` on a shared in-memory sketch.
+  * Why a kernel: Spark's own `BloomFilterMightContain` is internal to its
+  * runtime-filter rewrite (not constructible from the public Column API),
+  * and a Scala UDF closure would break whole-stage codegen on the batch
+  * scan. The filter travels as its serialized bytes (a plan model, like
+  * the centroid matrices); executors deserialize once per distinct filter
+  * through a content-keyed cache, so the per-row cost is
+  * `mightContainLong` on a shared in-memory sketch.
   */
-case class BloomMightContainExpr(child: Expression, bloomBytes: Array[Byte])
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = BooleanType
-
-  override protected def nullSafeEval(input: Any): Any =
-    BloomMightContainExpr.mightContain(bloomBytes, input.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val b = ctx.addReferenceObj("bloomBytes", bloomBytes, "byte[]")
-    defineCodeGen(ctx, ev, a =>
-      s"graft.plans.BloomMightContainExpr.mightContain($b, $a)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object BloomMightContainExpr {
 
   /** Executor-side deserialization cache, keyed by filter CONTENT (a
@@ -47,7 +27,6 @@ object BloomMightContainExpr {
   private val cache = new java.util.concurrent.ConcurrentHashMap[
     java.nio.ByteBuffer, BloomFilter]()
 
-  /** Kernel shared by interpreted eval and generated code. */
   def mightContain(bytes: Array[Byte], h: Long): Boolean =
     cache.computeIfAbsent(java.nio.ByteBuffer.wrap(bytes), _ =>
       BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes)))
@@ -59,8 +38,7 @@ object BloomMightContainExpr {
   def mightContainLong(c: Column, bloom: BloomFilter): Column = {
     val bos = new java.io.ByteArrayOutputStream()
     bloom.writeTo(bos)
-    import org.apache.spark.sql.GraftSqlBridge
-    GraftSqlBridge.column(
-      BloomMightContainExpr(GraftSqlBridge.expression(c), bos.toByteArray))
+    GraftSqlBridge.kernel(BloomMightContainExpr, "mightContain", BooleanType,
+      GraftSqlBridge.model(bos.toByteArray), c)
   }
 }

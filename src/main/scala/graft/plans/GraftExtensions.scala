@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, GraftSqlBridge, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
@@ -43,36 +43,36 @@ object GraftFunctions {
       build(args)
     }
 
+  private def col(e: Expression) = GraftSqlBridge.column(e)
+  private def info(obj: AnyRef, name: String) = new ExpressionInfo(obj.getClass.getName, name)
+
+  /** A Column helper's tree as a SQL function body. */
+  private def expr(c: Column): Expression = GraftSqlBridge.catalystExpression(c)
+
   val definitions: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    ("cosine_sim",
-      new ExpressionInfo(classOf[CosineSimilarityExpr].getName, "cosine_sim"),
-      arity("cosine_sim", 2, 2)(args => CosineSimilarityExpr(args(0), args(1)))),
-    ("minhash_sig",
-      new ExpressionInfo(classOf[MinHashSignatureExpr].getName, "minhash_sig"),
-      arity("minhash_sig", 2, 2)(args =>
-        MinHashSignatureExpr(args(0), intArg(args(1), "minhash_sig")))),
-    ("shingles",
-      new ExpressionInfo(classOf[ShinglesExpr].getName, "shingles"),
-      arity("shingles", 2, 2)(args =>
-        ShinglesExpr(args(0), intArg(args(1), "shingles")))),
-    ("ngrams",
-      new ExpressionInfo(classOf[NgramsExpr].getName, "ngrams"),
-      arity("ngrams", 2, 2)(args =>
-        NgramsExpr(args(0), intArg(args(1), "ngrams")))),
-    ("cdc_chunks",
-      new ExpressionInfo(classOf[CdcChunksExpr].getName, "cdc_chunks"),
-      arity("cdc_chunks", 3, 3)(args =>
-        CdcChunksExpr(args(0), intArg(args(1), "cdc_chunks"),
-          intArg(args(2), "cdc_chunks")))),
-    ("text_entropy",
-      new ExpressionInfo(classOf[EntropyExpr].getName, "text_entropy"),
+    ("cosine_sim", info(CosineSimilarityExpr, "cosine_sim"),
+      arity("cosine_sim", 2, 2)(args =>
+        expr(CosineSimilarityExpr.cosineSim(col(args(0)), col(args(1)))))),
+    ("minhash_sig", info(MinHashSignatureExpr, "minhash_sig"),
+      arity("minhash_sig", 2, 2)(args => expr(MinHashSignatureExpr.minhashSig(
+        col(args(0)), intArg(args(1), "minhash_sig"))))),
+    ("shingles", info(ShinglesExpr, "shingles"),
+      arity("shingles", 2, 2)(args => expr(ShinglesExpr.shingles(
+        col(args(0)), intArg(args(1), "shingles"))))),
+    ("ngrams", info(NgramsExpr, "ngrams"),
+      arity("ngrams", 2, 2)(args => expr(NgramsExpr.ngrams(
+        col(args(0)), intArg(args(1), "ngrams"))))),
+    ("cdc_chunks", info(CdcChunksExpr, "cdc_chunks"),
+      arity("cdc_chunks", 3, 3)(args => expr(CdcChunksExpr.chunks(col(args(0)),
+        intArg(args(1), "cdc_chunks"), intArg(args(2), "cdc_chunks"))))),
+    ("text_entropy", info(EntropyExpr, "text_entropy"),
       arity("text_entropy", 1, 2)(args =>
-        EntropyExpr(args(0), args.lift(1) match {
+        expr(EntropyExpr.entropy(col(args(0)), args.lift(1) match {
           case None => false
           case Some(Literal(v: Boolean, _)) => v
           case Some(other) => throw new IllegalArgumentException(
             s"text_entropy expects a literal boolean tokenLevel argument, got $other")
-        }))),
+        })))),
     ("freq_items_sketch",
       new ExpressionInfo(classOf[MisraGriesAgg].getName, "freq_items_sketch"),
       arity("freq_items_sketch", 2, 2)(args =>
@@ -93,22 +93,20 @@ object GraftFunctions {
       arity("quantile_sketch_merge", 2, 2)(args =>
         QuantileSketchMergeAgg(args(0), intArg(args(1), "quantile_sketch_merge"))
           .toAggregateExpression())),
-    ("bpe_apply",
-      new ExpressionInfo(classOf[BpeApplyExpr].getName, "bpe_apply"),
-      arity("bpe_apply", 2, 2)(args => BpeApplyExpr(args(0), args(1)))),
-    ("normalize_text",
-      new ExpressionInfo(classOf[NormalizeTextExpr].getName, "normalize_text"),
-      arity("normalize_text", 1, 1)(args => NormalizeTextExpr(args(0)))),
+    ("bpe_apply", info(BpeApplyExpr, "bpe_apply"),
+      arity("bpe_apply", 2, 2)(args =>
+        expr(BpeApplyExpr.bpeApply(col(args(0)), col(args(1)))))),
+    ("normalize_text", info(NormalizeTextExpr, "normalize_text"),
+      arity("normalize_text", 1, 1)(args =>
+        expr(NormalizeTextExpr.normalizeText(col(args(0)))))),
     // The reference's per-row rules entry point on the SQL surface:
     // categorize_bb(desc) returns the (categoria, subcategoria,
     // recorrente_suspeita, parcelado_suspeito) struct from the compiled
     // 23-rule chain — the same Column tree the DataFrame API builds, so
     // SQL and Column callers cannot diverge (categories_bb.py:223-274).
-    ("categorize_bb",
-      new ExpressionInfo(graft.rules.Categorizer.getClass.getName, "categorize_bb"),
-      arity("categorize_bb", 1, 1)(args => org.apache.spark.sql.GraftSqlBridge.catalystExpression(
-        graft.rules.Categorizer.categorize(
-          org.apache.spark.sql.GraftSqlBridge.column(args(0)))))))
+    ("categorize_bb", info(graft.rules.Categorizer, "categorize_bb"),
+      arity("categorize_bb", 1, 1)(args =>
+        expr(graft.rules.Categorizer.categorize(col(args(0)))))))
 
   /** Register on an already-built session. */
   def register(spark: SparkSession): Unit =

@@ -1,12 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.{coalesce, lit, typedLit}
 import org.apache.spark.sql.types._
 
 /** Exact in-kernel twin of Spark's `round(doubleCol, 6)` (RoundBase on
@@ -84,47 +82,20 @@ final class MarginTargetsRef(val ids: Array[Long],
   * [[CosineSimilarityExpr.cosine]] accumulation and the exact
   * [[Round6]] twin of `round(_, 6)`; ordering compares the integer
   * micros those doubles ARE. A null query vector reproduces the old
-  * all-NULL-cos_sim ordering (rank by seed id alone), so the output is
-  * never null — the caller guarantees a non-empty, null-free seed set
-  * (it falls back to the exchange shape otherwise). */
-case class KnnVoteExpr(child: Expression, seeds: KnnSeedsRef, k: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+  * all-NULL-cos_sim ordering (rank by seed id alone): the helper feeds
+  * it to the kernel as the empty vector, whose cosine is 0.0 against
+  * every seed. So the output is never null — the caller guarantees a
+  * non-empty, null-free seed set (it falls back to the exchange shape
+  * otherwise). */
+object KnnVoteExpr {
 
-  override def dataType: DataType = StructType(Seq(
+  private val outType: DataType = StructType(Seq(
     StructField("pred_label", IntegerType, nullable = false),
     StructField("votes", LongType, nullable = false)))
 
-  override def nullable: Boolean = false
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    KnnVoteExpr.vote(
-      if (v == null) null else v.asInstanceOf[ArrayData].toFloatArray(),
-      seeds, k)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val ref = ctx.addReferenceObj("seeds", seeds, "graft.plans.KnnSeedsRef")
-    ev.copy(
-      code = code"""
-        ${c.code}
-        org.apache.spark.sql.catalyst.InternalRow ${ev.value} =
-          graft.plans.KnnVoteExpr.vote(
-            ${c.isNull} ? null : ${c.value}.toFloatArray(), $ref, $k);""",
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object KnnVoteExpr {
-
-  /** Top-k + vote kernel. `q == null` reproduces the all-null-cosine
-    * ordering of the window shape: every cosine NULL ranks equal, ties
-    * to the lowest seed id. */
-  def vote(q: Array[Float], seeds: KnnSeedsRef, k: Int): InternalRow = {
+  /** Top-k + vote kernel. */
+  def vote(v: ArrayData, seeds: KnnSeedsRef, k: Int): InternalRow = {
+    val q = v.toFloatArray()
     val n = seeds.size
     val kk = math.min(k, n)
     // exact top-kk by (micros DESC, id ASC): insertion into a sorted
@@ -134,10 +105,8 @@ object KnnVoteExpr {
     var filled = 0
     var i = 0
     while (i < n) {
-      val m =
-        if (q == null) Long.MinValue // equal for all → id-only ordering
-        else Round6.micros(Round6.round6(
-          CosineSimilarityExpr.cosine(q, seeds.embs(i))))
+      val m = Round6.micros(Round6.round6(
+        CosineSimilarityExpr.cosine(q, seeds.embs(i))))
       val id = seeds.ids(i)
       if (filled < kk ||
           m > topM(filled - 1) ||
@@ -174,10 +143,9 @@ object KnnVoteExpr {
     new GenericInternalRow(Array[Any](bestLabel, bestVotes))
   }
 
-  def knnVote(c: Column, seeds: KnnSeedsRef, k: Int): Column = {
-    import org.apache.spark.sql.GraftSqlBridge
-    GraftSqlBridge.column(KnnVoteExpr(GraftSqlBridge.expression(c), seeds, k))
-  }
+  def knnVote(c: Column, seeds: KnnSeedsRef, k: Int): Column =
+    GraftSqlBridge.kernel(KnnVoteExpr, "vote", outType,
+      coalesce(c, typedLit(Array.emptyFloatArray)), GraftSqlBridge.model(seeds), lit(k))
 }
 
 /** In-row kNN-average half of margin mining (s16 pass A): for one row's
@@ -189,30 +157,11 @@ object KnnVoteExpr {
   * tie-break) determines the value — exactly as in the window shape.
   * `rowIsLeft` pins the cosine accumulation's argument order to the
   * side the scores table put on the left. */
-case class KnnAvgMicrosExpr(child: Expression, refEmbs: Array[Array[Float]],
-    k: Int, rowIsLeft: Boolean)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = DoubleType
-
-  override protected def nullSafeEval(input: Any): Any =
-    KnnAvgMicrosExpr.knnAvg(
-      input.asInstanceOf[ArrayData].toFloatArray(), refEmbs, k, rowIsLeft)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("refEmbs", refEmbs, "float[][]")
-    defineCodeGen(ctx, ev, a =>
-      s"graft.plans.KnnAvgMicrosExpr.knnAvg($a.toFloatArray(), $ref, $k, $rowIsLeft)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object KnnAvgMicrosExpr {
 
-  def knnAvg(q: Array[Float], refs: Array[Array[Float]], k: Int,
+  def knnAvg(v: ArrayData, refs: Array[Array[Float]], k: Int,
       rowIsLeft: Boolean): Double = {
+    val q = v.toFloatArray()
     val n = refs.length
     val kk = math.min(k, n)
     if (kk == 0) return 0.0 // unreachable: callers guarantee non-empty refs
@@ -244,11 +193,9 @@ object KnnAvgMicrosExpr {
   }
 
   def knnAvgMicros(c: Column, refEmbs: Array[Array[Float]], k: Int,
-      rowIsLeft: Boolean): Column = {
-    import org.apache.spark.sql.GraftSqlBridge
-    GraftSqlBridge.column(
-      KnnAvgMicrosExpr(GraftSqlBridge.expression(c), refEmbs, k, rowIsLeft))
-  }
+      rowIsLeft: Boolean): Column =
+    GraftSqlBridge.kernel(KnnAvgMicrosExpr, "knnAvg", DoubleType,
+      c, GraftSqlBridge.model(refEmbs), lit(k), lit(rowIsLeft))
 }
 
 /** In-row forward-best margin selection (s16 pass B): for one source
@@ -258,50 +205,26 @@ object KnnAvgMicrosExpr {
   * denominator — i.e. the margin join + per-source rank window of the
   * previous shape, without ever materializing the |src|×|tgt| score
   * matrix (round-15 verdict: a 4.3 GiB localCheckpoint spill at sf1).
-  * Returns null when no target survives the denominator filter or the
-  * best margin is under `tau` — exactly the rows the old
-  * `rk = 1 AND margin >= tau` filter dropped. Arithmetic is the
-  * marginSelect algebra verbatim: denom = src_knn/2 + tgt_knn/2,
-  * margin = floor(cos/denom·1e6 + 0.5)/1e6 on round@6 cosines. */
-case class MarginBestExpr(child: Expression, targets: MarginTargetsRef,
-    k: Int, tau: Double)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+  * Returns an empty array when no target survives the denominator
+  * filter or the best margin is under `tau` — exactly the rows the old
+  * `rk = 1 AND margin >= tau` filter dropped — else the one best
+  * target. Arithmetic is the marginSelect algebra verbatim: denom =
+  * src_knn/2 + tgt_knn/2, margin = floor(cos/denom·1e6 + 0.5)/1e6 on
+  * round@6 cosines.
+  *
+  * The zero-or-one array is what pins ONE evaluation per source: the
+  * caller expands it with `inline`, a generator the optimizer neither
+  * inlines into a filter nor pushes below the round-robin spread. A
+  * nullable struct plus an `isNotNull` filter let the optimizer copy the
+  * N² kernel into the filter below the spread — measured: the whole
+  * scoring ran twice, once serially on the single input split (13.4 s of
+  * a 14.2 s sf1 query) and again in the projection. */
+object MarginBestExpr {
 
-  override def dataType: DataType = StructType(Seq(
+  private val outType: DataType = ArrayType(StructType(Seq(
     StructField("tgt_id", LongType, nullable = false),
     StructField("cos_sim", DoubleType, nullable = false),
-    StructField("margin", DoubleType, nullable = false)))
-
-  override protected def nullSafeEval(input: Any): Any =
-    MarginBestExpr.best(
-      input.asInstanceOf[ArrayData].toFloatArray(), targets, k, tau)
-
-  override def nullable: Boolean = true
-
-  // Deliberately declared non-deterministic although the kernel is a pure
-  // function (guide §4.4): the caller filters on isnotnull(this), and a
-  // deterministic expensive expression gets INLINED into that filter and
-  // PUSHED below the round-robin spread exchange — measured: the whole
-  // N² scoring ran twice, once serially on the single input split
-  // (13.4 s of a 14.2 s sf1 query) and again in the projection. The
-  // flag pins one evaluation, above the spread.
-  override lazy val deterministic: Boolean = false
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("targets", targets, "graft.plans.MarginTargetsRef")
-    // NOT defineCodeGen: the kernel legitimately returns null (no target
-    // above tau / none with a positive denominator), so isNull must be
-    // re-derived from the result, not copied from the input's nullness
-    nullSafeCodeGen(ctx, ev, a => s"""
-      ${ev.value} = graft.plans.MarginBestExpr.best($a.toFloatArray(), $ref, $k, $tau);
-      ${ev.isNull} = ${ev.value} == null;""")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object MarginBestExpr {
+    StructField("margin", DoubleType, nullable = false))), containsNull = false)
 
   // per-thread micro scratch, grown to the target count: pass B reads
   // each cosine twice (top-k, then margin), so the first loop stores the
@@ -310,10 +233,10 @@ object MarginBestExpr {
     override def initialValue(): Array[Long] = new Array[Long](0)
   }
 
-  def best(q: Array[Float], targets: MarginTargetsRef, k: Int,
-      tau: Double): InternalRow = {
+  def best(v: ArrayData, targets: MarginTargetsRef, k: Int,
+      tau: Double): ArrayData = {
+    val q = v.toFloatArray()
     val n = targets.size
-    if (n == 0) return null // unreachable: caller guarantees non-empty tgt
     var ms = scratch.get()
     if (ms.length < n) { ms = new Array[Long](n); scratch.set(ms) }
     val kk = math.min(k, n)
@@ -357,15 +280,13 @@ object MarginBestExpr {
       }
       t += 1
     }
-    if (bestIdx < 0 || bestMargin < tau) null
-    else new GenericInternalRow(Array[Any](
-      targets.ids(bestIdx), ms(bestIdx).toDouble / 1e6, bestMargin))
+    if (bestIdx < 0 || bestMargin < tau) new GenericArrayData(Array.empty[Any])
+    else new GenericArrayData(Array[Any](new GenericInternalRow(Array[Any](
+      targets.ids(bestIdx), ms(bestIdx).toDouble / 1e6, bestMargin))))
   }
 
   def marginBest(c: Column, targets: MarginTargetsRef, k: Int,
-      tau: Double): Column = {
-    import org.apache.spark.sql.GraftSqlBridge
-    GraftSqlBridge.column(
-      MarginBestExpr(GraftSqlBridge.expression(c), targets, k, tau))
-  }
+      tau: Double): Column =
+    GraftSqlBridge.kernel(MarginBestExpr, "best", outType,
+      c, GraftSqlBridge.model(targets), lit(k), lit(tau))
 }

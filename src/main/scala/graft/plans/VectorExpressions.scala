@@ -1,74 +1,73 @@
 package graft.plans
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.{Column, GraftSqlBridge}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData, XXH64}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression for float-vector cosine similarity.
-  *
-  * Why a custom Expression (SURVEY §4 / builder preference (b)): the
-  * composable alternative — `zip_with` + `aggregate` higher-order
-  * functions — is semantically correct but each HOF evaluates an
-  * interpreted per-element lambda AND is itself CodegenFallback, which
-  * breaks whole-stage codegen around the similarity join. On an N×M
-  * candidate pair set that's three array traversals with closure overhead
-  * per element. This expression is one tight primitive-array loop, emits
-  * inline Java through `doGenCode`, and keeps the surrounding stage in
-  * whole-stage codegen.
+/* The engine's row kernels: each object below holds one fused per-row
+ * function over Catalyst's internal types and a Column helper that plans
+ * it through `GraftSqlBridge.kernel`.
+ *
+ * Why a fused kernel: the composable formulations of these operators
+ * either run an interpreted lambda per array element (`zip_with`,
+ * `aggregate` and `transform` are CodegenFallback and re-inline the
+ * tokenizer into every lambda iteration — O(tokens²) per row, measured
+ * 20 s → 0.9 s on d31) or explode the row and pay exchanges for a value
+ * that depends on the row alone. A kernel is one tight loop per row, the
+ * fused single-projection operator that pure-SQL inference pipelines
+ * build by operator fusion.
+ *
+ * Why `StaticInvoke`: Spark's own expression for calling a static method
+ * emits one static call inside the whole-stage-codegen projection and
+ * calls the same method by reflection when interpreted. So each kernel
+ * has one implementation, with no hand-written Catalyst expression class
+ * to keep in step with it in two modes. Driver-side models (centroid
+ * matrices, seed sets, filter bytes, weights) ride in as
+ * `GraftSqlBridge.model` plan constants. */
+
+/** Float-vector cosine similarity.
   *
   * Numeric contract (oracle parity): elements cast float→double, then a
   * single left-to-right accumulation of dot/norms, final value
   * dot/(√na·√nb), 0.0 for zero vectors — bit-identical to the HOF
   * formulation it replaces.
   */
-case class CosineSimilarityExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
+object CosineSimilarityExpr {
 
-  override def dataType: DataType = DoubleType
+  def cosine(x: Array[Float], y: Array[Float]): Double = {
+    val n = math.min(x.length, y.length)
+    var dot = 0.0
+    var na = 0.0
+    var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val xi = x(i).toDouble
+      val yi = y(i).toDouble
+      dot += xi * yi
+      na += xi * xi
+      nb += yi * yi
+      i += 1
+    }
+    if (na > 0 && nb > 0) dot / (math.sqrt(na) * math.sqrt(nb)) else 0.0
+  }
 
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    CosineSimilarityExpr.cosine(
-      a.asInstanceOf[ArrayData].toFloatArray(),
-      b.asInstanceOf[ArrayData].toFloatArray())
+  def cosine(x: ArrayData, y: ArrayData): Double =
+    cosine(x.toFloatArray(), y.toFloatArray())
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.plans.CosineSimilarityExpr.cosine($a.toFloatArray(), $b.toFloatArray())")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
+  def cosineSim(a: Column, b: Column): Column =
+    GraftSqlBridge.kernel(CosineSimilarityExpr, "cosine", DoubleType, a, b)
 }
 
-/** Native MinHash signature: k seeded xxhash64 minima over a string-array
-  * column in ONE pass over the array — the HOF formulation
-  * (`transform(seq(0,k-1), seed -> array_min(transform(sh, xxhash64(_,
-  * seed))))`) re-traverses the shingle array per seed with interpreted
-  * lambdas; this kernel hashes each shingle k times in a tight loop.
-  * Hash family: xxhash64 of the shingle bytes with seed = 42 + i (same
-  * family Spark's `xxhash64` builds on). */
-case class MinHashSignatureExpr(child: Expression, k: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
-
-  override protected def nullSafeEval(input: Any): Any =
-    MinHashSignatureExpr.signature(input.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a =>
-      s"graft.plans.MinHashSignatureExpr.signature($a, $k)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
+/** MinHash signature: k seeded minima over a string-array column in ONE
+  * pass over the array — the HOF formulation (`transform(seq(0,k-1),
+  * seed -> array_min(transform(sh, xxhash64(_, seed))))`) re-traverses
+  * the shingle array per seed with interpreted lambdas. Hash family:
+  * xxhash64 of the shingle bytes (seed 42), then k affine permutations. */
 object MinHashSignatureExpr {
-  import org.apache.spark.sql.catalyst.expressions.XXH64
-  import org.apache.spark.sql.catalyst.util.GenericArrayData
 
   /** splitmix64 — seeds the affine hash family deterministically. */
   private def mix(z0: Long): Long = {
@@ -124,38 +123,19 @@ object MinHashSignatureExpr {
     new GenericArrayData(mins)
   }
 
-  def minhashSig(c: Column, k: Int): Column = {
-    import org.apache.spark.sql.GraftSqlBridge
-    GraftSqlBridge.column(MinHashSignatureExpr(GraftSqlBridge.expression(c), k))
-  }
+  def minhashSig(c: Column, k: Int): Column =
+    GraftSqlBridge.kernel(MinHashSignatureExpr, "signature",
+      ArrayType(LongType, containsNull = false), c, lit(k))
 }
 
-/** Native word n-gram shingling: whitespace-tokenize + distinct n-grams in
-  * one pass. The HOF formulation (`transform(sequence(...), i =>
+/** Word n-gram shingling: whitespace-tokenize + distinct n-grams in one
+  * pass. The HOF formulation (`transform(sequence(...), i =>
   * concat_ws(" ", slice(tokens, i, n)))`) re-evaluates the tokenize
-  * expression on every lambda iteration (the token array is inlined into
-  * the lambda body), i.e. O(tokens) regex splits per row. Semantics match
-  * `array_distinct(transform(...))`: trim, split on \s+, distinct
-  * first-occurrence n-grams, empty for rows with < n tokens. */
-case class ShinglesExpr(child: Expression, n: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.StringType, containsNull = false)
-
-  override protected def nullSafeEval(input: Any): Any =
-    ShinglesExpr.shingle(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.plans.ShinglesExpr.shingle($a, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
+  * expression on every lambda iteration, i.e. O(tokens) regex splits per
+  * row. Semantics match `array_distinct(transform(...))`: trim, split on
+  * \s+, distinct first-occurrence n-grams, empty for rows with < n
+  * tokens. */
 object ShinglesExpr {
-  import org.apache.spark.sql.catalyst.util.GenericArrayData
-  import org.apache.spark.unsafe.types.UTF8String
 
   def shingle(text: UTF8String, n: Int): ArrayData = {
     val toks = text.toString.trim.split("\\s+").filter(_.nonEmpty)
@@ -176,95 +156,49 @@ object ShinglesExpr {
     new GenericArrayData(out)
   }
 
-  def shingles(c: Column, n: Int): Column = {
-    import org.apache.spark.sql.GraftSqlBridge
-    GraftSqlBridge.column(ShinglesExpr(GraftSqlBridge.expression(c), n))
-  }
+  def shingles(c: Column, n: Int): Column =
+    GraftSqlBridge.kernel(ShinglesExpr, "shingle",
+      ArrayType(StringType, containsNull = false), c, lit(n))
 }
 
 /** Nearest-centroid assignment: argmax cosine similarity of a float-vector
   * column against a small in-plan centroid matrix (the IVF coarse
-  * quantizer). The matrix rides into generated code via
-  * `ctx.addReferenceObj`, so assignment is a single tight loop inside the
-  * scan projection — zero shuffle, zero join. This replaces the
-  * crossJoin(corpus × centroids) + window-argmin shape, which shuffled and
-  * sorted k× the corpus to take a per-row argmin.
+  * quantizer), a single tight loop inside the scan projection — zero
+  * shuffle, zero join. This replaces the crossJoin(corpus × centroids) +
+  * window-argmin shape, which shuffled and sorted k× the corpus to take
+  * a per-row argmin.
   *
   * Ties break to the lowest centroid id; a null/absent vector yields null.
   */
-case class NearestCentroidExpr(child: Expression, centroids: Array[Array[Float]])
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-
-  override protected def nullSafeEval(input: Any): Any =
-    NearestCentroidExpr.nearest(
-      input.asInstanceOf[ArrayData].toFloatArray(), centroids)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cs = ctx.addReferenceObj("centroids", centroids, "float[][]")
-    defineCodeGen(ctx, ev, a =>
-      s"graft.plans.NearestCentroidExpr.nearest($a.toFloatArray(), $cs)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object NearestCentroidExpr {
 
-  /** Tight-loop kernel shared by interpreted eval and generated code. */
-  def nearest(v: Array[Float], centroids: Array[Array[Float]]): Int = {
+  def nearest(v: ArrayData, centroids: Array[Array[Float]]): Int = {
+    val q = v.toFloatArray()
     var best = 0
     var bestSim = Double.NegativeInfinity
     var c = 0
     while (c < centroids.length) {
-      val sim = CosineSimilarityExpr.cosine(v, centroids(c))
+      val sim = CosineSimilarityExpr.cosine(q, centroids(c))
       if (sim > bestSim) { bestSim = sim; best = c }
       c += 1
     }
     best
   }
 
-  def nearestCentroid(c: Column, centroids: Array[Array[Float]]): Column = {
-    import org.apache.spark.sql.GraftSqlBridge
-    GraftSqlBridge.column(NearestCentroidExpr(GraftSqlBridge.expression(c), centroids))
-  }
+  def nearestCentroid(c: Column, centroids: Array[Array[Float]]): Column =
+    GraftSqlBridge.kernel(NearestCentroidExpr, "nearest", IntegerType,
+      c, GraftSqlBridge.model(centroids))
 }
 
 /** The nProbe nearest centroid ids of a float-vector column (cosine,
   * best-first, ties to the lower id) — the MULTI-probe coarse-quantizer
   * step of batched IVF search: where [[NearestCentroidExpr]] assigns a
-  * corpus row to its one home list, this expression fans a QUERY row out
-  * to the nProbe lists worth probing, as a single codegen'd projection
-  * (explode it and equi-join the lists). Zero shuffle, zero join. */
-case class NearestCentroidsExpr(child: Expression,
-    centroids: Array[Array[Float]], nProbe: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.IntegerType, containsNull = false)
-
-  override protected def nullSafeEval(input: Any): Any =
-    NearestCentroidsExpr.nearestN(
-      input.asInstanceOf[ArrayData].toFloatArray(), centroids, nProbe)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cs = ctx.addReferenceObj("centroids", centroids, "float[][]")
-    defineCodeGen(ctx, ev, a =>
-      s"graft.plans.NearestCentroidsExpr.nearestN($a.toFloatArray(), $cs, $nProbe)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
+  * corpus row to its one home list, this kernel fans a QUERY row out to
+  * the nProbe lists worth probing (explode it and equi-join the lists).
+  * Zero shuffle, zero join. */
 object NearestCentroidsExpr {
-  import org.apache.spark.sql.catalyst.util.GenericArrayData
 
-  /** Selection kernel shared by interpreted eval and generated code:
-    * O(k·nProbe) repeated-max over the similarity row — k is the coarse
+  /** O(k·nProbe) repeated-max over the similarity row — k is the coarse
     * quantizer size (≤ thousands), so this beats a sort. */
   def nearestN(v: Array[Float], centroids: Array[Array[Float]],
       nProbe: Int): ArrayData = {
@@ -291,76 +225,29 @@ object NearestCentroidsExpr {
     new GenericArrayData(out)
   }
 
+  def nearestN(v: ArrayData, centroids: Array[Array[Float]],
+      nProbe: Int): ArrayData = nearestN(v.toFloatArray(), centroids, nProbe)
+
   def nearestCentroids(c: Column, centroids: Array[Array[Float]],
-      nProbe: Int): Column = {
-    import org.apache.spark.sql.GraftSqlBridge
-    GraftSqlBridge.column(
-      NearestCentroidsExpr(GraftSqlBridge.expression(c), centroids, nProbe))
-  }
+      nProbe: Int): Column =
+    GraftSqlBridge.kernel(NearestCentroidsExpr, "nearestN",
+      ArrayType(IntegerType, containsNull = false),
+      c, GraftSqlBridge.model(centroids), lit(nProbe))
 }
 
-object CosineSimilarityExpr {
-
-  /** Tight-loop kernel, shared by interpreted eval and generated code. */
-  def cosine(x: Array[Float], y: Array[Float]): Double = {
-    val n = math.min(x.length, y.length)
-    var dot = 0.0
-    var na = 0.0
-    var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val xi = x(i).toDouble
-      val yi = y(i).toDouble
-      dot += xi * yi
-      na += xi * xi
-      nb += yi * yi
-      i += 1
-    }
-    if (na > 0 && nb > 0) dot / (math.sqrt(na) * math.sqrt(nb)) else 0.0
-  }
-
-  /** Column-level entry point (Spark 4 classic bridge between the public
-    * Column API and Catalyst expressions). */
-  def cosineSim(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.GraftSqlBridge
-    GraftSqlBridge.column(
-      CosineSimilarityExpr(GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
-  }
-}
-
-/** Native random-hyperplane LSH signature against an explicit ±1
-  * hyperplane matrix (nBits × dim): bit p of the result is the sign of
-  * the projection of the vector onto hyperplane p. The matrix is a
+/** Random-hyperplane LSH signature against an explicit ±1 hyperplane
+  * matrix (nBits × dim): bit p of the result is the sign of the
+  * projection of the vector onto hyperplane p. The matrix is a
   * data-independent MODEL — built once driver-side (see
-  * [[HyperplaneSignatureExpr.md5Signs]]) and carried into generated code
-  * as a reference object like the IVF centroids — so per-row cost is one
-  * tight float loop inside whole-stage codegen; the nested-HOF
-  * formulation this replaces re-inlined the projection per hyperplane,
-  * interpreted. Deriving signs from md5 keeps the whole signature
-  * reproducible in ANSI SQL, which is what lets s04 be oracle-checked.
+  * [[HyperplaneSignatureExpr.md5Signs]]) and carried into the plan like
+  * the IVF centroids — so per-row cost is one tight float loop inside
+  * whole-stage codegen; the nested-HOF formulation this replaces
+  * re-inlined the projection per hyperplane, interpreted. Deriving signs
+  * from md5 keeps the whole signature reproducible in ANSI SQL, which is
+  * what lets s04 be oracle-checked.
   */
-case class HyperplaneSignatureExpr(child: Expression, signs: Array[Array[Float]])
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
-
-  override protected def nullSafeEval(input: Any): Any =
-    HyperplaneSignatureExpr.signature(
-      input.asInstanceOf[ArrayData].toFloatArray(), signs)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val m = ctx.addReferenceObj("hyperplanes", signs, "float[][]")
-    defineCodeGen(ctx, ev, a =>
-      s"graft.plans.HyperplaneSignatureExpr.signature($a.toFloatArray(), $m)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object HyperplaneSignatureExpr {
 
-  /** Tight-loop kernel, shared by interpreted eval and generated code. */
   def signature(v: Array[Float], signs: Array[Array[Float]]): Long = {
     var sig = 0L
     var p = 0
@@ -375,6 +262,9 @@ object HyperplaneSignatureExpr {
     }
     sig
   }
+
+  def signature(v: ArrayData, signs: Array[Array[Float]]): Long =
+    signature(v.toFloatArray(), signs)
 
   /** The ±1 hyperplane matrix from md5: sign(p, d) = +1 iff the first
     * hex nibble of md5("p:d") is odd — matched exactly by the DuckDB SQL
@@ -399,42 +289,20 @@ object HyperplaneSignatureExpr {
     }
   }
 
-  def hyperplaneSig(c: Column, signs: Array[Array[Float]]): Column = {
-    import org.apache.spark.sql.GraftSqlBridge
-    GraftSqlBridge.column(
-      HyperplaneSignatureExpr(GraftSqlBridge.expression(c), signs))
-  }
+  def hyperplaneSig(c: Column, signs: Array[Array[Float]]): Column =
+    GraftSqlBridge.kernel(HyperplaneSignatureExpr, "signature", LongType,
+      c, GraftSqlBridge.model(signs))
 }
 
-/** Native multiplicity-preserving word n-grams — [[ShinglesExpr]] minus
-  * the distinct (whose LinkedHashSet semantics are right for Jaccard but
+/** Multiplicity-preserving word n-grams — [[ShinglesExpr]] minus the
+  * distinct (whose LinkedHashSet semantics are right for Jaccard but
   * CORRUPT language-model counts: a repeated bigram must count every
   * occurrence). The HOF formulation (`transform(sequence(1, size-1), i =>
   * concat_ws(" ", element_at(toks, i), element_at(toks, i+1)))`) inlines
   * the tokenize expression into the lambda body, re-running the regex
   * split per ELEMENT — O(tokens²) per row, measured as a 20 s model build
-  * on the 5k-doc gate corpus. This kernel tokenizes once, emits inline
-  * Java, and keeps the stage in whole-stage codegen. */
-case class NgramsExpr(child: Expression, n: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.StringType, containsNull = false)
-
-  override protected def nullSafeEval(input: Any): Any =
-    NgramsExpr.ngramsOf(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.plans.NgramsExpr.ngramsOf($a, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
+  * on the 5k-doc gate corpus. This kernel tokenizes once. */
 object NgramsExpr {
-  import org.apache.spark.sql.catalyst.util.GenericArrayData
-  import org.apache.spark.unsafe.types.UTF8String
 
   def ngramsOf(text: UTF8String, n: Int): ArrayData = {
     val toks = text.toString.trim.split("\\s+").filter(_.nonEmpty)
@@ -451,20 +319,19 @@ object NgramsExpr {
     new GenericArrayData(out)
   }
 
-  def ngrams(c: Column, n: Int): Column = {
-    import org.apache.spark.sql.GraftSqlBridge
-    GraftSqlBridge.column(NgramsExpr(GraftSqlBridge.expression(c), n))
-  }
+  def ngrams(c: Column, n: Int): Column =
+    GraftSqlBridge.kernel(NgramsExpr, "ngramsOf",
+      ArrayType(StringType, containsNull = false), c, lit(n))
 }
 
-/** Native content-defined chunking: the complete per-document CDC
-  * pipeline — tokenize, stride-1 window fingerprints, mod-boundary
-  * selection, chunk slicing and chunk fingerprints — in ONE pass of
-  * tight Java. The staged higher-order-function formulation is linear
-  * (each stage references the previous materialized array column) but
-  * every lambda step is interpreted and each window/chunk fingerprint
-  * allocates through the generic md5 expression — measured 4.5 s on the
-  * 5k-doc gate corpus vs sub-second for the kernel.
+/** Content-defined chunking: the complete per-document CDC pipeline —
+  * tokenize, stride-1 window fingerprints, mod-boundary selection, chunk
+  * slicing and chunk fingerprints — in ONE pass of tight Java. The staged
+  * higher-order-function formulation is linear (each stage references the
+  * previous materialized array column) but every lambda step is
+  * interpreted and each window/chunk fingerprint allocates through the
+  * generic md5 expression — measured 4.5 s on the 5k-doc gate corpus vs
+  * sub-second for the kernel.
   *
   * Fingerprints are the engine's cross-engine 60-bit identity: the
   * first 15 hex digits of md5 of the space-joined tokens, as a long —
@@ -476,38 +343,17 @@ object NgramsExpr {
   * shorter than the window. A chunk boundary falls after token i
   * exactly when the fingerprint of the window ENDING at i is ≡ 0 mod
   * `modulus`, plus the forced end-of-document boundary. */
-case class CdcChunksExpr(child: Expression, windowTokens: Int, modulus: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = CdcChunksExpr.outType
-
-  override protected def nullSafeEval(input: Any): Any =
-    CdcChunksExpr.chunksOf(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      windowTokens, modulus)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      a => s"graft.plans.CdcChunksExpr.chunksOf($a, $windowTokens, $modulus)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object CdcChunksExpr {
-  import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.sql.catalyst.util.GenericArrayData
-  import org.apache.spark.sql.types._
-  import org.apache.spark.unsafe.types.UTF8String
 
-  val outType: DataType = ArrayType(StructType(Seq(
+  private val outType: DataType = ArrayType(StructType(Seq(
     StructField("chunk_start", IntegerType, nullable = false),
     StructField("chunk_len", IntegerType, nullable = false),
     StructField("fp", LongType, nullable = false))), containsNull = false)
 
   /** First 15 hex digits of md5(s) as a long: 8 digest bytes hold 16 hex
-    * digits; dropping the low nibble keeps exactly the leading 15. */
-  private def md560(md: java.security.MessageDigest, s: String): Long = {
+    * digits; dropping the low nibble keeps exactly the leading 15 (always
+    * non-negative). */
+  private[plans] def md560(md: java.security.MessageDigest, s: String): Long = {
     val d = md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     var v = 0L
     var i = 0
@@ -549,27 +395,25 @@ object CdcChunksExpr {
     new GenericArrayData(out)
   }
 
-  def chunks(c: Column, windowTokens: Int, modulus: Int): Column = {
-    import org.apache.spark.sql.GraftSqlBridge
-    GraftSqlBridge.column(
-      CdcChunksExpr(GraftSqlBridge.expression(c), windowTokens, modulus))
-  }
+  def chunks(c: Column, windowTokens: Int, modulus: Int): Column =
+    GraftSqlBridge.kernel(CdcChunksExpr, "chunksOf", outType,
+      c, lit(windowTokens), lit(modulus))
 }
 
-/** Native Shannon-entropy kernel over a document's character or
-  * whitespace-token distribution — the randomness half of the quality
-  * family (d03 heuristics, d39 Gopher rules, d40 repetition): machine-
-  * generated keyboard mash and template spam sit at the distribution's
-  * extremes, so published pipelines filter on "bits per character /
-  * token" next to the rule-based signals.
+/** Shannon entropy over a document's character or whitespace-token
+  * distribution — the randomness half of the quality family (d03
+  * heuristics, d39 Gopher rules, d40 repetition): machine-generated
+  * keyboard mash and template spam sit at the distribution's extremes,
+  * so published pipelines filter on "bits per character / token" next to
+  * the rule-based signals.
   *
-  * A custom Expression for the same reason as [[NgramsExpr]]: the
-  * composable formulation (explode characters → two aggregates → join
-  * back) pays two exchanges per corpus scan for a value that is a pure
-  * per-row function of the text; the HOF formulation (`transform` over
-  * a distinct-char array probing `regexp_count` per element) is
-  * interpreted AND quadratic per row. This kernel is one frequency map
-  * + one log pass of tight Java, inline in whole-stage codegen.
+  * A kernel for the same reason as [[NgramsExpr]]: the composable
+  * formulation (explode characters → two aggregates → join back) pays
+  * two exchanges per corpus scan for a value that is a pure per-row
+  * function of the text; the HOF formulation (`transform` over a
+  * distinct-char array probing `regexp_count` per element) is
+  * interpreted AND quadratic per row. This kernel is one frequency map +
+  * one log pass.
   *
   * Numeric contract (oracle parity): entropy = −Σ (c/n)·ln(c/n)/ln 2
   * accumulated per distinct symbol; callers round (the ±1 ulp
@@ -579,25 +423,7 @@ object CdcChunksExpr {
   * for empty text; codepoint-level iteration so the contract is
   * "characters" exactly like SQL `substr`, not UTF-16 units.
   */
-case class EntropyExpr(child: Expression, tokenLevel: Boolean)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = DoubleType
-
-  override protected def nullSafeEval(input: Any): Any =
-    EntropyExpr.entropyOf(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], tokenLevel)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a =>
-      s"graft.plans.EntropyExpr.entropyOf($a, $tokenLevel)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object EntropyExpr {
-  import org.apache.spark.unsafe.types.UTF8String
 
   private val Ln2 = math.log(2.0)
 
@@ -631,103 +457,54 @@ object EntropyExpr {
     if (h <= 0.0) 0.0 else h
   }
 
-  def entropy(c: Column, tokenLevel: Boolean): Column = {
-    import org.apache.spark.sql.GraftSqlBridge
-    GraftSqlBridge.column(
-      EntropyExpr(GraftSqlBridge.expression(c), tokenLevel))
-  }
+  def entropy(c: Column, tokenLevel: Boolean): Column =
+    GraftSqlBridge.kernel(EntropyExpr, "entropyOf", DoubleType, c, lit(tokenLevel))
 }
 
-/** Native dense matrix–vector projection: out[p] = Σ_d m[p][d]·v[d].
-  * The matrix is a data-independent MODEL (e.g. a seeded ±1/√k
-  * Johnson–Lindenstrauss sign matrix from
-  * [[HyperplaneSignatureExpr.md5Signs]]) built once driver-side and
-  * carried into generated code as a reference object — the same pattern
-  * as the IVF centroids and the hyperplane planes. This is
+/** Dense matrix–vector projection: out[p] = Σ_d m[p][d]·v[d]. The matrix
+  * is a data-independent MODEL (e.g. a seeded ±1/√k Johnson–Lindenstrauss
+  * sign matrix from [[HyperplaneSignatureExpr.md5Signs]]) built once
+  * driver-side and carried into the plan — the same pattern as the IVF
+  * centroids and the hyperplane planes. This is
   * [[HyperplaneSignatureExpr]] keeping the projection VALUES instead of
   * their signs, which is what dimensionality reduction needs and LSH
-  * discards. Per-row cost is one tight p×d float loop inside
-  * whole-stage codegen; summation runs in coordinate order so the
-  * result is a deterministic IEEE double independent of partitioning.
+  * discards. Per-row cost is one tight p×d float loop; summation runs in
+  * coordinate order so the result is a deterministic IEEE double
+  * independent of partitioning.
   */
-case class MatrixProjectExpr(child: Expression, matrix: Array[Array[Float]])
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.DoubleType, containsNull = false)
-
-  override protected def nullSafeEval(input: Any): Any =
-    MatrixProjectExpr.project(
-      input.asInstanceOf[ArrayData].toFloatArray(), matrix)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val m = ctx.addReferenceObj("projMatrix", matrix, "float[][]")
-    defineCodeGen(ctx, ev, a =>
-      s"graft.plans.MatrixProjectExpr.project($a.toFloatArray(), $m)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object MatrixProjectExpr {
-  import org.apache.spark.sql.catalyst.util.GenericArrayData
 
-  /** Tight-loop kernel shared by interpreted eval and generated code. */
-  def project(v: Array[Float], m: Array[Array[Float]]): ArrayData = {
+  def project(v: ArrayData, m: Array[Array[Float]]): ArrayData = {
+    val q = v.toFloatArray()
     val out = new Array[Any](m.length)
     var p = 0
     while (p < m.length) {
       val row = m(p)
-      val n = math.min(v.length, row.length)
+      val n = math.min(q.length, row.length)
       var acc = 0.0
       var d = 0
-      while (d < n) { acc += v(d).toDouble * row(d); d += 1 }
+      while (d < n) { acc += q(d).toDouble * row(d); d += 1 }
       out(p) = acc
       p += 1
     }
     new GenericArrayData(out)
   }
 
-  def matrixProject(c: Column, matrix: Array[Array[Float]]): Column = {
-    import org.apache.spark.sql.GraftSqlBridge
-    GraftSqlBridge.column(
-      MatrixProjectExpr(GraftSqlBridge.expression(c), matrix))
-  }
+  def matrixProject(c: Column, matrix: Array[Array[Float]]): Column =
+    GraftSqlBridge.kernel(MatrixProjectExpr, "project",
+      ArrayType(DoubleType, containsNull = false), c, GraftSqlBridge.model(matrix))
 }
 
-/** Native greedy BPE merge application: both children are space-joined
-  * symbol strings — `left` the word's current symbol sequence, `right`
-  * the merge pair "A B". One left-to-right non-overlapping pass
-  * replaces each A B occurrence with the fused symbol AB (the standard
-  * BPE scan: after a merge the cursor advances past BOTH consumed
-  * symbols, so a run of three A's under the merge (A,A) yields
-  * [AA, A]). The relational equivalent (position explode +
-  * gaps-and-islands parity selection) is what the DuckDB oracle
-  * replays; this kernel keeps the engine side a single codegen'd pass
-  * over the vocabulary-sized state table. */
-case class BpeApplyExpr(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def dataType: DataType = org.apache.spark.sql.types.StringType
-
-  override protected def nullSafeEval(sym: Any, pair: Any): Any =
-    BpeApplyExpr.applyMerge(
-      sym.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      pair.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.plans.BpeApplyExpr.applyMerge($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
+/** Greedy BPE merge application: both arguments are space-joined symbol
+  * strings — the word's current symbol sequence, and the merge pair
+  * "A B". One left-to-right non-overlapping pass replaces each A B
+  * occurrence with the fused symbol AB (the standard BPE scan: after a
+  * merge the cursor advances past BOTH consumed symbols, so a run of
+  * three A's under the merge (A,A) yields [AA, A]). The relational
+  * equivalent (position explode + gaps-and-islands parity selection) is
+  * what the DuckDB oracle replays; this kernel keeps the engine side a
+  * single pass over the vocabulary-sized state table. */
 object BpeApplyExpr {
-  import org.apache.spark.unsafe.types.UTF8String
 
   def applyMerge(sym: UTF8String, pair: UTF8String): UTF8String = {
     val toks = sym.toString.split(" ")
@@ -748,21 +525,17 @@ object BpeApplyExpr {
     UTF8String.fromString(out.toString)
   }
 
-  def bpeApply(sym: Column, pair: Column): Column = {
-    import org.apache.spark.sql.GraftSqlBridge
-    GraftSqlBridge.column(BpeApplyExpr(
-      GraftSqlBridge.expression(sym), GraftSqlBridge.expression(pair)))
-  }
+  def bpeApply(sym: Column, pair: Column): Column =
+    GraftSqlBridge.kernel(BpeApplyExpr, "applyMerge", StringType, sym, pair)
 }
 
-/** Unicode text canonicalization kernel — the cleaning front of every
+/** Unicode text canonicalization — the cleaning front of every
   * text-dedup/quality operator: NFD-decompose, strip combining marks
   * (accent removal — verified char-for-char against DuckDB's
   * `strip_accents` utf8proc behavior: ø/ß/œ/ł survive, á/ç/ñ/ș/İ fold),
   * NFC-recompose, ROOT-locale lowercase, collapse ASCII whitespace runs
-  * to one space, trim. One pass per row in a static JVM method invoked
-  * from whole-stage codegen — a regex/HOF chain would pay an interpreted
-  * pass per step (the d31/d32 kernel lesson).
+  * to one space, trim. One pass per row — a regex/HOF chain would pay an
+  * interpreted pass per step (the d31/d32 kernel lesson).
   *
   * Cross-engine contract: equals DuckDB
   * `trim(regexp_replace(lower(strip_accents(nfc_normalize(x))), '\s+', ' ', 'g'))`
@@ -771,24 +544,7 @@ object BpeApplyExpr {
   * Greek final sigma) follow the JVM rule and may differ from utf8proc —
   * documented, spec-pinned on the JVM side.
   */
-case class NormalizeTextExpr(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = org.apache.spark.sql.types.StringType
-
-  override protected def nullSafeEval(input: Any): Any =
-    NormalizeTextExpr.normalize(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.plans.NormalizeTextExpr.normalize($a)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object NormalizeTextExpr {
-  import org.apache.spark.unsafe.types.UTF8String
 
   private def isAsciiSpace(c: Char): Boolean =
     c == ' ' || c == '\t' || c == '\n' || c == '\r' || c == '\f' || c == '\u000B'
@@ -823,20 +579,17 @@ object NormalizeTextExpr {
     UTF8String.fromString(out.toString)
   }
 
-  def normalizeText(c: Column): Column = {
-    import org.apache.spark.sql.GraftSqlBridge
-    GraftSqlBridge.column(NormalizeTextExpr(GraftSqlBridge.expression(c)))
-  }
+  def normalizeText(c: Column): Column =
+    GraftSqlBridge.kernel(NormalizeTextExpr, "normalize", StringType, c)
 }
 
-/** Native kernel for the Gopher repetition signals (d40): every gram of
-  * a document lives in ONE row, so the three published fractions —
-  * top-unigram frequency, char-weighted duplicate-bigram and -trigram
-  * fractions — never need the (doc, n, gram) explode + two shuffled
-  * aggregations + pivot + spine join the composable formulation paid
-  * (guide §2.4: remove the shuffle outright; the in-row counting
-  * lesson applied to the whole query). One pass over the token array per
-  * n-gram level, inside whole-stage codegen.
+/** The Gopher repetition signals (d40): every gram of a document lives in
+  * ONE row, so the three published fractions — top-unigram frequency,
+  * char-weighted duplicate-bigram and -trigram fractions — never need
+  * the (doc, n, gram) explode + two shuffled aggregations + pivot + spine
+  * join the composable formulation paid (guide §2.4: remove the shuffle
+  * outright; the in-row counting lesson applied to the whole query). One
+  * pass over the token array per n-gram level.
   *
   * Numeric contract (bit-parity with the aggregate formulation it
   * replaces): counts are exact longs; each fraction is one double
@@ -844,32 +597,12 @@ object NormalizeTextExpr {
   * before; gram length counts Unicode code points (Spark's `length`);
   * missing levels / no-repeat levels emit 0.0 (the old coalesce paths).
   */
-case class RepetitionSignalsExpr(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("top_tok_frac", DoubleType,
-        nullable = false),
-      org.apache.spark.sql.types.StructField("dup2_frac", DoubleType,
-        nullable = false),
-      org.apache.spark.sql.types.StructField("dup3_frac", DoubleType,
-        nullable = false)))
-
-  override protected def nullSafeEval(input: Any): Any =
-    RepetitionSignalsExpr.signalsOf(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.plans.RepetitionSignalsExpr.signalsOf($a)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object RepetitionSignalsExpr {
-  import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.unsafe.types.UTF8String
+
+  private val outType: DataType = StructType(Seq(
+    StructField("top_tok_frac", DoubleType, nullable = false),
+    StructField("dup2_frac", DoubleType, nullable = false),
+    StructField("dup3_frac", DoubleType, nullable = false)))
 
   private def r4(x: Double): Double = Math.floor(x * 10000d + 0.5d) / 10000d
 
@@ -923,27 +656,24 @@ object RepetitionSignalsExpr {
   def signalsOf(text: UTF8String): InternalRow = {
     // same tokenizer as NgramsExpr (the d-family contract)
     val toks = text.toString.trim.split("\\s+").filter(_.nonEmpty)
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](
-        topFrac(levelCounts(toks, 1)),
-        dupFrac(levelCounts(toks, 2)),
-        dupFrac(levelCounts(toks, 3))))
+    new GenericInternalRow(Array[Any](
+      topFrac(levelCounts(toks, 1)),
+      dupFrac(levelCounts(toks, 2)),
+      dupFrac(levelCounts(toks, 3))))
   }
 
-  def repetitionSignals(c: Column): Column = {
-    import org.apache.spark.sql.GraftSqlBridge
-    GraftSqlBridge.column(RepetitionSignalsExpr(GraftSqlBridge.expression(c)))
-  }
+  def repetitionSignals(c: Column): Column =
+    GraftSqlBridge.kernel(RepetitionSignalsExpr, "signalsOf", outType, c)
 }
 
-/** Native kernel for T5-style span corruption (d44): the masking
-  * decision, sentinel numbering, input/target rebuilds and span count
-  * all depend only on a document's OWN tokens and id, so the whole
-  * transformation is one in-row pass — replacing the previous
-  * posexplode → sentinel-rank window → span join → three positional
-  * rebuild aggregates → three spine joins (every one an exchange on the
-  * doc key, at any corpus size) with a zero-exchange projection
-  * (guide §2.4; the d40 kernel lesson applied to token surgery).
+/** T5-style span corruption (d44): the masking decision, sentinel
+  * numbering, input/target rebuilds and span count all depend only on a
+  * document's OWN tokens and id, so the whole transformation is one
+  * in-row pass — replacing the previous posexplode → sentinel-rank
+  * window → span join → three positional rebuild aggregates → three
+  * spine joins (every one an exchange on the doc key, at any corpus
+  * size) with a zero-exchange projection (guide §2.4; the d40 kernel
+  * lesson applied to token surgery).
   *
   * Bit-parity with the aggregate formulation: the mask bucket is the
   * same 60-bit md5 of "seed:docId:grp" mod 10⁶; the input keeps tokens
@@ -952,51 +682,12 @@ object RepetitionSignalsExpr {
   * (exactly the old (pos, sub) sort); all joins single-spaced; strings
   * and counts are exact — no floating point anywhere.
   */
-case class SpanCorruptionExpr(left: Expression, right: Expression,
-    spanLen: Int, ratePerMillion: Int, seed: String)
-    extends BinaryExpression {
-
-  override def dataType: DataType =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("input_text",
-        org.apache.spark.sql.types.StringType, nullable = false),
-      org.apache.spark.sql.types.StructField("target_text",
-        org.apache.spark.sql.types.StringType, nullable = false),
-      org.apache.spark.sql.types.StructField("n_masked_spans",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-
-  override protected def nullSafeEval(text: Any, docId: Any): Any =
-    SpanCorruptionExpr.corruptOf(
-      text.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      docId.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      spanLen, ratePerMillion, seed)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val seedRef = ctx.addReferenceObj("seed", seed, "java.lang.String")
-    defineCodeGen(ctx, ev, (t, d) =>
-      s"graft.plans.SpanCorruptionExpr.corruptOf($t, $d, $spanLen, $ratePerMillion, $seedRef)")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object SpanCorruptionExpr {
-  import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.unsafe.types.UTF8String
 
-  /** The engine-wide 60-bit md5 identity: first 15 hex chars as a long. */
-  private def bucket60(s: String): Long = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // first 15 hex chars = 7.5 bytes: 7 full bytes + the high nibble of
-    // byte 7 — identical to conv(substr(md5(x),1,15),16,10)
-    var v = 0L
-    var i = 0
-    while (i < 7) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
-    (v << 4) | ((d(7) & 0xf0L) >> 4)
-  }
+  private val outType: DataType = StructType(Seq(
+    StructField("input_text", StringType, nullable = false),
+    StructField("target_text", StringType, nullable = false),
+    StructField("n_masked_spans", LongType, nullable = false)))
 
   def corruptOf(text: UTF8String, docId: UTF8String, spanLen: Int,
       ratePerMillion: Int, seed: String): InternalRow = {
@@ -1008,8 +699,8 @@ object SpanCorruptionExpr {
     var nMasked = 0L
     var g = 0
     while (g < nSpans) {
-      masked(g) =
-        bucket60(seed + ":" + id + ":" + g) % 1000000L < ratePerMillion
+      masked(g) = Simhash60Expr.bucket60(seed + ":" + id + ":" + g) %
+        1000000L < ratePerMillion
       if (masked(g)) nMasked += 1
       g += 1
     }
@@ -1039,28 +730,23 @@ object SpanCorruptionExpr {
       }
       g += 1
     }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](UTF8String.fromString(inp.toString),
-        UTF8String.fromString(tgt.toString), nMasked))
+    new GenericInternalRow(Array[Any](UTF8String.fromString(inp.toString),
+      UTF8String.fromString(tgt.toString), nMasked))
   }
 
   def spanCorrupt(text: Column, docId: Column, spanLen: Int,
-      ratePerMillion: Int, seed: String): Column = {
-    import org.apache.spark.sql.GraftSqlBridge
-    GraftSqlBridge.column(SpanCorruptionExpr(
-      GraftSqlBridge.expression(text), GraftSqlBridge.expression(docId),
-      spanLen, ratePerMillion, seed))
-  }
+      ratePerMillion: Int, seed: String): Column =
+    GraftSqlBridge.kernel(SpanCorruptionExpr, "corruptOf", outType, text, docId,
+      lit(spanLen), lit(ratePerMillion), GraftSqlBridge.model(seed))
 }
 
-/** Native kernel for 60-bit SimHash signatures (d08 and the multimodal
-  * twin): a document's signature depends only on its own tokens — bit b
-  * is the sign of Σ ±1 over the tokens' hash bit b, an order-free exact
-  * integer sum — so the explode → 60-conditional-sum hash aggregate →
-  * spine join pipeline (one token-level exchange + one join per use)
-  * collapses to a zero-exchange projection: one md5 per token, sixty
-  * counters, inside whole-stage codegen. Empty-token documents emit
-  * signature 0 exactly as the old spine-join backfill did.
+/** 60-bit SimHash signatures (d08 and the multimodal twin): a document's
+  * signature depends only on its own tokens — bit b is the sign of Σ ±1
+  * over the tokens' hash bit b, an order-free exact integer sum — so the
+  * explode → 60-conditional-sum hash aggregate → spine join pipeline (one
+  * token-level exchange + one join per use) collapses to a zero-exchange
+  * projection: one md5 per token, sixty counters. Empty-token documents
+  * emit signature 0 exactly as the old spine-join backfill did.
   *
   * Tokenizer edge (round-15 advice): Java `trim` + filter(nonEmpty)
   * drops the leading EMPTY token the old Spark-`trim` (space-only)
@@ -1070,35 +756,12 @@ object SpanCorruptionExpr {
   * trim also strips control chars ≤ 0x20 that `\s` does not — a
   * residual cross-engine edge no gate corpus exercises.
   */
-case class Simhash60Expr(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
-
-  override protected def nullSafeEval(input: Any): Any =
-    Simhash60Expr.simhashOf(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.plans.Simhash60Expr.simhashOf($a)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object Simhash60Expr {
-  import org.apache.spark.unsafe.types.UTF8String
 
   /** The engine-wide 60-bit md5 identity (first 15 hex chars as long),
     * shared with [[SpanCorruptionExpr]]'s span bucket. */
-  def bucket60(s: String): Long = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    var v = 0L
-    var i = 0
-    while (i < 7) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
-    (v << 4) | ((d(7) & 0xf0L) >> 4)
-  }
+  def bucket60(s: String): Long =
+    CdcChunksExpr.md560(java.security.MessageDigest.getInstance("MD5"), s)
 
   def simhashOf(text: UTF8String): Long = {
     val toks = text.toString.trim.split("\\s+").filter(_.nonEmpty)
@@ -1122,13 +785,11 @@ object Simhash60Expr {
     sig
   }
 
-  def simhash60(c: Column): Column = {
-    import org.apache.spark.sql.GraftSqlBridge
-    GraftSqlBridge.column(Simhash60Expr(GraftSqlBridge.expression(c)))
-  }
+  def simhash60(c: Column): Column =
+    GraftSqlBridge.kernel(Simhash60Expr, "simhashOf", LongType, c)
 }
 
-/** Native hashed-unigram bucket counting — the featurization scan of the
+/** Hashed-unigram bucket counting — the featurization scan of the
   * d35/d74/d75/d86 hashed-logreg family collapsed to one projection: a
   * document's feature vector x[b] = Σ_{tok: h(tok)=b} 1 depends only on
   * its OWN tokens, so the token explode, the partial hash aggregate and
@@ -1147,39 +808,7 @@ object Simhash60Expr {
   * space); callers lowercase beforehand exactly as they did for the
   * exploded form. Counts are exact longs; empty text yields the
   * all-zero vector (the old explode_outer null-gram path). */
-case class HashedBucketCountsExpr(child: Expression, buckets: Int, maxN: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.LongType, containsNull = false)
-
-  override protected def nullSafeEval(input: Any): Any =
-    HashedBucketCountsExpr.countsOf(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      buckets, maxN)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a =>
-      s"graft.plans.HashedBucketCountsExpr.countsOf($a, $buckets, $maxN)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object HashedBucketCountsExpr {
-  import org.apache.spark.unsafe.types.UTF8String
-
-  /** First 15 hex digits of md5(s) as a long (the CdcChunksExpr/Simhash60
-    * identity: 8 digest bytes are 16 hex digits; >>>4 keeps the leading
-    * 15, always non-negative). */
-  private def md560(md: java.security.MessageDigest, s: String): Long = {
-    val d = md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    var v = 0L
-    var i = 0
-    while (i < 8) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
-    v >>> 4
-  }
 
   def countsOf(text: UTF8String, buckets: Int, maxN: Int): ArrayData = {
     val toks = text.toString.trim.split("\\s+").filter(_.nonEmpty)
@@ -1192,40 +821,22 @@ object HashedBucketCountsExpr {
         val sb = new java.lang.StringBuilder(toks(i))
         var j = 1
         while (j < n) { sb.append(' ').append(toks(i + j)); j += 1 }
-        counts((md560(md, sb.toString) % buckets).toInt) += 1L
+        counts((CdcChunksExpr.md560(md, sb.toString) % buckets).toInt) += 1L
         i += 1
       }
       n += 1
     }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(counts)
+    UnsafeArrayData.fromPrimitiveArray(counts)
   }
 
-  def hashedBucketCounts(c: Column, buckets: Int, maxN: Int = 1): Column = {
-    import org.apache.spark.sql.GraftSqlBridge
-    GraftSqlBridge.column(
-      HashedBucketCountsExpr(GraftSqlBridge.expression(c), buckets, maxN))
-  }
+  def hashedBucketCounts(c: Column, buckets: Int, maxN: Int = 1): Column =
+    GraftSqlBridge.kernel(HashedBucketCountsExpr, "countsOf",
+      ArrayType(LongType, containsNull = false), c, lit(buckets), lit(maxN))
 }
 
 /** Elementwise sum of a long array — Σ_b x[b] as one exact long, the
   * in-row twin of `count(exploded grams)` over a
   * [[HashedBucketCountsExpr]] vector. */
-case class ArraySumLongExpr(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
-
-  override protected def nullSafeEval(input: Any): Any =
-    ArraySumLongExpr.sumOf(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.plans.ArraySumLongExpr.sumOf($a)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object ArraySumLongExpr {
 
   def sumOf(counts: ArrayData): Long = {
@@ -1236,37 +847,17 @@ object ArraySumLongExpr {
     acc
   }
 
-  def arraySumLong(c: Column): Column = {
-    import org.apache.spark.sql.GraftSqlBridge
-    GraftSqlBridge.column(ArraySumLongExpr(GraftSqlBridge.expression(c)))
-  }
+  def arraySumLong(c: Column): Column =
+    GraftSqlBridge.kernel(ArraySumLongExpr, "sumOf", LongType, c)
 }
 
-/** Native dot product of a long-count array against a driver-side double
-  * weight MODEL (the trained logreg weights — data-independent within a
-  * scoring pass, carried into generated code as a reference object, the
-  * [[MatrixProjectExpr]] pattern). Terms accumulate in ascending bucket
-  * order, zero counts contribute nothing (exactly the buckets absent
-  * from the old exploded feature rows), one IEEE double accumulation —
-  * the caller's round@9 absorbs summation-order ulps precisely as it did
-  * for the aggregate formulation this replaces. */
-case class DotProductLitExpr(child: Expression, weights: Array[Double])
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = DoubleType
-
-  override protected def nullSafeEval(input: Any): Any =
-    DotProductLitExpr.dot(input.asInstanceOf[ArrayData], weights)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val w = ctx.addReferenceObj("logregWeights", weights, "double[]")
-    defineCodeGen(ctx, ev, a => s"graft.plans.DotProductLitExpr.dot($a, $w)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
+/** Dot product of a long-count array against a driver-side double weight
+  * MODEL (the trained logreg weights — data-independent within a scoring
+  * pass, the [[MatrixProjectExpr]] pattern). Terms accumulate in
+  * ascending bucket order, zero counts contribute nothing (exactly the
+  * buckets absent from the old exploded feature rows), one IEEE double
+  * accumulation — the caller's round@9 absorbs summation-order ulps
+  * precisely as it did for the aggregate formulation this replaces. */
 object DotProductLitExpr {
 
   def dot(counts: ArrayData, w: Array[Double]): Double = {
@@ -1281,14 +872,11 @@ object DotProductLitExpr {
     acc
   }
 
-  def dotProduct(c: Column, weights: Array[Double]): Column = {
-    import org.apache.spark.sql.GraftSqlBridge
-    // defensive snapshot (round-15 advice): the expression embeds the
-    // array as a reference object, so a caller mutating its weights
-    // array after building a lazy plan would silently re-score with the
-    // NEW values (the old typedLit shape snapshotted); clone pins the
-    // values at construction
-    GraftSqlBridge.column(
-      DotProductLitExpr(GraftSqlBridge.expression(c), weights.clone()))
-  }
+  def dotProduct(c: Column, weights: Array[Double]): Column =
+    // defensive snapshot (round-15 advice): the plan holds the array by
+    // reference, so a caller mutating its weights array after building a
+    // lazy plan would silently re-score with the NEW values (the old
+    // typedLit shape snapshotted); clone pins the values at construction
+    GraftSqlBridge.kernel(DotProductLitExpr, "dot", DoubleType,
+      c, GraftSqlBridge.model(weights.clone()))
 }

@@ -20,10 +20,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * a public def that nothing in the engine or the benchmark calls is
   * deleted, narrowed to `private[graft]`, or listed with its reason. A
   * def on an object counts only calls that name it through its object
-  * (`Object.name`, `Object(…)` for `apply`, an import of the object), or
+  * (`Object.name`, `Object(…)` for `apply`, an import of the object, a
+  * row kernel's `GraftSqlBridge.kernel(Object, "name", …)`), or
   * unqualified calls in the object's own file, so a namesake elsewhere
   * does not hide it; a def on a class or trait counts its name as a
-  * whole token, since an instance call carries no owner name. */
+  * whole token, since an instance call carries no owner name. Row
+  * kernels go through that bridge only: no file hand-writes a Catalyst
+  * row expression (`doGenCode`, a Unary/Binary/TernaryExpression
+  * subclass, an override of `deterministic`). */
 class DevMainsSpec extends AnyFunSuite {
 
   private val allowed = Set(
@@ -181,9 +185,10 @@ class DevMainsSpec extends AnyFunSuite {
     * nothing in `src/main` or `perfbench/src` calls (mains excepted: the
     * first case pins those). */
   private def uncalledPublicDefs(): Set[String] = {
-    val code = (scalaSources(Paths.get("src/main/scala")) ++
+    val raw = (scalaSources(Paths.get("src/main/scala")) ++
         scalaSources(Paths.get("perfbench/src")))
-      .map(f => f -> codeOnly(Files.readString(f))).toMap
+      .map(f => f -> Files.readString(f)).toMap
+    val code = raw.map { case (f, s) => f -> codeOnly(s) }
     def counts(names: Iterator[String]) =
       names.toSeq.groupBy(identity).view.mapValues(_.size).toMap
     def group1(re: scala.util.matching.Regex)(c: String) =
@@ -193,11 +198,20 @@ class DevMainsSpec extends AnyFunSuite {
     // occurrences minus its def sites
     val tokens = counts(code.values.iterator.flatMap("""[\w$]+""".r.findAllIn(_)))
     val defSites = counts(code.values.iterator.flatMap(group1(defName)))
+    // a row kernel planned as `GraftSqlBridge.kernel(Obj, "fn", …)` is
+    // a call of `Obj.fn`: the object is code, the name a string literal
+    val kernelFn = """\s*"(\w+)"""".r
+    val bridged = code.iterator.flatMap { case (f, c) =>
+      """\bGraftSqlBridge\s*\.\s*kernel\s*\(\s*(\w+)\s*,""".r.findAllMatchIn(c)
+        .flatMap(m => kernelFn.findPrefixMatchOf(raw(f).substring(m.end))
+          .map(fn => s"${m.group(1)}.${fn.group(1)}"))
+    }
     // object members: calls through the object's name (`Object.name`,
     // `Object(…)` for apply), plus unqualified calls in the object's own
     // file or in a file importing the name
     val qualified = counts(code.values.iterator.flatMap(c =>
-      """\b(\w+)\s*\.\s*(?=(\w+))""".r.findAllMatchIn(c).map(m => s"${m.group(1)}.${m.group(2)}")))
+      """\b(\w+)\s*\.\s*(?=(\w+))""".r.findAllMatchIn(c).map(m => s"${m.group(1)}.${m.group(2)}")) ++
+      bridged)
     val applied = counts(code.values.iterator.flatMap(
       group1("""(?<!\b(?:class|object|trait|new)\s)\b(\w+)\s*\(""".r)))
     val unqualifiedIn = code.map { case (f, c) => f -> counts(group1("""(?<![\w$.])(\w+)""".r)(c)) }
@@ -234,6 +248,18 @@ class DevMainsSpec extends AnyFunSuite {
       s"perfbench/src: ${unlisted.mkString(", ")}")
     assert(stale.isEmpty, "allowlisted defs that now have a caller or are " +
       s"gone: ${stale.mkString(", ")}")
+  }
+
+  test("no file under src/main/scala/graft hand-writes a row expression: kernels plan through GraftSqlBridge.kernel") {
+    val handWritten = Seq(
+      """\bdef\s+doGenCode\b""".r,
+      """\b(?:extends|with)\s+(?:[\w.]+\.)?(?:Unary|Binary|Ternary)Expression\b""".r,
+      """\boverride\s+(?:lazy\s+)?(?:val|def)\s+deterministic\b""".r)
+    val offenders = scalaSources(Paths.get("src/main/scala/graft"))
+      .filter(f => handWritten.exists(_.findFirstIn(codeOnly(Files.readString(f))).isDefined))
+      .map(_.toString).sorted
+    assert(offenders.isEmpty, "hand-written Catalyst row expressions (plan the " +
+      s"kernel through GraftSqlBridge.kernel instead) in: ${offenders.mkString(", ")}")
   }
 
   test("no file under src/main cuts lineage outside graft.Lineage") {

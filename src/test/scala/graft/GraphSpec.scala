@@ -126,7 +126,6 @@ class GraphSpec extends SparkSpec {
   }
 
   test("copurchaseEdges: per-order pairs, cross-order dedup, deterministic sample") {
-    import org.apache.spark.sql.functions._
     val li = StructType(Seq(
       StructField("l_orderkey", LongType), StructField("l_partkey", LongType)))
     val rows = Seq(

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.functions._
-
 import graft.jobs.FinTrackJob
 import graft.lake.ControlTable
 

@@ -692,8 +692,8 @@ class PlanSpec extends SparkSpec {
     // per exploded ELEMENT (dim× the work — measured 18.9 s vs 0.9 s per
     // Lloyd iteration at k=128/dim=64 on the sf1 corpus, the round-15
     // s22 regression). Pin the fixed shape: in the physical plan, the
-    // NearestCentroidExpr lives in GenerateExec's CHILD subtree, and no
-    // operator ABOVE the Generate carries one.
+    // NearestCentroidExpr kernel call lives in GenerateExec's CHILD
+    // subtree, and no operator ABOVE the Generate carries one.
     val v = spark.range(50).selectExpr(
       "array(cast(id as float), cast(id+1 as float)) as v")
     val cs = Array(Array(1f, 0f), Array(0f, 1f), Array(0.5f, 0.5f))
@@ -703,8 +703,11 @@ class PlanSpec extends SparkSpec {
       case g: org.apache.spark.sql.execution.GenerateExec => g }
     assert(gens.size === 1, p.toString.take(800))
     def hasNearest(plan: org.apache.spark.sql.execution.SparkPlan): Boolean =
-      plan.expressions.exists(_.exists(
-        _.isInstanceOf[graft.plans.NearestCentroidExpr]))
+      plan.expressions.exists(_.exists {
+        case s: org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke =>
+          s.staticObject == graft.plans.NearestCentroidExpr.getClass
+        case _ => false
+      })
     assert(gens.head.child.collect {
       case n if hasNearest(n) => n }.nonEmpty,
       s"assignment must be computed below the Generate:\n${p.toString.take(1200)}")

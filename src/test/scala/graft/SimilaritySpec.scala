@@ -355,6 +355,26 @@ class SimilaritySpec extends SparkSpec {
     assert(kernel === exchange, "kernel and exchange shapes must agree exactly")
   }
 
+  test("knnClassify: a repeated unlabeled vec_id is classified once per row, by the kernel and the exchange shape alike") {
+    val lSchema = StructType(Seq(StructField("vec_id", LongType),
+      StructField("embedding", ArrayType(FloatType)), StructField("label", IntegerType)))
+    val uSchema = StructType(Seq(StructField("vec_id", LongType),
+      StructField("embedding", ArrayType(FloatType))))
+    val labeled = LocalTable.of(spark, lSchema, Seq(
+      Row(0L, Seq(1.0f, 0.0f), 0), Row(1L, Seq(0.9f, 0.1f), 0),
+      Row(2L, Seq(0.0f, 1.0f), 1), Row(3L, Seq(0.1f, 0.9f), 1)))
+    // id 10 twice, once near each label's seeds; id 12's null vector
+    // ranks the seeds by id alone in both shapes
+    val unlabeled = LocalTable.of(spark, uSchema, Seq(
+      Row(10L, Seq(1.0f, 0.0f)), Row(10L, Seq(0.0f, 1.0f)), Row(11L, Seq(1.0f, 0.05f)),
+      Row(12L, null)))
+    def key(r: Row) = (r.getLong(0), r.getInt(1), r.getLong(2))
+    val want = Seq((10L, 0, 2L), (10L, 1, 2L), (11L, 0, 2L), (12L, 0, 2L))
+    assert(Similarity.knnClassify(labeled, unlabeled, 2).collect().map(key).sorted.toSeq === want)
+    assert(Similarity.knnClassifyExchange(labeled, unlabeled, 2)
+      .collect().map(key).sorted.toSeq === want)
+  }
+
   test("marginMine: kernel ≡ exchange shape bit-exactly on the gate split; zero exchanges in the mining plan") {
     val e = Tables(spark, "/root/testdata/sf0.01", "embeddings")
     val src = e.filter(col("vec_id") % 2 === 0)
@@ -394,6 +414,44 @@ class SimilaritySpec extends SparkSpec {
         Similarity.marginMineExchange(s, t, k = 2, tau = 1.0).collect().map(key).toSet)
     same(src, tgt)
     same(tgt, src)
+  }
+
+  test("marginMine: the margin kernel runs once per source, above the round-robin spread") {
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val e = Tables(spark, sfDir, "embeddings")
+    val mined = Similarity.marginMine(e.filter(col("vec_id") % 2 === 0),
+      e.filter(col("vec_id") % 2 === 1), k = 4, tau = 1.0)
+    mined.collect()
+    // the executed adaptive plan, query stages unwrapped
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case s: QueryStageExec => Seq(s.plan)
+      case other => other.children
+    }).flatMap(nodes)
+    def kernels(p: SparkPlan) = p.expressions.flatMap(_.collect {
+      case s: StaticInvoke if s.functionName == "best" &&
+        s.staticObject == graft.plans.MarginBestExpr.getClass => s })
+    val plan = mined.queryExecution.executedPlan
+    val all = nodes(plan)
+    assert(all.map(kernels(_).size).sum === 1, s"one margin kernel in:\n$plan")
+    val spread = all.collect { case x: ShuffleExchangeExec
+      if x.outputPartitioning.isInstanceOf[RoundRobinPartitioning] => x }
+    assert(spread.size === 1, plan.toString)
+    val owner = all.find(kernels(_).nonEmpty).get
+    assert(nodes(owner).exists(_ eq spread.head),
+      s"the kernel must run above the spread, not below it:\n$plan")
+    // single evaluation comes from the plan shape, not from a flag that
+    // hides the kernel from the optimizer
+    assert(kernels(owner).forall(_.deterministic), plan.toString)
+    val flagged = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(f => f.toString.endsWith(".scala") &&
+        "isDeterministic\\s*=\\s*false".r.findFirstIn(Files.readString(f)).isDefined)
+      .map(_.toString).toSeq
+    assert(flagged.isEmpty, s"non-deterministic StaticInvoke in: ${flagged.mkString(", ")}")
   }
 
   test("s05: a second execution reclaims the first execution's temp index") {

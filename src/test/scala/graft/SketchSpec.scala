@@ -226,7 +226,7 @@ class SketchSpec extends SparkSpec {
 
   /** (value, weight) artifact of a sketch over `vs`. */
   private def qskOf(vs: Seq[Double], capacity: Int,
-      parts: Int = 4): Seq[(Double, Long)] =
+      parts: Int): Seq[(Double, Long)] =
     valuesDf(vs, parts)
       .agg(QuantileSketchOps.quantileSketch(col("v"), capacity).as("sk"))
       .select(explode(col("sk")))
@@ -235,7 +235,7 @@ class SketchSpec extends SparkSpec {
       }).toSeq
 
   private def qskQuantiles(vs: Seq[Double], capacity: Int, qs: Seq[Double],
-      parts: Int = 4): Seq[Double] = {
+      parts: Int): Seq[Double] = {
     val agg = valuesDf(vs, parts)
       .agg(QuantileSketchOps.quantileSketch(col("v"), capacity).as("sk"))
     agg.select(qs.map(q =>

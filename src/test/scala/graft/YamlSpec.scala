@@ -1,14 +1,24 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.Yaml
-import graft.sources.Yaml._
 
-/** S4 — the YAML-subset reader against the two config shapes the
-  * reference actually loads (budget map, clients registry) plus the
-  * syntax corners they rely on. */
+/** S4 — the config reader against the two config shapes the reference
+  * actually loads (budget map, clients registry) plus the syntax corners
+  * they rely on, as `yaml.safe_load` reads them. */
 class YamlSpec extends AnyFunSuite {
+
+  private def map(v: Any): Map[Any, Any] = v match {
+    case m: java.util.Map[_, _] => m.asScala.toMap
+    case other => fail(s"expected map, got $other")
+  }
+  private def items(v: Any): Seq[Any] = v match {
+    case xs: java.util.List[_] => xs.asScala.toSeq
+    case other => fail(s"expected list, got $other")
+  }
 
   test("flat budget map: ordered entries, null skip, numeric coercion") {
     val b = Yaml.budget(
@@ -23,22 +33,13 @@ class YamlSpec extends AnyFunSuite {
   }
 
   test("clients registry: nested lists of maps with inline arrays flatten") {
-    def items(v: YValue) = v match {
-      case YList(xs) => xs
-      case other => fail(s"expected list, got $other")
-    }
-    def str(v: YValue) = v match {
-      case YStr(s) => s
-      case other => fail(s"expected string, got $other")
-    }
     val rows = for {
-      client <- items(Yaml.parse(Yaml.readConfig("/clients_registry.yaml")).asMap("clients"))
-      cm = client.asMap
+      client <- items(map(Yaml.parse(Yaml.readConfig("/clients_registry.yaml")))("clients"))
+      cm = map(client)
       bank <- items(cm("banks"))
-      bm = bank.asMap
+      bm = map(bank)
       doc <- items(bm("doc_types"))
-    } yield (str(cm("slug")), str(cm("display_name")), str(bm("code")),
-      str(bm("name")), str(doc))
+    } yield (cm("slug"), cm("display_name"), bm("code"), bm("name"), doc)
     assert(rows.size === 5)
     assert(rows.head === (("cruz_raulino_familia", "Família Cruz Raulino", "bb",
       "Banco do Brasil", "extratos")))
@@ -47,7 +48,7 @@ class YamlSpec extends AnyFunSuite {
   }
 
   test("scalars: quotes, booleans, numbers, comments, inline lists") {
-    val m = Yaml.parse(
+    val m = map(Yaml.parse(
       """name: "quoted # not comment"
         |plain: hello world   # trailing comment
         |flag: true
@@ -55,14 +56,15 @@ class YamlSpec extends AnyFunSuite {
         |n: -3.5e2
         |empty:
         |xs: [1, "two", three]
-        |""".stripMargin).asMap
-    assert(m("name") === YStr("quoted # not comment"))
-    assert(m("plain") === YStr("hello world"))
-    assert(m("flag") === YBool(true))
-    assert(m("off") === YBool(false))
-    assert(m("n") === YNum(-350.0))
-    assert(m("empty") === YNull)
-    assert(m("xs") === YList(Seq(YNum(1), YStr("two"), YStr("three"))))
+        |""".stripMargin))
+    assert(m("name") === "quoted # not comment")
+    assert(m("plain") === "hello world")
+    assert(m("flag") === true)
+    // YAML 1.1, as yaml.safe_load reads it: the key `off` is a boolean
+    assert(m(false) === false)
+    assert(m("n") === -350.0)
+    assert(m("empty") === null)
+    assert(items(m("xs")) === Seq(1, "two", "three"))
   }
 
   test("q08 budget resource parses to the gate's six categories") {
@@ -74,6 +76,6 @@ class YamlSpec extends AnyFunSuite {
 
   test("unsupported constructs fail loudly") {
     intercept[IllegalArgumentException](Yaml.parse("a:\n\tb: 1"))
-    intercept[IllegalArgumentException](Yaml.parse("xs: [1, 2").asMap("xs"))
+    intercept[IllegalArgumentException](Yaml.parse("xs: [1, 2"))
   }
 }
