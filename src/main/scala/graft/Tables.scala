@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftSchemaBridge
 
 /** Loaders for the driver corpus (TESTDATA.md): a TPC-H-ish star schema plus
   * `events` (stream-shaped), `documents` and `embeddings` (LLM-pipeline
@@ -9,7 +10,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * All engine queries read through here so that file layout decisions
   * (predicate pushdown, `ReadSchema` pruning) are centralized: callers
   * `select`/`filter` immediately after `apply` and Catalyst pushes both into
-  * the parquet scan.
+  * the parquet scan. Each table reads with the schema its footer gives on
+  * the driver, so opening one starts no Spark job.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -27,7 +29,7 @@ object Tables {
       // which reads natively. Handle both: read nanos as raw longs and
       // re-expose micros, pass native timestamps through untouched.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$sfDir/$name.parquet")
+      val raw = read(spark, s"$sfDir/$name.parquet")
       raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>
           raw.withColumn("ts",
@@ -41,6 +43,11 @@ object Tables {
               .cast(org.apache.spark.sql.types.TimestampType))
         case _ => raw
       }
-    } else spark.read.parquet(s"$sfDir/$name.parquet")
+    } else read(spark, s"$sfDir/$name.parquet")
+  }
+
+  private def read(spark: SparkSession, path: String): DataFrame = {
+    val reader = spark.read
+    GraftSchemaBridge.parquetSchema(spark, path).fold(reader)(reader.schema).parquet(path)
   }
 }

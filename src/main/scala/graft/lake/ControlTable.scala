@@ -58,11 +58,13 @@ object ControlTable {
     control.unionByName(LocalTable.of(control.sparkSession, schema,
       Seq(Row(entity, inputTable, newWatermark, runAt))))
 
-  /** Current watermark for (entity, input) as an Option (driver-side
-    * scalar read — one tiny agg, the only collect in the lifecycle, same
-    * as the reference's `.first()` on the control table). */
-  def currentWatermark(control: DataFrame, entity: String,
-      input: String): Option[java.sql.Timestamp] =
-    watermarks(control, entity, Seq(input))
-      .collect().headOption.flatMap(r => Option(r.getTimestamp(1)))
+  /** Current watermark per input for one entity, as a driver-side map
+    * (one tiny agg and one collect for every input at once, the only
+    * collect in the lifecycle — the reference's `.first()` on the control
+    * table); an input never loaded is absent. */
+  def currentWatermarks(control: DataFrame, entity: String,
+      inputs: Seq[String]): Map[String, java.sql.Timestamp] =
+    watermarks(control, entity, inputs).collect()
+      .collect { case r if !r.isNullAt(1) => r.getString(0) -> r.getTimestamp(1) }
+      .toMap
 }

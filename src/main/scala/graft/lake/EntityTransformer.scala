@@ -64,15 +64,20 @@ object TrustedLoad {
 
     val spark = control.sparkSession
 
-    // 1. incremental read per input (I1): strictly-newer rows, then ONE
-    //    tiny aggregate per incremental input — max(ts) is the new
-    //    watermark and count(1) the emptiness bit the guard reads
+    // 1. incremental read per input (I1): every input's watermark in one
+    //    control-table read, strictly-newer rows, then ONE tiny aggregate
+    //    per incremental input — max(ts) is the new watermark and count(1)
+    //    the emptiness bit the guard reads
+    val incrementalInputs = transformer.inputs.filter(incrementalCol.contains)
+    val watermarks =
+      if (incrementalInputs.isEmpty) Map.empty[String, java.sql.Timestamp]
+      else ControlTable.currentWatermarks(control, transformer.entityName, incrementalInputs)
     val loaded: Seq[(String, DataFrame, Option[java.sql.Timestamp], Long)] =
       transformer.inputs.map { name =>
         val df = resolve(name)
         incrementalCol.get(name) match {
           case Some(tsCol) =>
-            val wm = ControlTable.currentWatermark(control, transformer.entityName, name)
+            val wm = watermarks.get(name)
             val (fresh, _) = ControlTable.incrementalLoad(df, tsCol, wm)
             val r = fresh.agg(max(col(tsCol)), count(lit(1))).head()
             // no fresh rows, or only null-ts ones: the watermark stands

@@ -1,5 +1,7 @@
 package graft.lake
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -146,14 +148,16 @@ object Lake {
   /** P9 — ingestion lineage/partition columns (etls_raw/main.py:300-315):
     * a fixed ingestion timestamp fans out to date/year/month/day partition
     * columns. `ts` is passed in (never `current_timestamp`) so reruns are
-    * deterministic and testable. */
+    * deterministic and testable. One `withColumns`, so one analysis; the
+    * columns land in this order, which raw appends depend on. */
   def withIngestionColumns(df: DataFrame, ts: java.sql.Timestamp): DataFrame = {
     val t = lit(ts)
-    df.withColumn("ingestao_timestamp", t)
-      .withColumn("ingestao_date", to_date(t))
-      .withColumn("ingestao_year", year(t))
-      .withColumn("ingestao_month", month(t))
-      .withColumn("ingestao_day", dayofmonth(t))
+    df.withColumns(ListMap(
+      "ingestao_timestamp" -> t,
+      "ingestao_date" -> to_date(t),
+      "ingestao_year" -> year(t),
+      "ingestao_month" -> month(t),
+      "ingestao_day" -> dayofmonth(t)))
   }
 
   /** Snapshot diff — the audit/CDC primitive the reference's Iceberg

@@ -3,8 +3,6 @@ package graft.lake
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Lineage
-
 /** The trusted layer's lake table: a plain partitioned parquet
   * directory carrying the reference's lake verbs — create/append
   * (etls_raw/main.py:318-345) and a newer-version-wins MERGE INTO
@@ -155,13 +153,13 @@ object ParquetTableFormat {
   }
 
   /** MERGE INTO on `keys` through [[Lake.mergeUpsert]] (a source row wins
-    * only when its `versionCol` is newer), then one rewrite. */
+    * only when its `versionCol` is newer), then one rewrite. The merge
+    * needs no cut: the rewrite finishes writing it to a temp directory,
+    * reading the live table to the end, before it moves the table aside. */
   def merge(spark: SparkSession, path: String, source: DataFrame,
       keys: Seq[String], versionCol: String, partitionCols: Seq[String]): Unit = {
     if (!exists(spark, path)) { createOrAppend(source, path, partitionCols); return }
     val target = read(spark, path).select(source.columns.map(col).toIndexedSeq: _*)
-    // materialize the merge before the rewrite replaces its own input
-    val merged = Lineage.cut(Lake.mergeUpsert(target, source, keys, versionCol))
-    rewrite(spark, path, merged, partitionCols)
+    rewrite(spark, path, Lake.mergeUpsert(target, source, keys, versionCol), partitionCols)
   }
 }

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftSchemaBridge
 import org.apache.spark.sql.functions._
 
 import graft.functions.{dates, money, textnorm}
@@ -76,34 +77,32 @@ object Sources {
   /** S3 — Google-Forms shared-expenses CSV → normalized RAW table
     * (forms_main.py:207-297): multiLine header-aware read, rename map
     * applied only to existing columns, BRL money parse (NULL-preserving),
-    * multi-format date normalization, blank→NULL, lineage + client slug. */
+    * multi-format date normalization, blank→NULL, lineage + client slug.
+    * The header resolves on the driver, so the read starts no job of its
+    * own; the names map from it in one `select`, the parse runs in a
+    * second. */
   def readFormsCsv(spark: SparkSession, path: String, clientSlug: String): DataFrame = {
-    val raw = spark.read
-      .option("header", "true")
-      .option("multiLine", "true")
-      .option("encoding", "UTF-8")
-      .csv(path)
+    val options = Map("header" -> "true", "multiLine" -> "true", "encoding" -> "UTF-8")
+    val reader = spark.read.options(options)
+    val raw = GraftSchemaBridge.csvHeader(spark, path, options).fold(reader)(reader.schema).csv(path)
     // CRLF exports leave a \r on the LAST header name (quoted multi-line
     // headers get normalized by the parser, the trailing unquoted one
-    // does not) — normalize names before the rename map
-    val cleanNames = raw.columns.foldLeft(raw) { (df, c) =>
-      if (c.contains("\r")) df.withColumnRenamed(c, c.replace("\r", "")) else df
-    }
-    val renamed = formsRenameMap.foldLeft(cleanNames) { case (df, (from, to)) =>
-      if (df.columns.contains(from)) df.withColumnRenamed(from, to) else df
-    }
-    // required columns backfilled with NULLs (forms_main.py required-col fill)
-    val required = formsRenameMap.map(_._2)
-    val complete0 = required.foldLeft(renamed) { (df, c) =>
-      if (df.columns.contains(c)) df else df.withColumn(c, lit(null).cast("string"))
-    }
-    // CRLF exports: Spark's multiLine parser keeps the \r on each row's
-    // last (unquoted) column — strip carriage returns everywhere, the
-    // normalization pandas applies transparently for the reference
-    val complete = required.foldLeft(complete0) { (df, c) =>
-      df.withColumn(c, regexp_replace(col(c), "\r", ""))
-    }
-    complete.select(
+    // does not) — match names with it stripped
+    val byName = raw.columns.map(c => c.replace("\r", "") -> c).toMap
+    // each normalized column comes from its source header, else from a
+    // column already carrying the name, else is NULL (forms_main.py
+    // required-col fill). CRLF exports: Spark's multiLine parser keeps
+    // the \r on each row's last (unquoted) column — strip carriage
+    // returns, the normalization pandas applies transparently for the
+    // reference. Stripped once here: the parse below reads each value
+    // several times, so CollapseProject keeps the two selects apart.
+    val stripped = raw.select(formsRenameMap.map { case (from, to) =>
+      byName.get(from).orElse(byName.get(to)) match {
+        case Some(c) => regexp_replace(col(s"`${c.replace("`", "``")}`"), "\r", "").as(to)
+        case None => lit(null).cast("string").as(to)
+      }
+    }: _*)
+    stripped.select(
       dates.toTimestampMulti(col("carimbo")).as("carimbo"),
       textnorm.blankToNull(col("lancado_por")).as("lancado_por"),
       dates.toDateMulti(col("data_pagamento")).as("data_pagamento"),

@@ -61,7 +61,7 @@ class JobsSpec extends SparkSpec {
 
     // first load: empty control → full load, record watermark
     val c0 = ControlTable.empty(spark)
-    assert(ControlTable.currentWatermark(c0, entity, "events").isEmpty)
+    assert(ControlTable.currentWatermarks(c0, entity, Seq("events")).get("events").isEmpty)
     val (full, wm1Df) = ControlTable.incrementalLoad(events, "ts", None)
     assert(full.count() === events.count())
     val wm1 = wm1Df.collect()(0).getTimestamp(0)
@@ -69,7 +69,7 @@ class JobsSpec extends SparkSpec {
       java.sql.Timestamp.valueOf("2026-08-12 09:00:00"))
 
     // second load: nothing newer than the recorded watermark
-    val wmRead = ControlTable.currentWatermark(c1, entity, "events")
+    val wmRead = ControlTable.currentWatermarks(c1, entity, Seq("events")).get("events")
     assert(wmRead === Some(wm1))
     val (incr, _) = ControlTable.incrementalLoad(events, "ts", wmRead)
     assert(incr.count() === 0)

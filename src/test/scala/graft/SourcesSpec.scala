@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.JobCounter
+import org.apache.spark.sql.execution.datasources.parquet.GraftSchemaBridge
 import org.apache.spark.sql.functions._
 
 import graft.sources.Sources
@@ -13,6 +15,18 @@ class SourcesSpec extends SparkSpec {
 
   private def tmpDir(): String =
     Files.createTempDirectory("graft-test-").toString
+
+  /** The two real Google-Forms exports: CRLF line endings, quoted
+    * multi-line header names, one shared header. */
+  private val formsDir = Paths.get(
+    "src/test/resources/landing_real/02_forms/cruz_raulino_familia").toAbsolutePath
+  private val realForms = Seq("20260103", "20260104")
+    .map(d => formsDir.resolve(s"forms_gastos_compartilhados_$d.csv").toString)
+  private val formsOptions = Map("header" -> "true", "multiLine" -> "true")
+
+  private def sha256(s: String): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
   test("landingFiles: path-derived columns + kind classification") {
     val root = tmpDir()
@@ -76,6 +90,43 @@ class SourcesSpec extends SparkSpec {
     assert(r0.getAs[String]("descricao").startsWith("Ovo, alface"))
     assert(r0.getAs[String]("client_slug") === "cruz_raulino")
     assert(got(1).getAs[Double]("valor") === 237.63)
+  }
+
+  test("forms CSV headers resolve on the driver to the schema Spark's header job infers") {
+    for (p <- realForms :+ formsDir.toString) {
+      val (got, jobs) = JobCounter.jobs(spark)(GraftSchemaBridge.csvHeader(spark, p, formsOptions))
+      assert(jobs === 0, p)
+      assert(got === Some(spark.read.options(formsOptions).csv(p).schema), p)
+    }
+  }
+
+  test("a directory of CSVs with different headers keeps Spark's inference") {
+    val dir = tmpDir()
+    Files.writeString(Paths.get(dir, "a.csv"), "x,y\n1,2\n")
+    Files.writeString(Paths.get(dir, "b.csv"), "x,z\n3,4\n")
+    assert(GraftSchemaBridge.csvHeader(spark, dir, formsOptions) === None)
+    Files.writeString(Paths.get(dir, "b.csv"), "x,y\n3,4\n")
+    assert(GraftSchemaBridge.csvHeader(spark, dir, formsOptions).map(_.fieldNames.toSeq) ===
+      Some(Seq("x", "y")))
+  }
+
+  test("readFormsCsv starts no job before an action and reads the real exports unchanged") {
+    // (row count, SHA-256 of the sorted rows cast to strings) as read
+    // before the forms schema resolved on the driver
+    val expected = Seq(
+      (151, "a5df22805a11efd1feb6ff99ad3a30d14633bb07004b8b68ae782f3881b21659"),
+      (163, "e4f33dc8dace8deec892d3b96eab741577bfa695c043bdec389af10643173099"))
+    for ((p, digest) <- realForms.zip(expected)) {
+      val (df, jobs) = JobCounter.jobs(spark)(
+        Sources.readFormsCsv(spark, p, "cruz_raulino_familia"))
+      val rows = df.drop("landing_object_key")
+        .select(df.columns.filter(_ != "landing_object_key").map(c => col(c).cast("string")).toIndexedSeq: _*)
+        .collect().map(_.toSeq.mkString("\u0001")).sorted
+      assert((rows.length, sha256(rows.mkString("\n"))) === digest, p)
+      assert(df.select("landing_object_key").distinct().collect()
+        .map(_.getString(0)).toSeq === Seq("file://" + p), p)
+      assert(jobs === 0, p)
+    }
   }
 
   test("writePartitionedParquet: y/m/d directory layout + partition pruning") {

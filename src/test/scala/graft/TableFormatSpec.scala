@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.JobCounter
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -89,6 +90,19 @@ class TableFormatSpec extends SparkSpec {
     assert(fmt.read(spark, path).orderBy("k").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq ===
       Seq((1L, "a2"), (2L, "b2"), (9L, "z")))
+  }
+
+  test("a MERGE runs a fixed number of jobs and cuts no lineage of its own") {
+    val path = Files.createTempDirectory("graft-merge-jobs-").toString + "/table"
+    fmt.createOrAppend(df((1L, "a", 1L), (2L, "b", 1L)), path, Nil)
+    val source = df((2L, "b2", 2L), (3L, "c", 2L))
+    val (_, jobs) = JobCounter.jobs(spark)(
+      fmt.merge(spark, path, source, Seq("k"), "ver", Nil))
+    // the target's schema inference and the rewrite's write, with the
+    // shuffle stages AQE runs as jobs of their own
+    assert(jobs === 4)
+    assert(fmt.read(spark, path).orderBy("k").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq === Seq((1L, "a"), (2L, "b2"), (3L, "c")))
   }
 
   test("external-table DDL + MSCK recovers partitions added behind the catalog") {

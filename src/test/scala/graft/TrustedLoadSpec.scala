@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import org.apache.spark.JobCounter
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -20,6 +21,10 @@ class TrustedLoadSpec extends SparkSpec {
     StructField("cat", StringType), StructField("grupo", StringType)))
 
   private def ts(s: String) = Timestamp.valueOf(s)
+
+  private def watermark(control: DataFrame) =
+    ControlTable.currentWatermarks(control, "trusted.lancamentos_enriched",
+      Seq("raw.lancamentos")).get("raw.lancamentos")
 
   private def txns(rows: (Long, String, Double, String)*): DataFrame =
     LocalTable.of(spark, txnSchema,
@@ -57,8 +62,7 @@ class TrustedLoadSpec extends SparkSpec {
     assert(t1.count() === 2)
     assert(t1.filter(col("id") === 1).select("grupo", "valor_abs").collect()(0)
       .toSeq === Seq("essencial", 50.0))
-    assert(ControlTable.currentWatermark(r1.control, enricher.entityName,
-      "raw.lancamentos") === Some(ts("2025-01-01 11:00:00")))
+    assert(watermark(r1.control) === Some(ts("2025-01-01 11:00:00")))
 
     // run 2: nothing newer than the watermark → P13 skip, control unchanged
     val r2 = TrustedLoad.run(enricher, resolve, r1.control, inc,
@@ -76,8 +80,7 @@ class TrustedLoadSpec extends SparkSpec {
     val t3 = spark.read.parquet(target)
     assert(t3.count() === 3)
     assert(t3.filter(col("id") === 2).select("valor").collect()(0).getDouble(0) === -35.0)
-    assert(ControlTable.currentWatermark(r3.control, enricher.entityName,
-      "raw.lancamentos") === Some(ts("2025-01-04 10:00:00")))
+    assert(watermark(r3.control) === Some(ts("2025-01-04 10:00:00")))
   }
 
   test("in-batch duplicates dedup by version before the merge") {
@@ -122,7 +125,32 @@ class TrustedLoadSpec extends SparkSpec {
       "dt_ingestao", target, ts("2025-03-02 00:00:00"))
     assert(!r.skipped && r.rows === 2)
     assert(spark.read.parquet(target).count() === 2)
-    assert(ControlTable.currentWatermark(r.control, enricher.entityName,
-      "raw.lancamentos") === None)
+    assert(watermark(r.control) === None)
+  }
+
+  test("one watermark read serves every incremental input") {
+    val union = new EntityTransformer {
+      override val entityName = "trusted.union"
+      override val inputs = Seq("a", "b", "c")
+      override val primaryKey = Seq("id")
+      override def transform(dfs: Map[String, DataFrame]): DataFrame =
+        dfs("a").unionByName(dfs("b")).unionByName(dfs("c"))
+    }
+    val target = Files.createTempDirectory("graft-trusted-jobs-").toString + "/t"
+    val inc = union.inputs.map(_ -> "dt_ingestao").toMap
+    def batch(day: Int) = union.inputs.zipWithIndex.map { case (n, i) =>
+      n -> txns((day * 10L + i, "mercado", -1.0, f"2025-05-$day%02d 0$i:00:00"))
+    }.toMap
+    val r1 = TrustedLoad.run(union, batch(1), ControlTable.empty(spark), inc,
+      "dt_ingestao", target, ts("2025-05-01 12:00:00"))
+    val (r2, jobs) = JobCounter.jobs(spark)(TrustedLoad.run(union, batch(2), r1.control,
+      inc, "dt_ingestao", target, ts("2025-05-02 12:00:00")))
+    assert(!r2.skipped && r2.rows === 3)
+    // one watermark collect, one fresh max/count aggregate per input,
+    // the dedup count and the MERGE
+    assert(jobs === 15)
+    assert(ControlTable.currentWatermarks(r2.control, union.entityName, union.inputs) ===
+      Map("a" -> ts("2025-05-02 00:00:00"), "b" -> ts("2025-05-02 01:00:00"),
+        "c" -> ts("2025-05-02 02:00:00")))
   }
 }
